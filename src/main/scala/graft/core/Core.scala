@@ -140,7 +140,10 @@ class ConnectionRegistry(provider: SecretProvider, secretName: String) extends S
 /** Retry with exponential backoff — the reference's tenacity policy
   * (`hooks/clevertap.py:21-25`): stop after N attempts, retry on
   * connection-level errors only. Serializable so sinks can carry it into
-  * executors. */
+  * executors. A request timeout (`HttpTimeoutException` from
+  * JdkHttpPoster's per-request bound) is deliberately NOT retried: the
+  * POST was sent and may have landed, and the destinations do not dedupe,
+  * so the batch is reported failed instead of possibly sent twice. */
 case class RetryPolicy(maxAttempts: Int = 3, baseDelayMs: Long = 200,
                        maxDelayMs: Long = 10000) extends Serializable {
   def shouldRetry(t: Throwable): Boolean = t match {

@@ -2,7 +2,7 @@ package graft.jobs
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -81,7 +81,9 @@ object UserProfileJob {
 
   /** Driver-sized job outcome: counters + the path holding the per-batch
     * audit detail. Per-batch rows scale with the data (~10⁸ at 100 TB) and
-    * deliberately never reach the driver — query `resultsPath` for them. */
+    * deliberately never reach the driver — query `resultsPath` for them.
+    * `newBookmark` is the bookmark the job left: advanced only when every
+    * batch was ok, else the one it started from. */
   case class Result(validRows: Long, invalidRows: Long, batches: Long,
                     okBatches: Long, firstError: String, resultsPath: String,
                     newBookmark: Option[Timestamp])
@@ -89,16 +91,22 @@ object UserProfileJob {
   /** Steps 1–5, shared by every destination: bookmark lookup, pinned
     * incremental read, latest-per-key dedup, mapping-driven attribute
     * projection, sanity transforms + rename. */
-  private[jobs] case class Prepared(renamed: DataFrame, keyOut: String,
-                                    changes: DataFrame, bookmark: Option[Timestamp])
+  private[jobs] case class Prepared(renamed: DataFrame, keyOut: String)
 
-  /** Runs `egress` on the prepared frame, then upserts the bookmark from
-    * the SAME pinned snapshot and releases it. A raw parquet directory is
-    * not snapshot-isolated: without the persist, the bookmark read would
-    * re-scan and count rows appended AFTER egress — which the next
-    * incremental run would then silently skip. */
+  /** Runs `egress` on the prepared frame, then upserts the bookmark to the
+    * max `tsCol` observed on the changelog rows that egress action read —
+    * only when `delivered(out)`: a failed batch keeps the old bookmark, so
+    * the next run re-sends instead of skipping the undelivered rows.
+    *
+    * `egress` must execute the prepared frame in exactly ONE action: the
+    * bookmark is an `Observation` on that action, not a second scan. That
+    * is also what pins it to what was sent. The changelog relation's file
+    * listing is fixed when it is resolved, so a file appended during
+    * egress is in neither the egressed rows nor the observed max (the
+    * next run picks it up); `max` is idempotent, so re-run tasks cannot
+    * move it. An empty delta observes null and keeps the old bookmark. */
   private[jobs] def withPrepared[T](spark: SparkSession, conf: Conf)(
-      egress: Prepared => T): (T, Option[Timestamp]) = {
+      egress: Prepared => T)(delivered: T => Boolean): (T, Option[Timestamp]) = {
     // 0. egress-safety guard: the destination APIs don't dedupe, so a
     //    speculating cluster would double-POST every batch (see
     //    HttpSink.requireNoSpeculation) — refuse to run
@@ -123,44 +131,42 @@ object UserProfileJob {
           spark, conf.changelogPath, conf.tsCol,
           requiredCols = Seq("_change_type", conf.tsCol))
       else new ChangelogTableSource(spark, conf.changelogPath, conf.tsCol)
+    val processed = Observation()
     val changes = feed.since(bookmark)
       .filter(col("_change_type").isin("insert", "update_postimage"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // 3. latest change per key (strategy per Conf.dedupForm)
-      val latest = conf.dedupForm match {
-        case "window" => Dedup.latestPerKey(changes, Seq(conf.keyCol),
-          Seq(col(conf.tsCol).desc, col(conf.tiebreakCol).desc))
-        case "agg" => Dedup.latestPerKeyAgg(changes, Seq(conf.keyCol),
-          Seq(conf.tsCol, conf.tiebreakCol))
-        case other => throw new IllegalArgumentException(
-          s"dedupForm must be 'window' or 'agg', got '$other'")
-      }
+      .observe(processed, max(col(conf.tsCol)).as("max_ts"))
+    // 3. latest change per key (strategy per Conf.dedupForm)
+    val latest = conf.dedupForm match {
+      case "window" => Dedup.latestPerKey(changes, Seq(conf.keyCol),
+        Seq(col(conf.tsCol).desc, col(conf.tiebreakCol).desc))
+      case "agg" => Dedup.latestPerKeyAgg(changes, Seq(conf.keyCol),
+        Seq(conf.tsCol, conf.tiebreakCol))
+      case other => throw new IllegalArgumentException(
+        s"dedupForm must be 'window' or 'agg', got '$other'")
+    }
 
-      // 4. attribute selection from the mapping table: collect NAMES only
-      //    (the reference collects the same metadata, clevertap.py:56-58)
-      val attrs = spark.read.parquet(conf.mappingPath)
-        .filter(col(conf.platform) === true)
-        .select("property_name").collect().map(_.getString(0)).toSeq
-        .filter(latest.columns.contains)
+    // 4. attribute selection from the mapping table: collect NAMES only
+    //    (the reference collects the same metadata, clevertap.py:56-58)
+    val attrs = spark.read.parquet(conf.mappingPath)
+      .filter(col(conf.platform) === true)
+      .select("property_name").collect().map(_.getString(0)).toSeq
+      .filter(latest.columns.contains)
 
-      // 5. sanity transforms (T4 compile) + projection + rename
-      val typed = Sanity.compileTypeMap(
-        Sanity.extractAttributes(latest, Seq(conf.keyCol) ++ attrs), conf.typeMap)
-      val renamed = Sanity.swapKeys(typed, conf.swapKeyMap)
-      val keyOut = conf.swapKeyMap.getOrElse(conf.keyCol, conf.keyCol)
+    // 5. sanity transforms (T4 compile) + projection + rename
+    val typed = Sanity.compileTypeMap(
+      Sanity.extractAttributes(latest, Seq(conf.keyCol) ++ attrs), conf.typeMap)
+    val renamed = Sanity.swapKeys(typed, conf.swapKeyMap)
+    val keyOut = conf.swapKeyMap.getOrElse(conf.keyCol, conf.keyCol)
 
-      val out = egress(Prepared(renamed, keyOut, changes, bookmark))
+    val out = egress(Prepared(renamed, keyOut))
 
-      // 8. bookmark upsert: max commit timestamp actually processed — read
-      //    from the pinned snapshot, so it covers exactly the egressed rows
-      val maxTs = changes.agg(max(col(conf.tsCol))).collect().head
-      val newBookmark =
-        if (maxTs.isNullAt(0)) bookmark else Some(maxTs.getTimestamp(0))
-      newBookmark.foreach(ts =>
-        Bookmarks.upsert(spark, conf.bookmarkPath, conf.jobName, ts))
-      (out, newBookmark)
-    } finally changes.unpersist(blocking = false)
+    // 8. bookmark upsert, only after every batch landed: the max commit
+    //    timestamp the egress action read (null when the delta was empty)
+    val advanced =
+      if (delivered(out)) Option(processed.get("max_ts").asInstanceOf[Timestamp])
+      else None
+    advanced.foreach(ts => Bookmarks.upsert(spark, conf.bookmarkPath, conf.jobName, ts))
+    (out, advanced.orElse(bookmark))
   }
 
   /** CleverTap-shaped egress (the reference's one wired production job):
@@ -175,7 +181,7 @@ object UserProfileJob {
     val ((stats, nInvalid), newBookmark) = withPrepared(spark, conf) { p =>
       // 6. envelope + invalid split (R21) — counted via observe, not count()
       val attrCols = p.renamed.columns.filter(_ != p.keyOut).toSeq
-      val obs = org.apache.spark.sql.Observation()
+      val obs = Observation()
       val payloads = HttpSink.observeEgress(p.renamed.select(
         Sanity.identity(Seq(col(p.keyOut))).as("identity"),
         Sanity.profileEnvelope(Sanity.identity(Seq(col(p.keyOut))),
@@ -186,7 +192,7 @@ object UserProfileJob {
         HttpSink.sendBatches(valid, "payload", conf.batchSize, send),
         conf.resultsPath)
       (stats, obs.get("records_invalid").asInstanceOf[Long])
-    }
+    }(_._1.delivered)
     Result(stats.records, nInvalid, stats.batches, stats.okBatches,
       stats.firstError, conf.resultsPath, newBookmark)
   }
@@ -228,7 +234,10 @@ object UserProfileMain {
       dedupForm = m.getOrElse("dedup_form", "window"))
   }
 
-  def main(args: Array[String]): Unit = {
+  /** Runs the job for a `--conf-file` command line and returns the
+    * process exit code: 0 when every batch was delivered, 1 when any
+    * failed (the bookmark then stays put, so the next run re-sends). */
+  def run(args: Array[String]): Int = {
     val confPath = args.sliding(2).collectFirst {
       case Array("--conf-file", p) => p
     }.getOrElse(sys.error("usage: --conf-file <path>"))
@@ -246,6 +255,12 @@ object UserProfileMain {
     println(s"""{"valid":${res.validRows},"invalid":${res.invalidRows},""" +
       s""""batches":${res.batches},"ok":${res.okBatches}}""")
     if (ownsSession) spark.stop()
+    if (res.okBatches < res.batches) 1 else 0
+  }
+
+  def main(args: Array[String]): Unit = {
+    val code = run(args)
+    if (code != 0) sys.exit(code)
   }
 }
 
@@ -268,7 +283,7 @@ object NetcoreUserProfileJob {
         // RFC-4180 CSV line per record: fields with commas, quotes, or
         // newlines are quoted/escaped exactly like the reference's pandas
         // to_csv (hooks/netcore.py:83-90) — free-text attributes survive.
-        val obs = org.apache.spark.sql.Observation()
+        val obs = Observation()
         val csv = HttpSink.observeEgress(p.renamed.select(
           Sanity.identity(Seq(col(p.keyOut))).as("identity"),
           Sanity.csvLine(cols.map(c => col(c).cast("string"))).as("csv")),
@@ -280,7 +295,7 @@ object NetcoreUserProfileJob {
             client, client.maxChunkBytes),
           conf.resultsPath)
         (stats, obs.get("records_invalid").asInstanceOf[Long])
-      }
+      }(_._1.delivered)
     Result(stats.files, stats.okFiles, stats.records, stats.bytes,
       nInvalid, conf.resultsPath, newBookmark)
   }
@@ -298,7 +313,7 @@ object GamoogaUserProfileJob {
       UserProfileJob.withPrepared(spark, conf) { p =>
         val attrCols = p.renamed.columns.filter(_ != p.keyOut).toSeq
         // per-record props object {key: id, attr: value, ...}
-        val obs = org.apache.spark.sql.Observation()
+        val obs = Observation()
         val props = HttpSink.observeEgress(p.renamed.select(
           Sanity.identity(Seq(col(p.keyOut))).as("identity"),
           to_json(struct(col(p.keyOut) +: attrCols.map(col): _*)).as("payload")),
@@ -309,7 +324,7 @@ object GamoogaUserProfileJob {
             batch => client.uploadProfiles(batch.mkString("[", ",", "]"), propTypesJson)),
           conf.resultsPath)
         (stats, obs.get("records_invalid").asInstanceOf[Long])
-      }
+      }(_._1.delivered)
     UserProfileJob.Result(stats.records, nInvalid, stats.batches,
       stats.okBatches, stats.firstError, conf.resultsPath, newBookmark)
   }

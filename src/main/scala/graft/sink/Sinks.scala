@@ -7,7 +7,7 @@ import java.time.Duration
 import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.RetryPolicy
@@ -67,12 +67,18 @@ trait HttpPoster extends Serializable {
   def post(url: String, body: String, headers: Map[String, String]): (Int, String)
 }
 
-/** Real poster: lazily builds one JDK HttpClient per JVM/executor. */
-class JdkHttpPoster(connectTimeoutMs: Long = 10000) extends HttpPoster {
+/** Real poster: lazily builds one JDK HttpClient per JVM/executor.
+  * `requestTimeoutMs` bounds each request from send to response headers:
+  * a destination that accepts the connection and never answers fails the
+  * call with `HttpTimeoutException` (recorded as an ok=false batch by the
+  * sinks) instead of pinning the egress task forever. */
+class JdkHttpPoster(connectTimeoutMs: Long = 10000,
+                    requestTimeoutMs: Long = 60000) extends HttpPoster {
   @transient private lazy val client: HttpClient = HttpClient.newBuilder()
     .connectTimeout(Duration.ofMillis(connectTimeoutMs)).build()
   def post(url: String, body: String, headers: Map[String, String]): (Int, String) = {
     val b = HttpRequest.newBuilder(URI.create(url))
+      .timeout(Duration.ofMillis(requestTimeoutMs))
       .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
     headers.foreach { case (k, v) => b.header(k, v) }
     val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
@@ -278,29 +284,35 @@ object HttpSink {
 
   /** Materialize egress results EXACTLY ONCE by writing the
     * `Dataset[SinkResult]` to `resultsPath` (parquet, overwrite — the one
-    * side-effecting action), then aggregate the WRITTEN files into a
-    * driver-sized summary. One result row per ~1000-record batch means
-    * ~10⁸ rows at 100 TB — collecting them to the driver (the previous
-    * shape) is exactly the bottleneck this avoids; the audit detail stays
-    * on storage, queryable, and only five numbers reach the driver. */
+    * side-effecting action); the driver-sized summary is observed on that
+    * same write, so the results are never read back. One result row per
+    * ~1000-record batch means ~10⁸ rows at 100 TB: the audit detail stays
+    * on storage, queryable, and only four numbers reach the driver. */
   def writeResults(results: Dataset[SinkResult], resultsPath: String): EgressStats = {
-    results.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(resultsPath)
-    val row = results.sparkSession.read.parquet(resultsPath).agg(
+    val obs = Observation()
+    results.observe(obs,
       count(lit(1)).as("batches"),
       count(when(col("ok"), 1)).as("ok_batches"),
       coalesce(sum(col("records")), lit(0L)).as("records"),
-      coalesce(first(when(!col("ok"), col("error")), ignoreNulls = true), lit(""))
-        .as("first_error")
-    ).collect().head
-    EgressStats(row.getLong(0), row.getLong(1), row.getLong(2), row.getString(3))
+      coalesce(min(when(!col("ok"), col("error"))), lit("")).as("first_error"))
+      .write.mode(SaveMode.Overwrite).parquet(resultsPath)
+    val m = obs.get
+    EgressStats(m("batches").asInstanceOf[Long], m("ok_batches").asInstanceOf[Long],
+      m("records").asInstanceOf[Long], m("first_error").asInstanceOf[String])
   }
 }
 
-/** Driver-sized egress summary, aggregated distributively from the
-  * written results dataset (see HttpSink.writeResults). `firstError` is a
-  * sample for logs; the full per-batch detail lives at the results path. */
+/** Driver-sized egress summary, observed on the results write (see
+  * HttpSink.writeResults) from the tasks that committed it. `firstError`
+  * is a sample for logs: the lexicographically smallest failed-batch
+  * error (`""` when every batch is ok), so reruns over the same failures
+  * report the same sample whatever the task order; the full per-batch
+  * detail lives at the results path. */
 case class EgressStats(batches: Long, okBatches: Long, records: Long,
-                       firstError: String)
+                       firstError: String) {
+  /** Every batch was accepted by the destination. */
+  def delivered: Boolean = okBatches == batches
+}
 
 /** Netcore egress (S5): byte-bounded CSV chunks staged to a filesystem
   * prefix (file:// in tests, s3a:// in prod — same API), then the bulk
@@ -313,19 +325,25 @@ object NetcoreSink {
 
   /** Driver-sized staging summary (see HttpSink.writeResults — same
     * rationale: staged-file rows scale with the data; only the totals
-    * belong on the driver). */
-  case class StageStats(files: Long, okFiles: Long, records: Long, bytes: Long)
+    * belong on the driver, observed on the results write). */
+  case class StageStats(files: Long, okFiles: Long, records: Long, bytes: Long) {
+    /** Every staged file was acknowledged by the bulk-upload API. */
+    def delivered: Boolean = okFiles == files
+  }
 
   /** Write the staged-file results to `resultsPath` (the single
-    * materializing action) and aggregate the written files into totals. */
+    * materializing action), observing the totals on that write. */
   def writeResults(staged: Dataset[StagedFile], resultsPath: String): StageStats = {
-    staged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(resultsPath)
-    val row = staged.sparkSession.read.parquet(resultsPath).agg(
-      count(lit(1)), count(when(col("ok"), 1)),
-      coalesce(sum(col("records")), lit(0L)),
-      coalesce(sum(col("bytes")), lit(0L))
-    ).collect().head
-    StageStats(row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3))
+    val obs = Observation()
+    staged.observe(obs,
+      count(lit(1)).as("files"),
+      count(when(col("ok"), 1)).as("ok_files"),
+      coalesce(sum(col("records")), lit(0L)).as("records"),
+      coalesce(sum(col("bytes")), lit(0L)).as("bytes"))
+      .write.mode(SaveMode.Overwrite).parquet(resultsPath)
+    val m = obs.get
+    StageStats(m("files").asInstanceOf[Long], m("ok_files").asInstanceOf[Long],
+      m("records").asInstanceOf[Long], m("bytes").asInstanceOf[Long])
   }
 
   /** Delivery semantics: AT-LEAST-ONCE — a retried/speculated task

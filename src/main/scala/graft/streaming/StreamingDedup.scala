@@ -520,8 +520,8 @@ object StreamingDedup {
 
   /** Driver-light streaming egress (the at-scale form, mirroring the
     * batch jobs): per-epoch results are WRITTEN to
-    * `resultsPath/epoch=<id>` and summarized distributively — only the
-    * EgressStats totals reach the driver via `onEpoch`. Epoch-keyed
+    * `resultsPath/epoch=<id>` and summarized by observation on that one
+    * write — only the EgressStats totals reach the driver via `onEpoch`. Epoch-keyed
     * paths make replays overwrite their own epoch (idempotent results,
     * matching the epoch-keyed send idempotency). */
   def egressStreamToPath(payloads: DataFrame, payloadCol: String, batchSize: Int,

@@ -8,7 +8,7 @@ import java.util.concurrent.CopyOnWriteArrayList
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
-import graft.jobs.{SampleJob, UserProfileJob}
+import graft.jobs.{SampleJob, UserProfileJob, UserProfileMain}
 import graft.source.{Bookmarks, ChangelogTableSource}
 
 /** JVM-wide send counter for the single-action spec (see comment at the
@@ -234,9 +234,10 @@ class JobSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
-  test("job egress is single-action: no count() pass; one send per batch") {
+  /** The single-action fixture: 2500 valid rows + 1 invalid → 3 batches
+    * at batchSize 1000. Returns the job conf over it. */
+  private def oneActionFixture(jobName: String): UserProfileJob.Conf = {
     val root = Files.createTempDirectory("graft-1act").toString
-    // 2500 valid rows + 1 invalid → 3 batches at batchSize 1000
     val rows = (1 to 2500).map(i =>
       (i.toString, s"98765432${"%02d".format(i % 100)}", "insert",
         ts("2024-05-01 10:00:00"), i.toLong)) :+
@@ -245,7 +246,15 @@ class JobSpec extends SparkSpec {
       .write.parquet(s"$root/changelog")
     Seq(("mobile", true)).toDF("property_name", "clevertap")
       .write.parquet(s"$root/mapping")
+    UserProfileJob.Conf(
+      jobName = jobName, changelogPath = s"$root/changelog",
+      bookmarkPath = s"$root/bookmarks", keyCol = "customer_id",
+      tsCol = "_commit_timestamp", tiebreakCol = "_commit_version",
+      platform = "clevertap", mappingPath = s"$root/mapping",
+      typeMap = Map.empty, swapKeyMap = Map.empty)
+  }
 
+  test("job egress is single-action: no count() pass; one send per batch") {
     val funcNames = new CopyOnWriteArrayList[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -259,12 +268,7 @@ class JobSpec extends SparkSpec {
     // a captured AtomicInteger would increment a per-task COPY
     JobSpecSendCounter.n.set(0)
     try {
-      val conf = UserProfileJob.Conf(
-        jobName = "one_action", changelogPath = s"$root/changelog",
-        bookmarkPath = s"$root/bookmarks", keyCol = "customer_id",
-        tsCol = "_commit_timestamp", tiebreakCol = "_commit_version",
-        platform = "clevertap", mappingPath = s"$root/mapping",
-        typeMap = Map.empty, swapKeyMap = Map.empty)
+      val conf = oneActionFixture("one_action")
       val res = UserProfileJob.run(spark, conf,
         b => { JobSpecSendCounter.n.incrementAndGet(); (200, "ok") })
       // drain the async listener bus (stable size for 400ms), THEN
@@ -291,6 +295,185 @@ class JobSpec extends SparkSpec {
       assert(!jobEvents.contains("count"),
         s"egress ran a count() action: ${jobEvents.mkString(",")}")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Runs `body` and returns its value with the number of Spark jobs it
+    * launched and the executed plans of its queries. A marker job drains
+    * the listener bus: both listeners sit on the shared queue, so once the
+    * marker's start is delivered every earlier event has been too. */
+  private def recordRun[T](body: => T)
+      : (T, Int, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = s"drain-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val plans = new CopyOnWriteArrayList[org.apache.spark.sql.execution.SparkPlan]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).contains(marker))
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      val out = body
+      spark.sparkContext.setJobGroup(marker, "listener drain")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get, plans.toArray.map(_.asInstanceOf[org.apache.spark.sql.execution.SparkPlan]).toSeq)
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+  }
+
+  test("UserProfileJob run is one egress action: ≤6 jobs, no cache, no results read-back") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val conf = oneActionFixture("one_action_jobs")
+    val (res, jobs, plans) =
+      recordRun(UserProfileJob.run(spark, conf, _ => (200, "ok")))
+    assert(res.validRows == 2500 && res.okBatches == res.batches && res.batches >= 3)
+    assert(res.newBookmark.contains(ts("2024-05-01 11:00:00")))
+    // bookmark max and sink totals ride the egress write as observations;
+    // caching the changelog and reading the results back took 12 jobs
+    assert(jobs <= 6, s"$jobs Spark jobs for one run")
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val cached = plans.flatMap(p => helper.collectWithSubqueries(p) {
+      case c: InMemoryTableScanExec => c })
+    assert(cached.isEmpty, s"cached relation in an executed plan: $cached")
+    val scanned = plans.flatMap(p => helper.collectWithSubqueries(p) {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString) }).flatten
+    assert(scanned.exists(_.contains("changelog")), scanned)
+    assert(!scanned.exists(_.contains("_sink_results")), s"results read back: $scanned")
+  }
+
+  /** A JDK HTTP stub answering each request with `status()`; `bodies`
+    * collects request bodies. */
+  private def withStub(status: () => Int)(f: (String, CopyOnWriteArrayList[String]) => Unit): Unit = {
+    val bodies = new CopyOnWriteArrayList[String]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", new HttpHandler {
+      def handle(ex: HttpExchange): Unit = {
+        bodies.add(ex.getRequestURI.toString + "\n" +
+          new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
+        ex.sendResponseHeaders(status(), 2); ex.getResponseBody.write("ok".getBytes); ex.close()
+      }
+    })
+    server.start()
+    try f(s"http://127.0.0.1:${server.getAddress.getPort}", bodies)
+    finally server.stop(0)
+  }
+
+  test("failed batches keep the bookmark and exit nonzero; after recovery a rerun delivers every row") {
+    val root = Files.createTempDirectory("graft-guard").toString
+    Seq(("1", "9876543210", "insert", ts("2024-09-01 10:00:00"), 1L),
+        ("2", "9876543211", "insert", ts("2024-09-01 11:00:00"), 2L),
+        ("3", "9876543212", "update_postimage", ts("2024-09-01 12:00:00"), 3L))
+      .toDF("customer_id", "mobile", "_change_type", "_commit_timestamp", "_commit_version")
+      .write.parquet(s"$root/changelog")
+    Seq(("mobile", true, true)).toDF("property_name", "clevertap", "netcore")
+      .write.parquet(s"$root/mapping")
+    val seeded = ts("2024-08-31 00:00:00")
+    Bookmarks.upsert(spark, s"$root/bookmarks", "guard", seeded)
+    Bookmarks.upsert(spark, s"$root/bookmarks", "guard_nc", seeded)
+    val healthy = new java.util.concurrent.atomic.AtomicBoolean(false)
+    withStub(() => if (healthy.get) 200 else 500) { (url, bodies) =>
+      val confFile = Files.createTempFile("graft-guardconf", ".json")
+      Files.writeString(confFile, s"""{
+        "job_name": "guard", "changelog_path": "$root/changelog",
+        "bookmark_path": "$root/bookmarks", "key_col": "customer_id",
+        "ts_col": "_commit_timestamp", "tiebreak_col": "_commit_version",
+        "platform": "clevertap", "mapping_path": "$root/mapping",
+        "base_url": "$url", "account_id": "a", "passcode": "p"}""")
+      def main(): Int = Console.withOut(new java.io.ByteArrayOutputStream()) {
+        graft.jobs.UserProfileMain.run(Array("--conf-file", confFile.toString))
+      }
+      // destination answers 500: every batch fails, the bookmark stays
+      assert(main() == 1)
+      assert(Bookmarks.lookup(spark, s"$root/bookmarks", "guard").contains(seeded))
+      assert(!bodies.isEmpty)
+      // the Netcore twin guards on its staged files the same way
+      val ncConf = UserProfileMain.parseConf(Map(
+        "job_name" -> "guard_nc", "changelog_path" -> s"$root/changelog",
+        "bookmark_path" -> s"$root/bookmarks", "key_col" -> "customer_id",
+        "ts_col" -> "_commit_timestamp", "tiebreak_col" -> "_commit_version",
+        "platform" -> "netcore", "mapping_path" -> s"$root/mapping"))
+      val nc = graft.jobs.NetcoreUserProfileJob.run(spark, ncConf,
+        new graft.sink.NetcoreClient(url, "key", "me@x.com"), s"file://$root/staging")
+      assert(nc.files > 0 && nc.okFiles == 0 && nc.newBookmark.contains(seeded))
+      assert(Bookmarks.lookup(spark, s"$root/bookmarks", "guard_nc").contains(seeded))
+
+      // recovered: the rerun re-sends every valid row and advances
+      healthy.set(true)
+      bodies.clear()
+      assert(main() == 0)
+      val sent = bodies.toArray.map(_.toString).mkString
+      Seq("1", "2", "3").foreach(id => assert(sent.contains(s""""identity":"$id""""), sent))
+      assert(Bookmarks.lookup(spark, s"$root/bookmarks", "guard")
+        .contains(ts("2024-09-01 12:00:00")))
+    }
+  }
+
+  test("a changelog file appended during egress is outside the bookmark; the next run delivers exactly it") {
+    val root = Files.createTempDirectory("graft-append").toString
+    val cols = Seq("customer_id", "mobile", "_change_type", "_commit_timestamp", "_commit_version")
+    (1 to 50).map(i => (i.toString, s"98765432${"%02d".format(i)}", "insert",
+        ts("2024-10-01 10:00:00"), i.toLong))
+      .toDF(cols: _*).write.parquet(s"$root/changelog")
+    Seq(("late", "9876543299", "insert", ts("2024-10-01 12:00:00"), 99L))
+      .toDF(cols: _*).coalesce(1).write.parquet(s"$root/late")
+    Seq(("mobile", true)).toDF("property_name", "clevertap").write.parquet(s"$root/mapping")
+    val lateFile = new java.io.File(s"$root/late").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.getPath
+    val appended = s"$root/changelog/part-appended.parquet"
+    val conf = UserProfileJob.Conf(
+      jobName = "append", changelogPath = s"$root/changelog",
+      bookmarkPath = s"$root/bookmarks", keyCol = "customer_id",
+      tsCol = "_commit_timestamp", tiebreakCol = "_commit_version",
+      platform = "clevertap", mappingPath = s"$root/mapping",
+      typeMap = Map.empty, swapKeyMap = Map.empty, batchSize = 10)
+    // the first POST lands the late file in the changelog mid-egress
+    val send: Seq[String] => (Int, String) = b => {
+      try Files.copy(java.nio.file.Paths.get(lateFile), java.nio.file.Paths.get(appended))
+      catch { case _: java.nio.file.FileAlreadyExistsException => }
+      b.foreach(JobSpecSendCounter.bodies.add)
+      (200, "ok")
+    }
+    JobSpecSendCounter.bodies.clear()
+    val first = UserProfileJob.run(spark, conf, send)
+    assert(new java.io.File(appended).exists())
+    assert(first.validRows == 50)
+    assert(first.newBookmark.contains(ts("2024-10-01 10:00:00")))
+    assert(!JobSpecSendCounter.bodies.toArray.exists(_.toString.contains("\"late\"")))
+    JobSpecSendCounter.bodies.clear()
+    val second = UserProfileJob.run(spark, conf, send)
+    assert(second.validRows == 1)
+    val resent = JobSpecSendCounter.bodies.toArray.map(_.toString).toSeq
+    assert(resent.size == 1 && resent.head.contains(""""identity":"late""""), resent)
+    assert(second.newBookmark.contains(ts("2024-10-01 12:00:00")))
+  }
+
+  test("empty delta: nothing past the bookmark observes no max, keeps the bookmark, does not hang") {
+    val conf = oneActionFixture("empty_delta")
+    val at = ts("2024-05-01 11:00:00") // the fixture's newest change
+    Bookmarks.upsert(spark, conf.bookmarkPath, conf.jobName, at)
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val res = scala.concurrent.Await.result(
+      scala.concurrent.Future(UserProfileJob.run(spark, conf, _ => (200, "ok"))),
+      scala.concurrent.duration.Duration(120, "s"))
+    assert(res.validRows == 0 && res.invalidRows == 0 && res.batches == 0)
+    assert(res.newBookmark.contains(at))
+    assert(Bookmarks.lookup(spark, conf.bookmarkPath, conf.jobName).contains(at))
   }
 
   test("dedupForm window vs agg: identical results on a skewed changelog") {

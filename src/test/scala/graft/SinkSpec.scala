@@ -171,6 +171,57 @@ class SinkSpec extends SparkSpec {
     assert(res.length == 1 && !res.head.ok && res.head.status == -1)
   }
 
+  test("JdkHttpPoster request timeout: a destination that never answers fails the batch, unretried") {
+    import spark.implicits._
+    val arrived = new java.util.concurrent.atomic.AtomicInteger()
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val handlers = java.util.concurrent.Executors.newCachedThreadPool()
+    server.setExecutor(handlers)
+    server.createContext("/", new HttpHandler {
+      // accept the request, then never answer (until the spec ends)
+      def handle(ex: HttpExchange): Unit = {
+        arrived.incrementAndGet(); release.await(); ex.close()
+      }
+    })
+    server.start()
+    try {
+      val client = new ClevertapClient(s"http://127.0.0.1:${server.getAddress.getPort}",
+        "a", "p", new JdkHttpPoster(requestTimeoutMs = 300),
+        RetryPolicy(maxAttempts = 3, baseDelayMs = 1))
+      val t0 = System.nanoTime()
+      val res = HttpSink.sendBatches(Seq("""{"x":1}""").toDF("payload"), "payload", 10,
+        b => client.uploadProfiles(b)).collect()
+      assert((System.nanoTime() - t0) / 1e9 < 30)
+      assert(res.length == 1 && !res.head.ok && res.head.status == -1)
+      assert(res.head.error.toLowerCase.contains("timed out"), res.head.error)
+      // the POST may have landed: a request timeout is never re-sent
+      assert(arrived.get == 1)
+      assert(!RetryPolicy().shouldRetry(new java.net.http.HttpTimeoutException("t")))
+      assert(RetryPolicy().shouldRetry(new java.net.http.HttpConnectTimeoutException("t")))
+    } finally { release.countDown(); server.stop(0); handlers.shutdown() }
+  }
+
+  test("writeResults: totals observed on the write; firstError is the same whatever the task order") {
+    import spark.implicits._
+    val rows = Seq(
+      SinkResult(0, 1000, 200, ok = true, ""),
+      SinkResult(1, 1000, 500, ok = false, "zeta: upstream down"),
+      SinkResult(2, 500, 503, ok = false, "alpha: throttled"),
+      SinkResult(3, 7, 200, ok = true, ""))
+    val dir = java.nio.file.Files.createTempDirectory("graft-results").toString
+    // coalesce(1) keeps the input order (an order-dependent `first` reads
+    // "zeta" one way and "alpha" the other); repartition spreads it
+    val arrangements = Seq[org.apache.spark.sql.Dataset[SinkResult] =>
+      org.apache.spark.sql.Dataset[SinkResult]](_.coalesce(1), _.repartition(3))
+    val stats = for (order <- Seq(rows, rows.reverse); arrange <- arrangements) yield
+      HttpSink.writeResults(arrange(spark.createDataset(order)), s"$dir/r")
+    assert(stats.toSet == Set(EgressStats(4, 2, 2507, "alpha: throttled")))
+    assert(spark.read.parquet(s"$dir/r").count() == 4)
+    val clean = HttpSink.writeResults(spark.createDataset(rows.filter(_.ok)), s"$dir/ok")
+    assert(clean == EgressStats(2, 2, 1007, "") && clean.delivered)
+  }
+
   test("Gamooga JWT HS256 is verifiable") {
     val jwt = GamoogaClient.jwtHs256("""{"ev":"x"}""", "secret123")
     val Array(h, p, s) = jwt.split("\\.")
