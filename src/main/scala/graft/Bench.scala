@@ -13,34 +13,8 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // Marks this JVM as a bench run: SparkEntry honors the GRAFT_GRAMHASH
-    // kernel override only under this mark (or an explicit GRAFT_BENCH=1
-    // env), so an exported GRAFT_GRAMHASH can never flip the gram kernel
-    // under an oracle/verify run and break md5-keyed oracle parity.
-    System.setProperty("graft.bench", "1")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every core on the box: the driver contract is local[32] and
-    // does not set SPARK_GRAFT_CPUS, so an under-defaulted value here silently
-    // benchmarks the compute-bound queries on a fraction of the machine.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 53 multi-stage queries × 2 runs generate far more than the default
-      // 100 cached codegen classes; eviction churn re-compiles warm plans
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // the app-status stores retain execution/stage/task history (plan
-      // descriptions included) even with the UI off — 150+ executions of
-      // accumulation measurably drags late-suite queries
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -317,7 +291,7 @@ object Bench {
       // input split, so without this the fixture lands in ONE parquet file
       // whose single row group serializes the SCAN into one task — every
       // variant then measures that scan task (~7.5 s even on uniform keys,
-      // SkewDebug-verified), not the reducer skew under test
+      // SCALE.md "Skew stress"), not the reducer skew under test
       .repartition(32)
       .write.mode("overwrite").parquet(s"$dir/big")
     spark.range(100000).select(col("id").as("k"),

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-19 optimization scratch probe: run one query's body with a
@@ -13,21 +12,7 @@ object OptProbe {
   def main(args: Array[String]): Unit = {
     val what = args.headOption.getOrElse("q228")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bench parity: capped status stores + codegen cache (Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()

@@ -1899,7 +1899,8 @@ ORDER BY d.doc_id"""
     * and q86's recall tail (exact cosine top-5, n_hit, one final IEEE
     * division). Geometry makes both top-5 sets the query's 5 cluster
     * co-members, so recall gates at 1.0 — the structured-data
-    * counterpart to AnnProbe's 0.13–0.16 hash-vector floor. */
+    * counterpart to the 0.13–0.16 hash-vector floor in SCALE.md "ANN
+    * family, data-dominated". */
   private val q109 = """
 WITH params AS (
   SELECT CAST((COUNT(*) + 5) // 6 AS BIGINT) AS nc FROM embeddings),

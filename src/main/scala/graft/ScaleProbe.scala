@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-exponent probe for the candidate-join family (SCALE.md round-7
@@ -185,16 +185,7 @@ object ScaleProbe {
     val base = "/tmp/graft_scale_base1"
     val log = new java.io.PrintWriter(
       new java.io.FileWriter("/tmp/scale_results.txt", true), true)
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors())
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // One writer for every scale INCLUDING 1: the baseline must carry the
     // identical marker perturbation (rep = 0 only) or the two timings

@@ -34,23 +34,6 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Bench-only gram-hash override: `GRAFT_GRAMHASH=xxhash64|md5` flips
-    * the token-gram kernel across the shingle/minhash/jaccard/
-    * contamination/span family so BOTH variants can be timed on identical
-    * plans — the md5 path pays a per-gram string allocation + digest;
-    * xxhash64 is the production default where the oracle doesn't need to
-    * replay gram keys. Honored ONLY in a bench JVM (Bench.main stamps the
-    * `graft.bench` system property; GRAFT_BENCH=1 works for ad-hoc
-    * shells): an exported GRAFT_GRAMHASH in the environment would
-    * otherwise flip the kernel during oracle/verify runs and break
-    * q103–q107's md5-keyed oracle parity — "the driver never sets it"
-    * was convention, this gate makes it mechanical. */
-  private def gramHashOr(default: String): String =
-    if (sys.props.get("graft.bench").contains("1") ||
-        sys.env.get("GRAFT_BENCH").contains("1"))
-      sys.env.getOrElse("GRAFT_GRAMHASH", default)
-    else default
-
   /** decimal(12,2) view of a money/quantity double (TPC-H-scale safe). */
   private def dec2(c: Column): Column = c.cast("decimal(12,2)")
   /** decimal(6,4) view of a rate double (discount/tax in [0,1]). */
@@ -580,7 +563,7 @@ object SparkEntry {
   private def q40_minhash_neardups(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashNearDups(t(s, dir, "documents"), "doc_id", "text",
         shingleN = 3, numHashes = 64, bands = 32, threshold = 0.3,
-        gramHash = gramHashOr("xxhash64"))
+        gramHash = "xxhash64")
       .orderBy("id_a", "id_b")
 
   private def q41_simhash_neardups(s: SparkSession, dir: String): DataFrame =
@@ -636,7 +619,7 @@ object SparkEntry {
 
   private def q42_ngram_jaccard(s: SparkSession, dir: String): DataFrame =
     Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleN = 3, threshold = 0.4, gramHash = gramHashOr("xxhash64"))
+        shingleN = 3, threshold = 0.4, gramHash = "xxhash64")
       .orderBy("id_a", "id_b")
 
   private def q43_lsh_topk(s: SparkSession, dir: String): DataFrame = {
@@ -758,7 +741,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1),
         "doc_id", "text", n = 3, minShared = 1,
-        gramHash = gramHashOr("xxhash64"))
+        gramHash = "xxhash64")
       .orderBy("doc_id")
   }
 
@@ -1164,8 +1147,9 @@ object SparkEntry {
 
   private def q109_pq_recall_clustered(s: SparkSession, dir: String): DataFrame = {
     // PQ recall on CLUSTERED vectors — the counterpart to the recorded
-    // worst case (AnnProbe: recall 0.13–0.16 on structure-free hash
-    // vectors). Planted-cluster derivative over the embeddings ids:
+    // worst case (SCALE.md "ANN family, data-dominated": recall
+    // 0.13–0.16 on structure-free hash vectors). Planted-cluster
+    // derivative over the embeddings ids:
     // ceil(n/6) clusters (≈6 members each at every sf), md5-keyed integer
     // centers in [-6,6] per dim, per-vector noise < 0.1 — so a query's
     // exact cosine top-5 and the ADC top-5 are both its 5 co-members and
@@ -3636,7 +3620,7 @@ object SparkEntry {
     // removal pass consumes. Where q79 summarizes coverage, this emits
     // the spans themselves.
     Dedup.crossDocSpans(t(s, dir, "documents"), "doc_id", "text",
-        k = 5, minDocs = 2, gramHash = gramHashOr("md5"))
+        k = 5, minDocs = 2, gramHash = "md5")
       .orderBy("doc_id", "span_start")
 
   private def q105_crossdoc_keepfirst(s: SparkSession, dir: String): DataFrame =
@@ -3644,7 +3628,7 @@ object SparkEntry {
     // substring survives corpus-wide (the (doc,pos)-minimal one); q104
     // is the remove-all C4 policy over the same anchors.
     Dedup.keepFirstCrossDocSpans(t(s, dir, "documents"), "doc_id", "text",
-        k = 5, minDocs = 2, gramHash = gramHashOr("md5"))
+        k = 5, minDocs = 2, gramHash = "md5")
       .orderBy("doc_id")
 
   private def q106_span_decontamination(s: SparkSession, dir: String): DataFrame = {
@@ -3657,7 +3641,7 @@ object SparkEntry {
     Dedup.stripSpansSharedWith(
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", k = 5, gramHash = gramHashOr("md5"))
+        "doc_id", "text", k = 5, gramHash = "md5")
       .orderBy("doc_id")
   }
 
@@ -3666,7 +3650,7 @@ object SparkEntry {
     // dropped from the normalized token stream (all occurrences — the
     // C4-style boilerplate strip), surviving tokens re-joined.
     Dedup.stripCrossDocSpans(t(s, dir, "documents"), "doc_id", "text",
-        k = 5, minDocs = 2, gramHash = gramHashOr("md5"))
+        k = 5, minDocs = 2, gramHash = "md5")
       .orderBy("doc_id")
 
   private def q93_chunk_pack(s: SparkSession, dir: String): DataFrame = {

@@ -18,7 +18,9 @@ package graft.analyze
   * ('n' among them — it only ever appears inside kept multi-char
   * pieces like "in"/"indo"/"lumn"/"scan"): standalone occurrences
   * fall back to [[unkCost]], the documented coverage path. Entries
-  * sorted by piece. */
+  * sorted by piece. To refreeze, run Round17Spec's "unigramTrain ...
+  * converges to the frozen fixture" test: on a drifted vocabulary its
+  * failure message prints the trained entries ready to paste here. */
 object UnigramFixture {
   val maxPieceLen = 4
   val unkCost = 20000L

@@ -209,7 +209,10 @@ object UserProfileJob {
   * Conf keys (flat JSON strings; *_json keys hold nested JSON):
   * job_name, changelog_path, bookmark_path, key_col, ts_col,
   * tiebreak_col, platform, mapping_path, type_map_json, swap_key_json,
-  * base_url, account_id, passcode, batch_size (optional, default 1000).
+  * base_url, account_id, passcode; optional: batch_size (1 to 1000,
+  * CleverTap's per-POST cap, default 1000), sink_results_path (default
+  * a sibling of bookmark_path, see `Conf.resultsPath`) and dedup_form
+  * ("window" or "agg", default "window", see `Conf.dedupForm`).
   */
 object UserProfileMain {
   def parseConf(m: Map[String, String]): UserProfileJob.Conf = {
@@ -218,6 +221,11 @@ object UserProfileMain {
       import scala.jdk.CollectionConverters._
       root.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
     }
+    // checked before any Spark work: CleverTap takes at most 1000
+    // records per POST (reference `operators/clevertap_user_profile.py:29`)
+    val batchSize = m.get("batch_size").map(_.toInt).getOrElse(1000)
+    require(batchSize >= 1 && batchSize <= 1000,
+      s"batch_size must be between 1 and 1000, got $batchSize")
     UserProfileJob.Conf(
       jobName = m("job_name"),
       changelogPath = m("changelog_path"),
@@ -229,7 +237,7 @@ object UserProfileMain {
       mappingPath = m("mapping_path"),
       typeMap = m.get("type_map_json").map(json2map).getOrElse(Map.empty),
       swapKeyMap = m.get("swap_key_json").map(json2map).getOrElse(Map.empty),
-      batchSize = m.get("batch_size").map(_.toInt).getOrElse(1000),
+      batchSize = batchSize,
       sinkResultsPath = m.get("sink_results_path"),
       dedupForm = m.getOrElse("dedup_form", "window"))
   }

@@ -212,6 +212,9 @@ object HttpSink {
     * key so the caller can attach it to the request (header or body). */
   def sendBatchesKeyed(payloads: DataFrame, payloadCol: String, batchSize: Int,
                        send: (String, Seq[String]) => (Int, String)): Dataset[SinkResult] = {
+    // on the driver: a bad size would otherwise fail every egress task,
+    // after the changelog scan and dedup have already run
+    require(batchSize > 0, s"batchSize must be positive, got $batchSize")
     val spark = payloads.sparkSession
     import spark.implicits._
     payloads.select(col(payloadCol).cast("string")).as[String]

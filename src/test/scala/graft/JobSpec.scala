@@ -539,6 +539,25 @@ class JobSpec extends SparkSpec {
     assert(parsed.batchSize == 500)
   }
 
+  test("batch_size outside 1..1000 fails on the driver before any Spark job") {
+    val conf = Map(
+      "job_name" -> "bs", "changelog_path" -> "/data/changelog",
+      "bookmark_path" -> "/data/bookmarks", "key_col" -> "customer_id",
+      "ts_col" -> "_commit_timestamp", "tiebreak_col" -> "_commit_version",
+      "platform" -> "clevertap", "mapping_path" -> "/data/mapping")
+    for (bad <- Seq("0", "1001")) {
+      val e = intercept[IllegalArgumentException](
+        UserProfileMain.parseConf(conf + ("batch_size" -> bad)))
+      assert(e.getMessage.contains(s"got $bad"))
+    }
+    assert(UserProfileMain.parseConf(conf + ("batch_size" -> "1")).batchSize == 1)
+    assert(UserProfileMain.parseConf(conf + ("batch_size" -> "1000")).batchSize == 1000)
+    // the sink rejects a non-positive size when the plan is built, not
+    // inside every egress task
+    intercept[IllegalArgumentException](graft.sink.HttpSink.sendBatches(
+      Seq("{}").toDF("payload"), "payload", 0, _ => (200, "")))
+  }
+
   test("UserProfileMain e2e: --conf-file → job → JSON counters on stdout") {
     val root = Files.createTempDirectory("graft-main").toString
     Seq(("1", "9876543210", "insert", ts("2024-07-01 10:00:00"), 1L),

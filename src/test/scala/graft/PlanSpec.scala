@@ -108,12 +108,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVF search over cell-partitioned storage prunes to probed cells (DPP)") {
-    // The AnnProbe/SCALE.md serving claim: with assignments written
-    // partitionBy("cell"), the probe join must reach the scan as a
-    // partition filter — dynamic partition pruning, since probed cells
-    // are only known at runtime — so a search READS nprobe·queries
-    // cells, not the corpus. If this regresses the search is silently
-    // linear again in I/O (compute would still be candidate-bounded).
+    // SCALE.md's "ANN family, data-dominated" serving claim: with
+    // assignments written partitionBy("cell"), the probe join must
+    // reach the scan as a partition filter — dynamic partition pruning,
+    // since probed cells are only known at runtime — so a search READS
+    // nprobe·queries cells, not the corpus. If this regresses the search
+    // is silently linear again in I/O (compute would still be
+    // candidate-bounded).
     val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
     val corpus = spark.range(5000).select(col("id"),
       transform(sequence(lit(0), lit(15)),

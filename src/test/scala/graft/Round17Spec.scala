@@ -421,7 +421,10 @@ class Round17Spec extends SparkSpec {
     assert(rounds == Seq(342635053L, 315565464L, 315565464L, 315565464L),
       s"training no longer reproduces the frozen fixture's path: $rounds")
     assert(vocab == graft.analyze.UnigramFixture.vocab,
-      "converged vocabulary drifted from UnigramFixture — refreeze or fix")
+      "converged vocabulary drifted from UnigramFixture — refreeze or " +
+        "fix; the trained vocabulary as UnigramFixture.vocab entries:\n" +
+        vocab.map { case (p, c, m) => s"""    ("$p", ${c}L, ${m}L),""" }
+          .mkString("\n"))
   }
 
   test("unigramSegment: frozen-fixture segmentations, UNK fallback, tie-breaks") {

@@ -1,0 +1,35 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** One session factory: every local entry point builds its SparkSession
+  * through [[Session.builder]], so the session Verify checks is the one
+  * Bench times and the one the specs run on. */
+class SessionSpec extends SparkSpec {
+
+  test("only Session and the spark-submit job main call SparkSession.builder() in src/main") {
+    val root = Paths.get("src/main/scala")
+    val allowed = Set(root.resolve("graft/Session.scala"),
+      root.resolve("graft/jobs/Jobs.scala"))
+    val builderCall = """SparkSession\s*\.\s*builder\s*\(""".r
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    def code(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
+      .filterNot { l =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+      }
+    val offenders = files.filterNot(allowed.contains)
+      .filter(p => code(p).exists(builderCall.findFirstIn(_).isDefined))
+    assert(files.size > 50, s"src/main/scala not found from ${Paths.get("").toAbsolutePath}")
+    assert(offenders.isEmpty, offenders.mkString("build through graft.Session: ", ", ", ""))
+  }
+
+  test("the shared test session carries the factory's settings") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
+    assert(spark.sparkContext.master == "local[4]")
+  }
+}

@@ -5,12 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one local SparkSession per JVM across all suites. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  // an explicit 4, not Session.cpus: tier-1 exports SPARK_GRAFT_CPUS
+  lazy val spark: SparkSession = Session.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()
