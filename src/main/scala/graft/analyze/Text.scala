@@ -1458,7 +1458,7 @@ object TextAnalysis {
       // mutable long[1] cells, not boxed Longs: the hot path is one hash
       // lookup + in-place increment per row — a boxed-value map would
       // allocate a fresh Long per increment (measured ~2x slower on the
-      // 64M-row ScaleProbe fixture); null cell = missing key
+      // 64M-row fixture, SCALE.md "Heavy hitters"); null cell = missing key
       val m = new java.util.HashMap[String, Array[Long]](d * 2)
       var n = 0L
       while (it.hasNext) {
@@ -1493,11 +1493,11 @@ object TextAnalysis {
     // descends from a localCheckpoint whose size stats are unknown, so
     // Spark plans a sort-merge join — which shuffles the entire value
     // stream and erases the sketch's whole point (measured: 719 MB
-    // shuffled at the 64M-row ScaleProbe fixture, within noise of the
-    // naive plan). The hint is safe by construction: survivors of the
-    // residual prune number <= D(D+1) (each has est >= N/(D(D+1)) and
-    // the residuals sum to <= N), and realistic key distributions leave
-    // far fewer.
+    // shuffled at the 64M-row fixture of SCALE.md "Heavy hitters",
+    // within noise of the naive plan). The hint is safe by construction:
+    // survivors of the residual prune number <= D(D+1) (each has est >=
+    // N/(D(D+1)) and the residuals sum to <= N), and realistic key
+    // distributions leave far fewer.
     vals.join(broadcast(cands), "v")
       .groupBy("v").agg(count(lit(1)).as("cnt"))
       .crossJoin(broadcast(totals))

@@ -55,14 +55,6 @@ object UserProfileJob {
       swapKeyMap: Map[String, String],
       batchSize: Int = 1000,
       sinkResultsPath: Option[String] = None,
-      /** Latest-per-key strategy: "window" (row_number over one hash
-        * shuffle — the default) or "agg" (max(struct(...)) with map-side
-        * partial aggregation — one candidate per key per upstream task
-        * crosses the shuffle; prefer it when profile keys are skewed,
-        * e.g. bot accounts with millions of changes). Both forms are
-        * semantically identical under the (tsCol, tiebreakCol) order —
-        * JobSpec proves it on a skewed fixture. */
-      dedupForm: String = "window",
       /** Drift-tolerant changelog read: treat `changelogPath`'s
         * sub-directories as per-batch parquet with possibly DIFFERENT
         * schemas (union by name, missing-as-null, widened types — the
@@ -135,15 +127,9 @@ object UserProfileJob {
     val changes = feed.since(bookmark)
       .filter(col("_change_type").isin("insert", "update_postimage"))
       .observe(processed, max(col(conf.tsCol)).as("max_ts"))
-    // 3. latest change per key (strategy per Conf.dedupForm)
-    val latest = conf.dedupForm match {
-      case "window" => Dedup.latestPerKey(changes, Seq(conf.keyCol),
-        Seq(col(conf.tsCol).desc, col(conf.tiebreakCol).desc))
-      case "agg" => Dedup.latestPerKeyAgg(changes, Seq(conf.keyCol),
-        Seq(conf.tsCol, conf.tiebreakCol))
-      case other => throw new IllegalArgumentException(
-        s"dedupForm must be 'window' or 'agg', got '$other'")
-    }
+    // 3. latest change per key
+    val latest = Dedup.latestPerKey(changes, Seq(conf.keyCol),
+      Seq(col(conf.tsCol).desc, col(conf.tiebreakCol).desc))
 
     // 4. attribute selection from the mapping table: collect NAMES only
     //    (the reference collects the same metadata, clevertap.py:56-58)
@@ -210,9 +196,8 @@ object UserProfileJob {
   * job_name, changelog_path, bookmark_path, key_col, ts_col,
   * tiebreak_col, platform, mapping_path, type_map_json, swap_key_json,
   * base_url, account_id, passcode; optional: batch_size (1 to 1000,
-  * CleverTap's per-POST cap, default 1000), sink_results_path (default
-  * a sibling of bookmark_path, see `Conf.resultsPath`) and dedup_form
-  * ("window" or "agg", default "window", see `Conf.dedupForm`).
+  * CleverTap's per-POST cap, default 1000) and sink_results_path
+  * (default a sibling of bookmark_path, see `Conf.resultsPath`).
   */
 object UserProfileMain {
   def parseConf(m: Map[String, String]): UserProfileJob.Conf = {
@@ -238,8 +223,7 @@ object UserProfileMain {
       typeMap = m.get("type_map_json").map(json2map).getOrElse(Map.empty),
       swapKeyMap = m.get("swap_key_json").map(json2map).getOrElse(Map.empty),
       batchSize = batchSize,
-      sinkResultsPath = m.get("sink_results_path"),
-      dedupForm = m.getOrElse("dedup_form", "window"))
+      sinkResultsPath = m.get("sink_results_path"))
   }
 
   /** Runs the job for a `--conf-file` command line and returns the

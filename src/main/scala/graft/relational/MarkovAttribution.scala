@@ -120,8 +120,9 @@ object MarkovAttribution {
     // bounded by (channels+3)². Probe with limit(bound+1) BEFORE the
     // collect so a pathological fact-scale input fails fast instead of
     // OOMing the driver (the .offset-guard pattern from ADVICE r13).
-    // The C²·k BigInt fixed point is measured in ScaleProbe: ~10³
-    // states stays sub-minute on one core.
+    // The C²·k BigInt fixed point is measured in SCALE.md ("Round-14
+    // martech tier", the Markov solve entry): ~10³ states stays
+    // sub-minute on one core.
     val maxEdges = (maxChannels.toLong + 3) * (maxChannels.toLong + 3)
     val probe = transitions.select("src", "dst", "cnt")
       .limit((maxEdges + 1).min(Int.MaxValue.toLong).toInt).collect()

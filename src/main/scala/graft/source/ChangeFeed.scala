@@ -1,6 +1,7 @@
 package graft.source
 
 import java.sql.Timestamp
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,47 +84,62 @@ class AutoChangeFeedSource(
 object Bookmarks {
   val table = "streaming_job_runs"
 
-  /** Look up the bookmark for a job; absent row ⇒ None (full scan). */
-  def lookup(spark: SparkSession, bookmarkPath: String, jobName: String): Option[Timestamp] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(bookmarkPath), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(bookmarkPath))) return None
-    spark.read.parquet(bookmarkPath)
-      .filter(col("query_name") === lit(jobName))   // parameterized, not interpolated (B11)
-      .select("last_job_run")
-      .collect()                                    // metadata-sized read; legitimate collect (R5)
-      .headOption.map(_.getTimestamp(0))
+  private def fs(spark: SparkSession, path: String): FileSystem =
+    FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+
+  private def staging(bookmarkPath: String): String =
+    bookmarkPath.stripSuffix("/") + "__staging"
+
+  /** The directory holding the current bookmark table: `bookmarkPath`,
+    * else a COMMITTED (`_SUCCESS`) staging copy — what a crash between
+    * `upsert`'s delete and rename leaves — else None. */
+  private def current(spark: SparkSession, bookmarkPath: String): Option[String] = {
+    val tmp = staging(bookmarkPath)
+    if (fs(spark, bookmarkPath).exists(new Path(bookmarkPath))) Some(bookmarkPath)
+    else if (fs(spark, tmp).exists(new Path(tmp, "_SUCCESS"))) Some(tmp)
+    else None
   }
+
+  /** Look up the bookmark for a job; absent row ⇒ None (full scan). */
+  def lookup(spark: SparkSession, bookmarkPath: String, jobName: String): Option[Timestamp] =
+    current(spark, bookmarkPath).flatMap { dir =>
+      spark.read.parquet(dir)
+        .filter(col("query_name") === lit(jobName))   // parameterized, not interpolated (B11)
+        .select("last_job_run")
+        .collect()                                    // metadata-sized read; legitimate collect (R5)
+        .headOption.map(_.getTimestamp(0))
+    }
 
   /** Upsert the bookmark after a successful run (read-merge-write; the
     * table is metadata-sized). The new table is staged to a sibling path
-    * and swapped in with delete+rename, so a crash mid-upsert leaves the
-    * OLD bookmark intact (re-running the job re-sends, never skips) —
-    * a plain overwrite deletes first and a crash then loses every
-    * bookmark. Rename is atomic on HDFS/file; on object stores prefer a
-    * transactional table for this metadata. */
+    * and swapped in with delete+rename. A crash before the delete leaves
+    * the OLD table in place; a crash between delete and rename leaves
+    * only the committed staging copy, which `lookup` reads and the next
+    * `upsert` first renames into place — so no job's bookmark is lost
+    * and re-running the job re-sends, never skips. A plain overwrite
+    * deletes first and a crash then loses every bookmark. Rename is
+    * atomic on HDFS/file; on object stores prefer a transactional table
+    * for this metadata. */
   def upsert(spark: SparkSession, bookmarkPath: String, jobName: String,
              ts: Timestamp): Unit = {
     import spark.implicits._
+    val bfs = fs(spark, bookmarkPath)
+    val (dst, tmp) = (new Path(bookmarkPath), staging(bookmarkPath))
+    // finish an interrupted swap before the staging dir is overwritten
+    if (current(spark, bookmarkPath).contains(tmp)) bfs.rename(new Path(tmp), dst)
     val updated = lookupAll(spark, bookmarkPath)
       .filter(_._1 != jobName) :+ (jobName, ts)
-    val tmp = bookmarkPath.stripSuffix("/") + "__staging"
     updated.toDF("query_name", "last_job_run")
       .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(bookmarkPath), spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(bookmarkPath)
-    fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+    bfs.delete(dst, true)
+    bfs.rename(new Path(tmp), dst)
   }
 
-  private def lookupAll(spark: SparkSession, path: String): Seq[(String, Timestamp)] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) Seq.empty
-    else spark.read.parquet(path)
-      .select("query_name", "last_job_run") // by name, not position
-      .collect()
-      .map(r => (r.getString(0), r.getTimestamp(1))).toSeq
-  }
+  private def lookupAll(spark: SparkSession, path: String): Seq[(String, Timestamp)] =
+    current(spark, path).toSeq.flatMap { dir =>
+      spark.read.parquet(dir)
+        .select("query_name", "last_job_run") // by name, not position
+        .collect()
+        .map(r => (r.getString(0), r.getTimestamp(1))).toSeq
+    }
 }

@@ -41,6 +41,25 @@ class JobSpec extends SparkSpec {
     assert(Bookmarks.lookup(spark, path, "job2").contains(ts("2024-02-01 00:00:00")))
   }
 
+  test("Bookmarks: a crash between the swap's delete and rename loses no bookmark") {
+    val path = Files.createTempDirectory("graft-bm-crash").toString + "/bookmarks"
+    val live = new java.io.File(path)
+    val staging = new java.io.File(path + "__staging")
+    Bookmarks.upsert(spark, path, "a", ts("2024-01-10 00:00:00"))
+    Bookmarks.upsert(spark, path, "b", ts("2024-02-01 00:00:00"))
+    // the post-delete state: the live table is gone, the committed
+    // staging copy holds every job's bookmark
+    assert(live.renameTo(staging))
+    assert(Bookmarks.lookup(spark, path, "a").contains(ts("2024-01-10 00:00:00")))
+    Bookmarks.upsert(spark, path, "b", ts("2024-03-01 00:00:00"))
+    assert(Bookmarks.lookup(spark, path, "a").contains(ts("2024-01-10 00:00:00")))
+    assert(Bookmarks.lookup(spark, path, "b").contains(ts("2024-03-01 00:00:00")))
+    // a staging dir without _SUCCESS is an unfinished write: ignored
+    assert(live.renameTo(staging))
+    assert(new java.io.File(staging, "_SUCCESS").delete())
+    assert(Bookmarks.lookup(spark, path, "a").isEmpty)
+  }
+
   test("ChangelogTableSource.since filters strictly after bookmark") {
     val dir = Files.createTempDirectory("graft-cl").toString + "/log"
     Seq((1L, ts("2024-01-01 00:00:00")), (2L, ts("2024-01-02 00:00:00")))
@@ -476,7 +495,58 @@ class JobSpec extends SparkSpec {
     assert(Bookmarks.lookup(spark, conf.bookmarkPath, conf.jobName).contains(at))
   }
 
-  test("dedupForm window vs agg: identical results on a skewed changelog") {
+  test("crash after egress, before the bookmark upsert: the rerun re-sends and the bookmark never regresses") {
+    val root = Files.createTempDirectory("graft-crash").toString
+    val cols = Seq("customer_id", "mobile", "_change_type", "_commit_timestamp", "_commit_version")
+    val seeded = ts("2024-11-01 00:00:00")
+    // "old" is behind the seeded bookmark: an earlier run delivered it
+    (("old", "9876543200", "insert", ts("2024-10-31 10:00:00"), 0L) +:
+      (1 to 30).map(i => (i.toString, s"98765432${"%02d".format(i)}", "insert",
+        ts("2024-11-01 10:00:00"), i.toLong)))
+      .toDF(cols: _*).write.parquet(s"$root/changelog")
+    Seq(("mobile", true)).toDF("property_name", "clevertap").write.parquet(s"$root/mapping")
+    val conf = UserProfileJob.Conf(
+      jobName = "crash", changelogPath = s"$root/changelog",
+      bookmarkPath = s"$root/bookmarks", keyCol = "customer_id",
+      tsCol = "_commit_timestamp", tiebreakCol = "_commit_version",
+      platform = "clevertap", mappingPath = s"$root/mapping",
+      typeMap = Map.empty, swapKeyMap = Map.empty, batchSize = 10)
+    Bookmarks.upsert(spark, conf.bookmarkPath, conf.jobName, seeded)
+    val fs = new graft.source.FsOps(spark)
+    assert(fs.copy(conf.bookmarkPath, s"$root/bookmarks_prerun"))
+    val identity = """"identity":"([^"]*)"""".r
+    def sendAll(): (UserProfileJob.Result, Set[String]) = {
+      JobSpecSendCounter.bodies.clear()
+      val res = UserProfileJob.run(spark, conf,
+        b => { b.foreach(JobSpecSendCounter.bodies.add); (200, "ok") })
+      (res, JobSpecSendCounter.bodies.toArray.map(_.toString)
+        .flatMap(identity.findFirstMatchIn(_).map(_.group(1))).toSet)
+    }
+
+    val (first, firstSent) = sendAll()
+    // the crash: egress finished, the upsert never ran, so the bookmark
+    // dir is what it was before the run
+    assert(fs.delete(conf.bookmarkPath))
+    assert(fs.copy(s"$root/bookmarks_prerun", conf.bookmarkPath))
+    assert(Bookmarks.lookup(spark, conf.bookmarkPath, conf.jobName).contains(seeded))
+    // a change that lands before the rerun
+    Seq(("late", "9876543299", "insert", ts("2024-11-02 10:00:00"), 99L))
+      .toDF(cols: _*).write.mode("append").parquet(s"$root/changelog")
+    val (second, secondSent) = sendAll()
+
+    val valid = (1 to 30).map(_.toString).toSet
+    assert(valid.subsetOf(firstSent ++ secondSent))
+    // at least once: the rerun re-sends the whole un-bookmarked delta
+    assert((valid + "late").subsetOf(secondSent), secondSent)
+    assert(!(firstSent ++ secondSent).contains("old"))
+    val firstBm = first.newBookmark.get
+    assert(second.newBookmark.exists(!_.before(firstBm)))
+    assert(Bookmarks.lookup(spark, conf.bookmarkPath, conf.jobName) == second.newBookmark)
+  }
+
+  test("job's window dedup equals Dedup.latestPerKeyAgg on a skewed changelog") {
+    import org.apache.spark.sql.functions.{col, max}
+    import graft.transform.Sanity
     val root = Files.createTempDirectory("graft-skew").toString
     // hot key "1": 5000 changes; cold keys 2..40: one change each
     val hot = (1 to 5000).map(v =>
@@ -493,29 +563,31 @@ class JobSpec extends SparkSpec {
 
     // static holder: the send closure is serialized per task, so a
     // captured local list would collect into per-task copies
-    def runForm(form: String): graft.jobs.UserProfileJob.Result = {
-      val conf = UserProfileJob.Conf(
-        jobName = s"skew_$form", changelogPath = s"$root/changelog",
-        bookmarkPath = s"$root/bm_$form", keyCol = "customer_id",
-        tsCol = "_commit_timestamp", tiebreakCol = "_commit_version",
-        platform = "clevertap", mappingPath = s"$root/mapping",
-        typeMap = Map.empty, swapKeyMap = Map.empty, dedupForm = form)
-      UserProfileJob.run(spark, conf,
-        b => { b.foreach(JobSpecSendCounter.bodies.add); (200, "ok") })
-    }
+    val conf = UserProfileJob.Conf(
+      jobName = "skew", changelogPath = s"$root/changelog",
+      bookmarkPath = s"$root/bm", keyCol = "customer_id",
+      tsCol = "_commit_timestamp", tiebreakCol = "_commit_version",
+      platform = "clevertap", mappingPath = s"$root/mapping",
+      typeMap = Map.empty, swapKeyMap = Map.empty)
     JobSpecSendCounter.bodies.clear()
-    val w = runForm("window")
-    val sentWindow = JobSpecSendCounter.bodies.toArray.map(_.toString).toSet
-    JobSpecSendCounter.bodies.clear()
-    val a = runForm("agg")
-    val sentAgg = JobSpecSendCounter.bodies.toArray.map(_.toString).toSet
-    // identical outcome: same counters, same bookmark, SAME payloads —
-    // including the hot key's single surviving (latest) change
-    assert(w.validRows == 40 && a.validRows == w.validRows)
-    assert(a.invalidRows == w.invalidRows && a.newBookmark == w.newBookmark)
-    assert(sentAgg == sentWindow)
-    assert(sentWindow.exists(_.contains(""""identity":"1"""")))
-    intercept[IllegalArgumentException](runForm("bogus"))
+    val res = UserProfileJob.run(spark, conf,
+      b => { b.foreach(JobSpecSendCounter.bodies.add); (200, "ok") })
+    val sent = JobSpecSendCounter.bodies.toArray.map(_.toString).toSet
+    // the aggregate form applied straight to the changelog: same
+    // counters, same bookmark, SAME payloads — including the hot key's
+    // single surviving (latest) change
+    val changes = spark.read.parquet(s"$root/changelog")
+    val agg = graft.dedup.Dedup.latestPerKeyAgg(changes, Seq("customer_id"),
+      Seq("_commit_timestamp", "_commit_version"))
+    val expected = agg.select(Sanity.profileEnvelope(
+        Sanity.identity(Seq(col("customer_id"))), Seq("mobile" -> col("mobile"))))
+      .as[String].collect().toSet
+    assert(res.validRows == 40 && res.validRows == agg.count())
+    assert(res.invalidRows == 0)
+    assert(res.newBookmark.contains(
+      changes.agg(max("_commit_timestamp")).head.getTimestamp(0)))
+    assert(sent == expected)
+    assert(sent.exists(_.contains(""""identity":"1"""")))
   }
 
   test("UserProfileMain.parseConf: conf-file contract roundtrip with macros") {

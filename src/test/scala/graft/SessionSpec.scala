@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 /** One session factory: every local entry point builds its SparkSession
   * through [[Session.builder]], so the session Verify checks is the one
-  * Bench times and the one the specs run on. */
+  * Bench times and the one the specs run on. The probe entry points only
+  * name registered queries. */
 class SessionSpec extends SparkSpec {
 
   test("only Session and the spark-submit job main call SparkSession.builder() in src/main") {
@@ -31,5 +32,11 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
     assert(spark.sparkContext.master == "local[4]")
+  }
+
+  test("every ScaleProbe query is a registered SparkEntry query") {
+    val missing = ScaleProbe.Queries.filterNot(SparkEntry.queries.contains)
+    assert(ScaleProbe.Queries.nonEmpty)
+    assert(missing.isEmpty, missing.mkString("not in SparkEntry.queries: ", ", ", ""))
   }
 }
