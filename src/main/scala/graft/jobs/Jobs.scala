@@ -2,20 +2,13 @@ package graft.jobs
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.sink.HttpSink
 import graft.source.{Bookmarks, ChangelogTableSource}
 import graft.transform.Sanity
-
-/** Job harness (reference `tasks/base.py:12-98`): a trait instead of a
-  * base class with dbutils probing; config is a typed case class, not a
-  * Spark text-read of a JSON file. */
-trait SparkJob[C] {
-  def run(spark: SparkSession, conf: C): Unit
-}
 
 /** E2 — the reference's sample job (`tasks/sample/entrypoint.py:4-20`):
   * range → format write → used as the harness smoke test. */
@@ -85,20 +78,29 @@ object UserProfileJob {
     * projection, sanity transforms + rename. */
   private[jobs] case class Prepared(renamed: DataFrame, keyOut: String)
 
-  /** Runs `egress` on the prepared frame, then upserts the bookmark to the
-    * max `tsCol` observed on the changelog rows that egress action read —
-    * only when `delivered(out)`: a failed batch keeps the old bookmark, so
-    * the next run re-sends instead of skipping the undelivered rows.
+  /** Steps 1–8, shared by every destination; a destination supplies only
+    * its `payload` column and its `sink` write. Step 6 builds `identity`
+    * and `payload` once, counts the rows without an identity (R21) as an
+    * observed metric on the egress action instead of a `count()` pass,
+    * and hands only the valid rows to `sink`. Returns the sink's outcome,
+    * the invalid-row count and the bookmark the job left.
     *
-    * `egress` must execute the prepared frame in exactly ONE action: the
-    * bookmark is an `Observation` on that action, not a second scan. That
-    * is also what pins it to what was sent. The changelog relation's file
-    * listing is fixed when it is resolved, so a file appended during
-    * egress is in neither the egressed rows nor the observed max (the
-    * next run picks it up); `max` is idempotent, so re-run tasks cannot
-    * move it. An empty delta observes null and keeps the old bookmark. */
-  private[jobs] def withPrepared[T](spark: SparkSession, conf: Conf)(
-      egress: Prepared => T)(delivered: T => Boolean): (T, Option[Timestamp]) = {
+    * The bookmark is upserted to the max `tsCol` observed on the
+    * changelog rows that egress action read — only when `delivered(out)`:
+    * a failed batch keeps the old bookmark, so the next run re-sends
+    * instead of skipping the undelivered rows.
+    *
+    * `sink` must execute the frame it is given in exactly ONE action: the
+    * bookmark and the invalid count are `Observation`s on that action, not
+    * a second scan. That is also what pins the bookmark to what was sent.
+    * The changelog relation's file listing is fixed when it is resolved,
+    * so a file appended during egress is in neither the egressed rows nor
+    * the observed max (the next run picks it up); `max` is idempotent, so
+    * re-run tasks cannot move it. An empty delta observes null and keeps
+    * the old bookmark. */
+  private[jobs] def withPrepared[S](spark: SparkSession, conf: Conf)(
+      payload: Prepared => Column)(sink: (Prepared, DataFrame) => S)(
+      delivered: S => Boolean): (S, Long, Option[Timestamp]) = {
     // 0. egress-safety guard: the destination APIs don't dedupe, so a
     //    speculating cluster would double-POST every batch (see
     //    HttpSink.requireNoSpeculation) — refuse to run
@@ -136,15 +138,24 @@ object UserProfileJob {
     val attrs = spark.read.parquet(conf.mappingPath)
       .filter(col(conf.platform) === true)
       .select("property_name").collect().map(_.getString(0)).toSeq
-      .filter(latest.columns.contains)
 
-    // 5. sanity transforms (T4 compile) + projection + rename
+    // 5. sanity transforms (T4 compile) + projection (absent attributes
+    //    skipped) + rename
     val typed = Sanity.compileTypeMap(
       Sanity.extractAttributes(latest, Seq(conf.keyCol) ++ attrs), conf.typeMap)
     val renamed = Sanity.swapKeys(typed, conf.swapKeyMap)
     val keyOut = conf.swapKeyMap.getOrElse(conf.keyCol, conf.keyCol)
 
-    val out = egress(Prepared(renamed, keyOut))
+    val p = Prepared(renamed, keyOut)
+
+    // 6. identity + payload, invalid split (R21)
+    val obs = Observation()
+    val (valid, _) = HttpSink.splitInvalid(HttpSink.observeEgress(renamed.select(
+      Sanity.identity(Seq(col(keyOut))).as("identity"), payload(p).as("payload")),
+      obs, "identity"), "identity")
+    // 7. distributed egress, materialized once by the sink's results write
+    val out = sink(p, valid)
+    val nInvalid = obs.get("records_invalid").asInstanceOf[Long]
 
     // 8. bookmark upsert, only after every batch landed: the max commit
     //    timestamp the egress action read (null when the delta was empty)
@@ -152,33 +163,22 @@ object UserProfileJob {
       if (delivered(out)) Option(processed.get("max_ts").asInstanceOf[Timestamp])
       else None
     advanced.foreach(ts => Bookmarks.upsert(spark, conf.bookmarkPath, conf.jobName, ts))
-    (out, advanced.orElse(bookmark))
+    (out, nInvalid, advanced.orElse(bookmark))
   }
 
   /** CleverTap-shaped egress (the reference's one wired production job):
-    * JSON profile envelopes, ≤1000-record POST batches.
-    *
-    * Single-action egress: the valid/invalid counters ride the results
-    * write as observed metrics (no separate `count()` pass re-executing
-    * the dedup + transforms), and the per-batch results go to parquet —
-    * the driver receives only the EgressStats summary. */
+    * JSON profile envelopes, ≤1000-record POST batches; the per-batch
+    * results go to parquet and the driver receives only the EgressStats
+    * summary. */
   def run(spark: SparkSession, conf: Conf,
           send: Seq[String] => (Int, String)): Result = {
-    val ((stats, nInvalid), newBookmark) = withPrepared(spark, conf) { p =>
-      // 6. envelope + invalid split (R21) — counted via observe, not count()
-      val attrCols = p.renamed.columns.filter(_ != p.keyOut).toSeq
-      val obs = Observation()
-      val payloads = HttpSink.observeEgress(p.renamed.select(
-        Sanity.identity(Seq(col(p.keyOut))).as("identity"),
-        Sanity.profileEnvelope(Sanity.identity(Seq(col(p.keyOut))),
-          attrCols.map(a => a -> col(a))).as("payload")), obs, "identity")
-      val (valid, _) = HttpSink.splitInvalid(payloads, "identity")
-      // 7. distributed egress, materialized once by the results write
-      val stats = HttpSink.writeResults(
-        HttpSink.sendBatches(valid, "payload", conf.batchSize, send),
-        conf.resultsPath)
-      (stats, obs.get("records_invalid").asInstanceOf[Long])
-    }(_._1.delivered)
+    val (stats, nInvalid, newBookmark) = withPrepared(spark, conf) { p =>
+      Sanity.profileEnvelope(Sanity.identity(Seq(col(p.keyOut))),
+        p.renamed.columns.filter(_ != p.keyOut).toSeq.map(a => a -> col(a)))
+    } { (_, valid) =>
+      HttpSink.writeResults(
+        HttpSink.sendBatches(valid, "payload", conf.batchSize, send), conf.resultsPath)
+    }(_.delivered)
     Result(stats.records, nInvalid, stats.batches, stats.okBatches,
       stats.firstError, conf.resultsPath, newBookmark)
   }
@@ -269,25 +269,18 @@ object NetcoreUserProfileJob {
 
   def run(spark: SparkSession, conf: UserProfileJob.Conf,
           client: NetcoreClient, stagingPrefix: String): Result = {
-    val ((stats, nInvalid), newBookmark) =
-      UserProfileJob.withPrepared(spark, conf) { p =>
-        val cols = p.renamed.columns.toSeq
-        // RFC-4180 CSV line per record: fields with commas, quotes, or
-        // newlines are quoted/escaped exactly like the reference's pandas
-        // to_csv (hooks/netcore.py:83-90) — free-text attributes survive.
-        val obs = Observation()
-        val csv = HttpSink.observeEgress(p.renamed.select(
-          Sanity.identity(Seq(col(p.keyOut))).as("identity"),
-          Sanity.csvLine(cols.map(c => col(c).cast("string"))).as("csv")),
-          obs, "identity")
-        val (valid, _) = HttpSink.splitInvalid(csv, "identity")
-        val header = cols.map(Sanity.csvQuoteString).mkString(",")
-        val stats = NetcoreSink.writeResults(
-          NetcoreSink.stageAndNotify(valid, "csv", header, stagingPrefix,
-            client, client.maxChunkBytes),
-          conf.resultsPath)
-        (stats, obs.get("records_invalid").asInstanceOf[Long])
-      }(_._1.delivered)
+    val (stats, nInvalid, newBookmark) = UserProfileJob.withPrepared(spark, conf) { p =>
+      // RFC-4180 CSV line per record: fields with commas, quotes, or
+      // newlines are quoted/escaped exactly like the reference's pandas
+      // to_csv (hooks/netcore.py:83-90) — free-text attributes survive.
+      Sanity.csvLine(p.renamed.columns.toSeq.map(c => col(c).cast("string")))
+    } { (p, valid) =>
+      val header = p.renamed.columns.map(Sanity.csvQuoteString).mkString(",")
+      NetcoreSink.writeResults(
+        NetcoreSink.stageAndNotify(valid, "payload", header, stagingPrefix,
+          client, client.maxChunkBytes),
+        conf.resultsPath)
+    }(_.delivered)
     Result(stats.files, stats.okFiles, stats.records, stats.bytes,
       nInvalid, conf.resultsPath, newBookmark)
   }
@@ -301,22 +294,16 @@ object GamoogaUserProfileJob {
 
   def run(spark: SparkSession, conf: UserProfileJob.Conf,
           client: GamoogaClient, propTypesJson: String): UserProfileJob.Result = {
-    val ((stats, nInvalid), newBookmark) =
-      UserProfileJob.withPrepared(spark, conf) { p =>
-        val attrCols = p.renamed.columns.filter(_ != p.keyOut).toSeq
-        // per-record props object {key: id, attr: value, ...}
-        val obs = Observation()
-        val props = HttpSink.observeEgress(p.renamed.select(
-          Sanity.identity(Seq(col(p.keyOut))).as("identity"),
-          to_json(struct(col(p.keyOut) +: attrCols.map(col): _*)).as("payload")),
-          obs, "identity")
-        val (valid, _) = HttpSink.splitInvalid(props, "identity")
-        val stats = HttpSink.writeResults(
-          HttpSink.sendBatches(valid, "payload", conf.batchSize,
-            batch => client.uploadProfiles(batch.mkString("[", ",", "]"), propTypesJson)),
-          conf.resultsPath)
-        (stats, obs.get("records_invalid").asInstanceOf[Long])
-      }(_._1.delivered)
+    val (stats, nInvalid, newBookmark) = UserProfileJob.withPrepared(spark, conf) { p =>
+      // per-record props object {key: id, attr: value, ...}
+      to_json(struct(col(p.keyOut) +:
+        p.renamed.columns.filter(_ != p.keyOut).toSeq.map(col): _*))
+    } { (_, valid) =>
+      HttpSink.writeResults(
+        HttpSink.sendBatches(valid, "payload", conf.batchSize,
+          batch => client.uploadProfiles(batch.mkString("[", ",", "]"), propTypesJson)),
+        conf.resultsPath)
+    }(_.delivered)
     UserProfileJob.Result(stats.records, nInvalid, stats.batches,
       stats.okBatches, stats.firstError, conf.resultsPath, newBookmark)
   }

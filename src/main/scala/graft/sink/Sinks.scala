@@ -9,6 +9,7 @@ import javax.crypto.spec.SecretKeySpec
 
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.RetryPolicy
 
@@ -109,12 +110,14 @@ class ClevertapClient(baseUrl: String, accountId: String, passcode: String,
 
   /** Profile deletion POSTs to an ABSOLUTE regional endpoint, unlike the
     * relative upload paths (`hooks/clevertap.py:36-50`); the URL is a
-    * parameter so tests can point it at a stub. */
+    * parameter so tests can point it at a stub. The body is encoded by
+    * Jackson, so identities with `\`, quotes or control characters stay
+    * valid JSON. */
   def deleteProfiles(identities: Seq[String],
       deleteUrl: String = "https://in1.api.clevertap.com/1/delete/profiles.json")
       : (Int, String) = {
-    val body = identities.map(i => "\"" + i.replace("\"", "\\\"") + "\"")
-      .mkString("{\"identity\":[", ",", "]}")
+    val body = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+      java.util.Map.of("identity", java.util.List.of(identities: _*)))
     retry.run(poster.post(deleteUrl, body, headers))
   }
 }
@@ -266,21 +269,12 @@ object HttpSink {
   def splitInvalid(df: DataFrame, identityCol: String): (DataFrame, DataFrame) =
     (df.filter(col(identityCol).isNotNull), df.filter(col(identityCol).isNull))
 
-  /** R21 metrics as observable metrics (`df.observe`) instead of the
-    * reference's log-only counters — collected for free with the action,
-    * no extra pass (replaces count()-for-logging, SURVEY §4). */
-  def observeEgress(df: DataFrame, name: String, identityCol: String): DataFrame =
-    df.observe(name,
-      count(lit(1)).as("records_processed"),
-      count(when(col(identityCol).isNull, 1)).as("records_invalid"))
-
-  /** As above but with an [[org.apache.spark.sql.Observation]] handle, so
-    * the caller reads the metrics directly after the action with no
-    * listener plumbing — the jobs' replacement for a separate
-    * `invalid.count()` pass (which re-executed the whole upstream
-    * pipeline as a second action). */
-  def observeEgress(df: DataFrame, obs: org.apache.spark.sql.Observation,
-                    identityCol: String): DataFrame =
+  /** R21 metrics (`records_processed`, `records_invalid`) as observed
+    * metrics instead of the reference's log-only counters: collected with
+    * the egress action and read from `obs` after it, with no listener
+    * plumbing and no separate `invalid.count()` pass re-executing the
+    * whole upstream pipeline (SURVEY §4). */
+  def observeEgress(df: DataFrame, obs: Observation, identityCol: String): DataFrame =
     df.observe(obs,
       count(lit(1)).as("records_processed"),
       count(when(col(identityCol).isNull, 1)).as("records_invalid"))
@@ -354,32 +348,33 @@ object NetcoreSink {
     * deterministic (`…_part_<pid>_<i>.csv`, overwrite=true), so the file
     * write is idempotent and the path doubles as the notification's
     * idempotency key; the bulk-upload API may still be notified twice for
-    * the same path. Disable `spark.speculation` when that matters. */
+    * the same path. Disable `spark.speculation` when that matters.
+    *
+    * Staging opens the filesystem with the session's Hadoop configuration
+    * (`spark.hadoop.*` and `sparkContext.hadoopConfiguration`: s3a
+    * credentials, `fs.<scheme>.impl`), captured on the driver. */
   def stageAndNotify(rows: DataFrame, csvCol: String, header: String,
                      stagingPrefix: String, client: NetcoreClient,
-                     maxBytes: Long = 4500000L,
-                     hadoopConf: Map[String, String] = Map.empty): Dataset[StagedFile] = {
+                     maxBytes: Long = 4500000L): Dataset[StagedFile] = {
     val spark = rows.sparkSession
     import spark.implicits._
     val headerBytes = header.getBytes(StandardCharsets.UTF_8).length + 1
+    val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     rows.select(col(csvCol).cast("string")).as[String].mapPartitions { it =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      hadoopConf.foreach { case (k, v) => conf.set(k, v) }
       val pid = org.apache.spark.TaskContext.getPartitionId()
       BatchPacker.byteBound(it, maxBytes - headerBytes).zipWithIndex.map {
         case (chunk, i) =>
           val path = s"$stagingPrefix/user_profile_part_${pid}_$i.csv"
-          val content = (header +: chunk).mkString("\n")
+          val bytes = (header +: chunk).mkString("\n").getBytes(StandardCharsets.UTF_8)
           val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(path), conf)
+            new java.net.URI(path), hadoopConf.value)
           val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-          try out.write(content.getBytes(StandardCharsets.UTF_8))
+          try out.write(bytes)
           finally out.close()
           val (status, _) =
             try client.notifyUpload(path)
             catch { case t: Throwable => (-1, String.valueOf(t.getMessage)) }
-          StagedFile(path, chunk.size.toLong,
-            content.getBytes(StandardCharsets.UTF_8).length.toLong,
+          StagedFile(path, chunk.size.toLong, bytes.length.toLong,
             status, status >= 200 && status < 400)
       }
     }

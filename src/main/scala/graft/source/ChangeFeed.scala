@@ -102,13 +102,7 @@ object Bookmarks {
 
   /** Look up the bookmark for a job; absent row ⇒ None (full scan). */
   def lookup(spark: SparkSession, bookmarkPath: String, jobName: String): Option[Timestamp] =
-    current(spark, bookmarkPath).flatMap { dir =>
-      spark.read.parquet(dir)
-        .filter(col("query_name") === lit(jobName))   // parameterized, not interpolated (B11)
-        .select("last_job_run")
-        .collect()                                    // metadata-sized read; legitimate collect (R5)
-        .headOption.map(_.getTimestamp(0))
-    }
+    lookupAll(spark, bookmarkPath).collectFirst { case (`jobName`, ts) => ts }
 
   /** Upsert the bookmark after a successful run (read-merge-write; the
     * table is metadata-sized). The new table is staged to a sibling path
@@ -135,11 +129,12 @@ object Bookmarks {
     bfs.rename(new Path(tmp), dst)
   }
 
+  /** Every (job, bookmark) row: the one reader of the table. */
   private def lookupAll(spark: SparkSession, path: String): Seq[(String, Timestamp)] =
     current(spark, path).toSeq.flatMap { dir =>
       spark.read.parquet(dir)
         .select("query_name", "last_job_run") // by name, not position
-        .collect()
+        .collect()                            // metadata-sized read; legitimate collect (R5)
         .map(r => (r.getString(0), r.getTimestamp(1))).toSeq
     }
 }

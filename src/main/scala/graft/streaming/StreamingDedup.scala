@@ -482,48 +482,16 @@ object StreamingDedup {
       .drop(r(key)) // single unambiguous key column in the output
   }
 
-  /** Streaming egress, COLLECTED form: the streaming twin of
-    * HttpSink.sendBatchesKeyed. Each micro-batch runs the batch sink
-    * with an idempotency key prefixed by the epoch id — Structured
-    * Streaming replays whole epochs on failure, so (epochId,
-    * content-hash) is stable across replays and destinations can
-    * dedupe. `collectResults` receives the per-batch SinkResults for
-    * observability — the name says it: each epoch's results COLLECT to
-    * the driver, the test/small-topology form. [[egressStreamToPath]]
-    * is the default reach at scale (results stay distributed; only
-    * totals hit the driver). */
-  def egressStreamCollected(payloads: DataFrame, payloadCol: String,
-                            batchSize: Int,
-                            send: (String, Seq[String]) => (Int, String),
-                            collectResults: (Long, Seq[graft.sink.SinkResult]) => Unit):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    payloads.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val results = graft.sink.HttpSink.sendBatchesKeyed(
-        batch, payloadCol, batchSize,
-        (key, rows) => send(s"$epochId-$key", rows)).collect().toSeq
-      if (results.length > 10000)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"egressStreamCollected epoch $epochId collected ${results.length} " +
-            "sink results to the driver — this is the TEST/SMALL-topology " +
-            "form; use egressStreamToPath for production volumes")
-      collectResults(epochId, results)
-    }
-
-  @deprecated("renamed: the short name hid the per-epoch driver collect; " +
-    "use egressStreamCollected (test/small) or egressStreamToPath (scale)",
-    "round 16")
-  def egressStream(payloads: DataFrame, payloadCol: String, batchSize: Int,
-                   send: (String, Seq[String]) => (Int, String),
-                   collectResults: (Long, Seq[graft.sink.SinkResult]) => Unit):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    egressStreamCollected(payloads, payloadCol, batchSize, send, collectResults)
-
-  /** Driver-light streaming egress (the at-scale form, mirroring the
-    * batch jobs): per-epoch results are WRITTEN to
-    * `resultsPath/epoch=<id>` and summarized by observation on that one
-    * write — only the EgressStats totals reach the driver via `onEpoch`. Epoch-keyed
-    * paths make replays overwrite their own epoch (idempotent results,
-    * matching the epoch-keyed send idempotency). */
+  /** Streaming egress, the streaming twin of HttpSink.sendBatchesKeyed
+    * and of the batch jobs' results write. Each micro-batch runs the batch
+    * sink with an idempotency key prefixed by the epoch id — Structured
+    * Streaming replays whole epochs on failure, so (epochId, content-hash)
+    * is stable across replays and destinations can dedupe. Per-epoch
+    * results are WRITTEN to `resultsPath/epoch=<id>` and summarized by
+    * observation on that one write — only the EgressStats totals reach
+    * the driver via `onEpoch`. Epoch-keyed paths make replays overwrite
+    * their own epoch (idempotent results, matching the epoch-keyed send
+    * idempotency). */
   def egressStreamToPath(payloads: DataFrame, payloadCol: String, batchSize: Int,
                          send: (String, Seq[String]) => (Int, String),
                          resultsPath: String,

@@ -325,16 +325,15 @@ class ExtraSpec extends SparkSpec {
     (1 to 25).map(i => s"""{"i":$i}""").toDF("payload").write.parquet(s"$dir/in")
     val schema = StructType(Seq(StructField("payload", StringType)))
     // send runs on executor tasks (closure is serialized — can't collect
-    // through it); collectResults runs driver-side per epoch.
-    val results = new java.util.concurrent.CopyOnWriteArrayList[graft.sink.SinkResult]()
-    val q = StreamingDedup.egressStreamCollected(
+    // through it); each epoch's SinkResults land under the results path.
+    val q = StreamingDedup.egressStreamToPath(
         StreamingDedup.changelogStream(spark, s"$dir/in", schema),
         "payload", batchSize = 10,
         (_, _) => (200, "ok"),
-        (_, rs) => rs.foreach(results.add))
+        s"$dir/results", (_, _) => ())
       .option("checkpointLocation", s"$dir/ckpt").start()
     q.processAllAvailable(); q.stop()
-    val rs = results.toArray.map(_.asInstanceOf[graft.sink.SinkResult])
+    val rs = spark.read.parquet(s"$dir/results").as[graft.sink.SinkResult].collect()
     assert(rs.map(_.records).sum == 25)
     assert(rs.forall(_.records <= 10) && rs.forall(_.ok))
     // content-hashed keys: unique per batch (epoch prefix added in send)

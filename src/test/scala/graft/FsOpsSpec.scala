@@ -113,10 +113,10 @@ class FsOpsSpec extends SparkSpec {
 
   test("observable egress metrics ride the action (R21)") {
     val df = Seq(("1", "x"), (null, "y"), ("3", "z")).toDF("identity", "v")
-    val observed = HttpSink.observeEgress(df, "egress", "identity")
-    observed.collect()
-    val m = observed.queryExecution.observedMetrics("egress")
-    assert(m.getAs[Long]("records_processed") == 3)
-    assert(m.getAs[Long]("records_invalid") == 1)
+    val obs = org.apache.spark.sql.Observation()
+    HttpSink.observeEgress(df, obs, "identity").collect()
+    val m = obs.get
+    assert(m("records_processed") == 3L)
+    assert(m("records_invalid") == 1L)
   }
 }

@@ -356,24 +356,41 @@ class JobSpec extends SparkSpec {
   }
 
   test("UserProfileJob run is one egress action: ≤6 jobs, no cache, no results read-back") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    // bookmark max and sink totals ride the egress write as observations;
+    // caching the changelog and reading the results back took 12 jobs
+    def assertOneAction(twin: String, jobs: Int, plans: Seq[SparkPlan]): Unit = {
+      assert(jobs <= 6, s"$twin: $jobs Spark jobs for one run")
+      val cached = plans.flatMap(p => helper.collectWithSubqueries(p) {
+        case c: InMemoryTableScanExec => c })
+      assert(cached.isEmpty, s"$twin: cached relation in an executed plan: $cached")
+      val scanned = plans.flatMap(p => helper.collectWithSubqueries(p) {
+        case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString) }).flatten
+      assert(scanned.exists(_.contains("changelog")), s"$twin: $scanned")
+      assert(!scanned.exists(_.contains("_sink_results")), s"$twin: results read back: $scanned")
+    }
     val conf = oneActionFixture("one_action_jobs")
     val (res, jobs, plans) =
       recordRun(UserProfileJob.run(spark, conf, _ => (200, "ok")))
     assert(res.validRows == 2500 && res.okBatches == res.batches && res.batches >= 3)
     assert(res.newBookmark.contains(ts("2024-05-01 11:00:00")))
-    // bookmark max and sink totals ride the egress write as observations;
-    // caching the changelog and reading the results back took 12 jobs
-    assert(jobs <= 6, s"$jobs Spark jobs for one run")
-    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val cached = plans.flatMap(p => helper.collectWithSubqueries(p) {
-      case c: InMemoryTableScanExec => c })
-    assert(cached.isEmpty, s"cached relation in an executed plan: $cached")
-    val scanned = plans.flatMap(p => helper.collectWithSubqueries(p) {
-      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString) }).flatten
-    assert(scanned.exists(_.contains("changelog")), scanned)
-    assert(!scanned.exists(_.contains("_sink_results")), s"results read back: $scanned")
+    assertOneAction("CleverTap", jobs, plans)
+    // the Netcore and Gamooga twins run the same egress step
+    withStub(() => 200) { (url, _) =>
+      val ncConf = oneActionFixture("one_action_nc")
+      val staging = "file://" + Files.createTempDirectory("graft-1act-staging")
+      val (nc, ncJobs, ncPlans) = recordRun(graft.jobs.NetcoreUserProfileJob.run(
+        spark, ncConf, new graft.sink.NetcoreClient(url, "k", "e@x.com"), staging))
+      assert(nc.records == 2500 && nc.invalidRows == 1 && nc.okFiles == nc.files)
+      assertOneAction("Netcore", ncJobs, ncPlans)
+      val gmConf = oneActionFixture("one_action_gm")
+      val (gm, gmJobs, gmPlans) = recordRun(graft.jobs.GamoogaUserProfileJob.run(
+        spark, gmConf, new graft.sink.GamoogaClient(url, "c", "s"), "{}"))
+      assert(gm.validRows == 2500 && gm.invalidRows == 1 && gm.okBatches == gm.batches)
+      assertOneAction("Gamooga", gmJobs, gmPlans)
+    }
   }
 
   /** A JDK HTTP stub answering each request with `status()`; `bodies`

@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
 import graft.core.{Connection, ConnectionRegistry, MapSecretProvider, RetryPolicy}
 import graft.sink._
 
+/** `stagetest://` paths on the local disk: a filesystem scheme that only a
+  * session's Hadoop configuration can register. */
+class StageTestFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("stagetest:///")
+}
+
 /** Sink contract tests against a real local HTTP stub (SURVEY §5.5):
   * batch size ≤1000, byte-bound packing ≤4.5MB, retry×3 on connection
   * errors, envelope shape, verifiable JWT. */
@@ -116,6 +122,28 @@ class SinkSpec extends SparkSpec {
       val back = spark.read.option("header", "true").option("multiLine", "true")
         .option("escape", "\"").csv("file://" + dir).collect().map(_.getString(0))
       assert(back.length == 20 && back.forall(_ == "\"" * 40))
+    }
+  }
+
+  test("Netcore staging opens the filesystem through the session's Hadoop conf") {
+    import spark.implicits._
+    // the scheme is known only to the session's conf, as s3a credentials
+    // or an `fs.<scheme>.impl` set via spark.hadoop.* would be
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.stagetest.impl", classOf[StageTestFileSystem].getName)
+    hc.set("fs.stagetest.impl.disable.cache", "true")
+    try withServer { (url, _) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-scheme").toString
+      val staged = NetcoreSink.stageAndNotify(Seq("1,a", "2,b").toDF("csv").coalesce(1),
+        "csv", "id,v", s"stagetest://$dir", new NetcoreClient(url, "k", "e@x.com")).collect()
+      assert(staged.length == 1 && staged.head.ok)
+      assert(staged.head.path == s"stagetest://$dir/user_profile_part_0_0.csv")
+      val written = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(dir, "user_profile_part_0_0.csv"))
+      assert(written == "id,v\n1,a\n2,b" && staged.head.bytes == written.length)
+    } finally {
+      hc.unset("fs.stagetest.impl")
+      hc.unset("fs.stagetest.impl.disable.cache")
     }
   }
 
@@ -290,13 +318,18 @@ class SinkSpec extends SparkSpec {
   test("CleverTap delete + events; Netcore multipart event batch") {
     withServer { (url, bodies) =>
       val ct = new ClevertapClient(url, "acct", "pass")
-      ct.deleteProfiles(Seq("u1", "u2"), s"$url/1/delete/profiles.json")
+      // backslash, quote and control characters must survive as JSON
+      val ids = Seq("u1", "u2", "a\\", "q\"t", "tab\tnl\n" + 1.toChar)
+      ct.deleteProfiles(ids, s"$url/1/delete/profiles.json")
       ct.uploadEvents(Seq("""{"type":"event","evtName":"x"}"""))
       new NetcoreClient(url, "k", "e@x.com")
         .uploadEventsBatch("my key", "part_0.csv", "id,v\n1,a")
       val all = bodies.toArray.map(_.toString)
-      assert(all.exists(b => b.contains("/1/delete/profiles.json")
-        && b.contains(""""identity":["u1","u2"]""")))
+      val del = all.find(_.startsWith("/1/delete/profiles.json")).get
+      val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(del.substring(del.indexOf('\n') + 1)).get("identity")
+      assert((0 until parsed.size).map(parsed.get(_).asText) == ids)
+      assert(del.contains(""""identity":["u1","u2",""""))
       assert(all.exists(b => b.contains("/1/upload") && b.contains(""""evtName":"x"""")))
       val mp = all.find(_.contains("/v1/activity/batchactivity/my+key")).get
       assert(mp.contains("filename=\"part_0.csv\"") && mp.contains("id,v\n1,a"))
