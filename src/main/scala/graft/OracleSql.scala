@@ -640,7 +640,7 @@ FROM documents d LEFT JOIN (SELECT doc_id, code FROM best WHERE rn = 1) p
 ORDER BY d.doc_id"""
 
   /** Shared LSH-signature SQL for q43/q45: md5-derived hyperplanes
-    * (identical to Similarity.md5Hyperplane), exact-decimal projections
+    * (identical to LshWeights.hyperplane), exact-decimal projections
     * (order-independent sums), 32 sign bits. Produces CTEs: e2 (vec_id,
     * i, x), norms (vec_id, n2), sigs (vec_id, sig UBIGINT), bands
     * (vec_id, band, key) with 4 bands of 8 bits. */

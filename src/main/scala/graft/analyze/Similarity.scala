@@ -61,12 +61,6 @@ object Similarity {
   def dotExact(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.dotExact(a, b)
 
-  /** Cosine via exact-decimal dot/norms (oracle-reproducible). */
-  def cosineExact(a: Column, b: Column): Column = {
-    val n = sqrt(dotExact(a, a)) * sqrt(dotExact(b, b))
-    when(n > 0, dotExact(a, b) / n).otherwise(lit(0.0))
-  }
-
   /** Distributed per-query top-k rank: two-level, so no single reducer
     * ever receives ALL of one query's candidates. A plain
     * `Window.partitionBy(query)` funnels every candidate row for a query
@@ -179,11 +173,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "cos", "rank")
   }
-
-  /** Deterministic md5-derived hyperplane weights (reproducible in any
-    * engine with md5 — see the DuckDB oracle). Delegates to LshWeights. */
-  def md5Hyperplane(bit: Int, dim: Int): Array[Double] =
-    graft.functions.LshWeights.hyperplane(bit, dim)
 
   /** Random-hyperplane LSH signature (`bits` sign bits) of a `dim`-wide
     * vector — a per-row narrow native expression; weights derived from

@@ -306,14 +306,6 @@ object TextAnalysis {
         .as("n_phones"),
       scrubPii(col(textCol)).as("scrubbed"))
 
-  /** Per-language corpus profile: doc counts + exact char stats. */
-  def languageProfile(docs: DataFrame, langCol: String, textCol: String): DataFrame =
-    docs.groupBy(col(langCol))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(length(col(textCol)).cast("long")).as("total_chars"),
-        min(length(col(textCol))).as("min_chars"),
-        max(length(col(textCol))).as("max_chars"))
-
   /** TF-IDF top terms over a corpus. Term frequency from the full token
     * stream, document frequency from per-document DISTINCT tokens; both
     * are one explode + one aggregation (classic partial-agg shapes —

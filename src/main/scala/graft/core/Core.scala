@@ -3,39 +3,18 @@ package graft.core
 import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
-/** Environment switch (reference `utils/config.py:4-31`): ENV var selects
-  * prod/preprod/dev, which keys the database name and the secret name. */
-sealed trait Environment { def dbName: String; def secretName: String }
-object Environment {
-  case object Prod extends Environment { val dbName = "martech"; val secretName = "martech" }
-  case object Dev extends Environment { val dbName = "martech_dev"; val secretName = "martech_dev" }
-  def fromEnv(v: Option[String]): Environment = v.map(_.toLowerCase) match {
-    case Some("prod") | Some("production") => Prod
-    case _ => Dev
-  }
-}
-
 /** Secret access behind a trait (reference `hooks/aws_secret_manager.py`):
-  * env/map/file implementations for tests and local runs; a cloud-SDK
-  * implementation would slot in unchanged. */
+  * a map implementation for tests and local runs, and the AWS Secrets
+  * Manager implementation below. */
 trait SecretProvider extends Serializable {
   def secret(name: String): Option[String]
 }
 class MapSecretProvider(m: Map[String, String]) extends SecretProvider {
   def secret(name: String): Option[String] = m.get(name)
 }
-class EnvSecretProvider extends SecretProvider {
-  def secret(name: String): Option[String] = sys.env.get(name)
-}
-class FileSecretProvider(dir: String) extends SecretProvider {
-  def secret(name: String): Option[String] = {
-    val p = java.nio.file.Paths.get(dir, name)
-    if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p)) else None
-  }
-}
 
-/** First-hit-wins chain: env override in front of a cloud provider is
-  * the standard deploy layering. */
+/** First-hit-wins chain: a local override in front of a cloud provider
+  * is the standard deploy layering. */
 class ChainedSecretProvider(providers: Seq[SecretProvider]) extends SecretProvider {
   def secret(name: String): Option[String] =
     providers.iterator.map(_.secret(name)).collectFirst { case Some(v) => v }
@@ -48,8 +27,8 @@ class ChainedSecretProvider(providers: Seq[SecretProvider]) extends SecretProvid
   * code path real instead of hypothetical, same treatment as the Delta
   * CDF probe in `source/ChangeFeed.scala`). `secret` resolves through
   * the v2 SDK via reflection only when the jar is present; otherwise
-  * None, so a ChainedSecretProvider falls through to env/file. `probe`
-  * and `fetch` are injectable for tests. */
+  * None, so a ChainedSecretProvider falls through to its next provider.
+  * `probe` and `fetch` are injectable for tests. */
 class AwsSecretsProvider(
     probe: () => Boolean = () => AwsSecretsProvider.available,
     fetch: String => Option[String] = AwsSecretsProvider.fetchReflective)

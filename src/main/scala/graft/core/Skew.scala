@@ -10,14 +10,6 @@ import org.apache.spark.sql.graftshim.ColumnBridge
   * small enough to replicate `salts` times but too big to broadcast. */
 object Skew {
 
-  /** Salted inner equi-join: the skewed (big) side gets a random salt in
-    * [0, salts); the small side is replicated across every salt value, so
-    * each hot key spreads over `salts` reducers. Semantically identical
-    * to big.join(small, key). */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 salts: Int): DataFrame =
-    saltedJoinBy(big, small, key, (rand(42) * salts).cast("int"), salts)
-
   /** Salted join with a CALLER-SUPPLIED salt expression for the big
     * side. The salt should be uniform over [0, salts) and independent of
     * the join key (a hot key must spread across salts — deriving the

@@ -93,14 +93,6 @@ object Dedup extends graft.core.Logging {
     latestPerKey(survivors, keys, orderBy)
   }
 
-  /** Reference-shaped join form (`clevertap.py:30-53`): per-key max
-    * timestamp, inner-join back. Kept for the equivalence spec; ties
-    * multiply (documented reference behavior). */
-  def latestPerKeyJoinForm(df: DataFrame, key: String, tsCol: String): DataFrame = {
-    val maxTs = df.groupBy(col(key)).agg(max(col(tsCol)).as(tsCol))
-    df.join(maxTs, Seq(key, tsCol))
-  }
-
   /** Exact dedup on a subset of columns, keeping the row with the smallest
     * value of `keep` (deterministic, unlike dropDuplicates). */
   def exactDedup(df: DataFrame, keys: Seq[String], keep: Column): DataFrame =

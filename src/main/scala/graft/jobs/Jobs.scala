@@ -186,8 +186,9 @@ object UserProfileJob {
 
 /** spark-submit entrypoint with the reference's `--conf-file` contract
   * (`tasks/base.py:64-80`, `conf/deployment.json:5-20`): parse the JSON
-  * conf (date macros substituted), build the destination client from the
-  * connection registry, run the job, print the result summary.
+  * conf (date macros substituted), build the CleverTap client from the
+  * conf's `base_url`, `account_id` and `passcode`, run the job, print
+  * the result summary.
   *
   *   spark-submit --class graft.jobs.UserProfileMain app.jar \
   *     --conf-file conf/user_profile/clevertap.json

@@ -7,6 +7,9 @@ import java.time.Duration
 import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.util.RawValue
+
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
@@ -116,7 +119,7 @@ class ClevertapClient(baseUrl: String, accountId: String, passcode: String,
   def deleteProfiles(identities: Seq[String],
       deleteUrl: String = "https://in1.api.clevertap.com/1/delete/profiles.json")
       : (Int, String) = {
-    val body = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+    val body = new ObjectMapper().writeValueAsString(
       java.util.Map.of("identity", java.util.List.of(identities: _*)))
     retry.run(poster.post(deleteUrl, body, headers))
   }
@@ -128,19 +131,26 @@ class ClevertapClient(baseUrl: String, accountId: String, passcode: String,
 class GamoogaClient(baseUrl: String, companyId: String, secret: String,
                     poster: HttpPoster = new JdkHttpPoster(),
                     retry: RetryPolicy = RetryPolicy()) extends Serializable {
+  // Bodies are encoded by Jackson, so a company id with `\` or quotes
+  // stays valid JSON; the caller's props JSON is embedded verbatim.
   def uploadProfiles(propsJson: String, propTypesJson: String): (Int, String) = {
-    val body = s"""{"props":$propsJson,"c":"$companyId","prop_types":$propTypesJson}"""
+    val body = GamoogaClient.json.createObjectNode()
+      .putRawValue("props", new RawValue(propsJson))
+      .put("c", companyId)
+      .putRawValue("prop_types", new RawValue(propTypesJson))
     retry.run(poster.post(s"$baseUrl/bulkvpr/",
-      body, Map("Content-Type" -> "application/json")))
+      GamoogaClient.json.writeValueAsString(body), Map("Content-Type" -> "application/json")))
   }
   def uploadEvents(payloadJson: String): (Int, String) = {
-    val jwt = GamoogaClient.jwtHs256(payloadJson, secret)
+    val body = GamoogaClient.json.createObjectNode()
+      .put("jwt", GamoogaClient.jwtHs256(payloadJson, secret))
+      .put("c", companyId)
     retry.run(poster.post(s"$baseUrl/bev/",
-      s"""{"jwt":"$jwt","c":"$companyId"}""",
-      Map("Content-Type" -> "application/json")))
+      GamoogaClient.json.writeValueAsString(body), Map("Content-Type" -> "application/json")))
   }
 }
 object GamoogaClient {
+  private val json = new ObjectMapper()
   private def b64url(bytes: Array[Byte]): String =
     java.util.Base64.getUrlEncoder.withoutPadding.encodeToString(bytes)
   /** Compact JWS: base64url(header).base64url(payload).base64url(hmac). */

@@ -132,30 +132,9 @@ object NightlyRefresh {
       .drop("__epoch", "__mx", "__del")
   }
 
-  /** Current survivor documents (plain union — docs are append-only).
-    * Columns: doc_id, text, n_chars, source, fp, sz, sh. Consumers that
-    * read one column (the fp anti-join set, the shingle fetch) rely on
-    * parquet column pruning — text never loads unless asked for. */
-  def currentDocs(spark: SparkSession, statePath: String,
-                  before: Option[Long] = None): DataFrame =
-    docsOver(spark, statePath, committedEpochs(spark, statePath, before))
-
   private def docsOver(spark: SparkSession, statePath: String,
                        epochs: Seq[Long]): DataFrame =
     spark.read.parquet(tablePaths(statePath, epochs, "docs"): _*)
-
-  /** Current id → cluster_id mapping (latest-epoch-wins; ids never die).
-    * Docs absent from the mapping are singletons (their own id). */
-  def currentLabels(spark: SparkSession, statePath: String,
-                    before: Option[Long] = None): DataFrame = {
-    val df = spark.read.parquet(
-      tablePaths(statePath, committedEpochs(spark, statePath, before),
-        "labels"): _*)
-    val w = Window.partitionBy(col("id"))
-    df.withColumn("__mx", max(col("__epoch")).over(w))
-      .filter(col("__epoch") === col("__mx"))
-      .drop("__epoch", "__mx")
-  }
 
   /** Current per-cluster state table (`agg` | `hdr` | `kmv`), resolved. */
   def currentState(spark: SparkSession, statePath: String, table: String,
@@ -193,8 +172,7 @@ object NightlyRefresh {
     * path against empty state — from-scratch init and steady ingest are
     * one code path). Epoch deltas land under
     * `statePath/epoch=<id>/{docs,grams,labels,agg,hdr,kmv,report}`;
-    * read the composed outputs through [[currentReport]] /
-    * [[currentLabels]] / [[currentDocs]]. */
+    * read the composed output through [[currentReport]]. */
   def start(deltaDocs: DataFrame, seedDocs: DataFrame, statePath: String,
             checkpointDir: String, shingleN: Int = 3,
             threshold: Double = 0.3, k: Int = 64, subBits: Int = 6,

@@ -510,8 +510,9 @@ object StreamingDedup {
     * to the FROZEN index and its drift report lands at
     * `reportPath/epoch=<id>` — driver-light like [[egressStreamToPath]]
     * (epoch-keyed overwrite makes replays idempotent); `onEpoch`
-    * receives only the per-epoch report row count. Recentering stays an
-    * offline decision fed by these reports: the index is a shipped
+    * receives only the per-epoch report row count, observed on the
+    * report write so the report is never read back. Recentering stays
+    * an offline decision fed by these reports: the index is a shipped
     * artifact, and swapping centroids mid-stream would make epoch
     * results non-replayable. Per-epoch output equals the batch
     * [[graft.analyze.Ivf.driftReport]] on the same rows (spec-pinned). */
@@ -520,11 +521,12 @@ object StreamingDedup {
                         onEpoch: (Long, Long) => Unit):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vectors.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val report = graft.analyze.Ivf.driftReport(index, batch, idCol, vecCol)
-      report.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      val rows = org.apache.spark.sql.Observation()
+      graft.analyze.Ivf.driftReport(index, batch, idCol, vecCol)
+        .observe(rows, count(lit(1)).as("rows"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$reportPath/epoch=$epochId")
-      onEpoch(epochId,
-        batch.sparkSession.read.parquet(s"$reportPath/epoch=$epochId").count())
+      onEpoch(epochId, rows.get("rows").asInstanceOf[Long])
     }
 
   /** Run a streaming query on a memory sink until all available input is

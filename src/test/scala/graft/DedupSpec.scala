@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.source.CatalogOps
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -25,7 +26,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("join form matches window form off ties; ties multiply (R11 note)") {
-    val joinForm = Dedup.latestPerKeyJoinForm(changelog, "customer_id", "_commit_timestamp")
+    val joinForm = CatalogOps.latestChangesSql(spark, changelog, "customer_id", "_commit_timestamp")
     // key 2 has a timestamp tie: join form keeps BOTH rows (reference behavior)
     assert(joinForm.filter($"customer_id" === 2L).count() == 2)
     // off-tie keys agree with the window form

@@ -726,15 +726,24 @@ class ExtraSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("drift_stream").toString
     val epochs = scala.collection.mutable.Map.empty[Long, Long]
     val mem = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingDedup.driftReportStream(index,
-        mem.toDF().toDF("id", "v"), "id", "v", dir,
-        (e, n) => epochs(e) = n)
-      .outputMode("update").start()
-    try {
-      mem.addData(batch1: _*); q.processAllAvailable()
-      mem.addData(batch2: _*); q.processAllAvailable()
-    } finally q.stop()
+    val (_, _, plans) = recordRun {
+      val q = StreamingDedup.driftReportStream(index,
+          mem.toDF().toDF("id", "v"), "id", "v", dir,
+          (e, n) => epochs(e) = n)
+        .outputMode("update").start()
+      try {
+        mem.addData(batch1: _*); q.processAllAvailable()
+        mem.addData(batch2: _*); q.processAllAvailable()
+      } finally q.stop()
+    }
     assert(epochs.values.forall(_ == 4)) // one row per cell, every epoch
+    // the per-epoch count is observed on the report write, never re-read
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val reportScans = plans.flatMap(p => helper.collectWithSubqueries(p) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s })
+      .filter(_.relation.location.rootPaths.exists(_.toString.contains(dir)))
+    assert(plans.size >= 2, s"the two report writes were not recorded: $plans")
+    assert(reportScans.isEmpty, s"epoch reports read back: $reportScans")
     // each epoch's written report equals the batch twin on the same rows
     for ((epoch, batch) <- Seq((0L, batch1), (1L, batch2))) {
       val streamed = spark.read.parquet(s"$dir/epoch=$epoch")

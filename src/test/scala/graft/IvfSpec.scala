@@ -189,13 +189,8 @@ class IvfSpec extends SparkSpec {
     }
   }
 
-  test("salted join equals plain join; hot keys diagnosed") {
+  test("hot keys diagnosed: only the key over minCount") {
     val big = (1 to 1000).map(i => (if (i % 10 == 0) 1L else i.toLong, i)).toDF("k", "v")
-    val small = Seq((1L, "hot"), (2L, "a"), (30L, "b")).toDF("k", "name")
-    val plain = big.join(small, "k").select("k", "v", "name").collect().toSet
-    val salted = Skew.saltedJoin(big, small, "k", salts = 8)
-      .select("k", "v", "name").collect().toSet
-    assert(salted == plain)
     val hot = Skew.hotKeys(big, "k", minCount = 50).as[(Long, Long)].collect()
     assert(hot.map(_._1).toSeq == Seq(1L))
   }

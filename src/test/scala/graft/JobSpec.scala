@@ -316,45 +316,6 @@ class JobSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** Runs `body` and returns its value with the number of Spark jobs it
-    * launched and the executed plans of its queries. A marker job drains
-    * the listener bus: both listeners sit on the shared queue, so once the
-    * marker's start is delivered every earlier event has been too. */
-  private def recordRun[T](body: => T)
-      : (T, Int, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val marker = s"drain-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val plans = new CopyOnWriteArrayList[org.apache.spark.sql.execution.SparkPlan]()
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).contains(marker))
-          drained.countDown()
-        else jobs.incrementAndGet()
-    }
-    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.sparkContext.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    try {
-      val out = body
-      spark.sparkContext.setJobGroup(marker, "listener drain")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get, plans.toArray.map(_.asInstanceOf[org.apache.spark.sql.execution.SparkPlan]).toSeq)
-    } finally {
-      spark.listenerManager.unregister(planListener)
-      spark.sparkContext.removeSparkListener(jobListener)
-    }
-  }
-
   test("UserProfileJob run is one egress action: ≤6 jobs, no cache, no results read-back") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec

@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** One session factory: every local entry point builds its SparkSession
   * through [[Session.builder]], so the session Verify checks is the one
   * Bench times and the one the specs run on. The probe entry points only
-  * name registered queries. */
+  * name registered queries, and every `src/main` declaration is reached
+  * from an entry point or allowlisted with a reason. */
 class SessionSpec extends SparkSpec {
 
   private val root = Paths.get("src/main/scala")
@@ -39,6 +41,106 @@ class SessionSpec extends SparkSpec {
       val n = jobs.map(_.sliding(call.length).count(_ == call)).sum
       assert(n == 1, s"$call appears $n times in graft/jobs: build it in UserProfileJob.withPrepared")
     }
+  }
+
+  /** A top-level type (column 0) of a `src/main` file, or one of its
+    * direct members (column 2), with the code lines of its body; a type
+    * also sees its file's package and import lines. */
+  private final class Decl(val file: Path, val owner: Option[Decl],
+                           val imports: collection.Seq[String],
+                           val mods: String, val kind: String, val name: String) {
+    val body = mutable.ListBuffer.empty[String]
+    val members = mutable.ListBuffer.empty[Decl]
+    def isPrivate: Boolean = mods.contains("private") || owner.exists(_.isPrivate)
+    def key: String = {
+      val graft = root.resolve("graft")
+      val rel = if (file.startsWith(graft)) graft.relativize(file) else root.relativize(file)
+      s"$rel#${owner.fold(name)(o => s"${o.name}.$name")}"
+    }
+  }
+
+  private val declLine = ("""^( {0,2})(?:@\w+(?:\([^)]*\))?\s+)*((?:(?:private|protected)""" +
+    """(?:\[\w+\])?\s+|(?:override|implicit|final|sealed|abstract|case|lazy)\s+)*)""" +
+    """(def|val|var|object|class|trait)\s+(\w+)""").r
+
+  /** The top-level types of `p`. A type's body is every line outside its
+    * members; a member's body runs to the next line at column ≤ 2 that
+    * does not close it. Lines inside a triple-quoted string continue the
+    * declaration they sit in. */
+  private def decls(p: Path): Seq[Decl] = {
+    val imports = mutable.ListBuffer.empty[String]
+    val tops = mutable.ListBuffer.empty[Decl]
+    var member: Option[Decl] = None
+    var inString = false
+    for (l <- code(p) if l.trim.nonEmpty) {
+      val continued = inString
+      if ("\"\"\"".r.findAllIn(l).size % 2 == 1) inString = !inString
+      val indent = l.takeWhile(_ == ' ').length
+      val closing = l.trim.startsWith("}") || l.trim.startsWith(")")
+      def current = member.orElse(tops.lastOption)
+      declLine.findFirstMatchIn(l) match {
+        case _ if continued => current.fold(imports)(_.body) += l
+        case Some(m) if indent == 0 =>
+          val t = new Decl(p, None, imports, m.group(2), m.group(3), m.group(4))
+          t.body += l; tops += t; member = None
+        case _ if indent == 0 && (l.startsWith("package") || l.startsWith("import")) => imports += l
+        case Some(m) if indent == 2 && tops.nonEmpty =>
+          val d = new Decl(p, tops.lastOption, Nil, m.group(2), m.group(3), m.group(4))
+          d.body += l; tops.last.members += d; member = Some(d)
+        case _ if indent <= 2 && !closing => member = None; current.fold(imports)(_.body) += l
+        case _ => current.fold(imports)(_.body) += l
+      }
+    }
+    tops.toList
+  }
+
+  test("every src/main declaration is reached from an entry point or allowlisted with a reason") {
+    // roots: the mains, the query registry, the jobs, the session
+    // extensions, and the benchmark harness that compiles against src/main
+    val tops = scalaFiles(root).flatMap(decls)
+    val perfbench = scalaFiles(Paths.get("perfbench/src"))
+    def isRoot(t: Decl): Boolean =
+      t.file.startsWith(root.resolve("graft/jobs")) ||
+        t.file == root.resolve("graft/SparkEntry.scala") || t.name == "GraftExtensions" ||
+        t.members.exists(m => m.kind == "def" && m.name == "main")
+    assert(tops.count(isRoot) >= 6 && perfbench.nonEmpty,
+      s"roots not found from ${Paths.get("").toAbsolutePath}")
+
+    // fixed point over simple names: a declaration is reached when its name
+    // appears in reached code; a member also needs its type reached, and an
+    // override or implicit member is reached with its type
+    val ident = """[A-Za-z_]\w*""".r
+    val names = mutable.Set.empty[String]
+    def see(lines: Seq[String]): Unit = lines.foreach(names ++= ident.findAllIn(_))
+    perfbench.foreach(p => see(code(p)))
+    val reached = mutable.Set.empty[Decl]
+    var grew = true
+    while (grew) {
+      grew = false
+      for (t <- tops if isRoot(t) || names(t.name)) {
+        if (reached.add(t)) { see(t.imports.toList); see(t.body.toList); grew = true }
+        for (m <- t.members if isRoot(t) || names(m.name) ||
+            m.mods.contains("override") || m.mods.contains("implicit"))
+          if (reached.add(m)) { see(m.body.toList); grew = true }
+      }
+    }
+    val unreached = tops.flatMap(t => t +: t.members)
+      .filterNot(d => reached(d) || d.isPrivate).map(_.key).distinct
+
+    val allowFile = Paths.get("tools/reachability_allowlist.txt")
+    val entries = Files.readAllLines(allowFile).asScala.toSeq
+      .filterNot(l => l.trim.isEmpty || l.startsWith("#"))
+    val (reasoned, bare) = entries.partition(_.trim.split("\\s+", 2).length == 2)
+    assert(bare.isEmpty, bare.mkString(s"$allowFile entries without a reason: ", ", ", ""))
+    val allowed = reasoned.map(_.trim.split("\\s+", 2).head)
+    // multiset differences: a second line for one name is stale too
+    val stale = allowed.diff(unreached)
+    assert(stale.isEmpty, stale.mkString(
+      s"$allowFile names what is now reached or gone; delete the line: ", ", ", ""))
+    val dead = unreached.diff(allowed)
+    assert(dead.isEmpty, dead.mkString("reached by no main, SparkEntry query, job, " +
+      s"GraftExtensions or perfbench: delete it, or add `<path>#<name>  <reason>` to $allowFile: ",
+      ", ", ""))
   }
 
   test("the shared test session carries the factory's settings") {

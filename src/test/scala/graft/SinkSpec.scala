@@ -305,13 +305,28 @@ class SinkSpec extends SparkSpec {
   test("Netcore notify URL carries apikey/path; Gamooga events POST jwt") {
     withServer { (url, bodies) =>
       new NetcoreClient(url, "k1", "me@x.com").notifyUpload("https://b.s3/x.csv", Some("7"))
-      new GamoogaClient(url, "c9", "sec").uploadEvents("""{"e":1}""")
+      // a quote and a backslash in the company id must survive as JSON
+      val company = "c9\"q\\b"
+      val gamooga = new GamoogaClient(url, company, "sec")
+      gamooga.uploadEvents("""{"e":1}""")
+      gamooga.uploadProfiles("""{"u1":{"n":"a"}}""", """{"n":"str"}""")
       val all = bodies.toArray.map(_.toString)
       // query params are percent-encoded (the staged URL's "://" and "/"
       // would otherwise misparse server-side)
       assert(all.exists(b => b.contains("apikey=k1") && b.contains("listid=7")
         && b.contains("path=https%3A%2F%2Fb.s3%2Fx.csv")))
-      assert(all.exists(b => b.contains("/bev/") && b.contains("\"c\":\"c9\"")))
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      def body(path: String) = {
+        val b = all.find(_.startsWith(path)).get
+        json.readTree(b.substring(b.indexOf('\n') + 1))
+      }
+      val events = body("/bev/")
+      assert(events.get("c").asText == company)
+      assert(events.get("jwt").asText == GamoogaClient.jwtHs256("""{"e":1}""", "sec"))
+      val profiles = body("/bulkvpr/")
+      assert(profiles.get("c").asText == company)
+      assert(profiles.get("props") == json.readTree("""{"u1":{"n":"a"}}"""))
+      assert(profiles.get("prop_types") == json.readTree("""{"n":"str"}"""))
     }
   }
 
