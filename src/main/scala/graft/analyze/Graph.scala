@@ -53,19 +53,11 @@ object GraphOps {
     * bookmark. Returns (node, rank_fp, rank) — `rank_fp` is the exact
     * fixed-point long; `rank` its double rendering (same division in
     * any replaying engine).
-    *
-    * `tolFp`: optional early stop — when the exact L1 iterate delta
-    * (Σ|Δrank_fp|, an integer) drops to ≤ tolFp, remaining iterations
-    * are skipped. Because the delta is integer-exact the stopping
-    * decision is itself deterministic (a double-residual test could
-    * flip on partitioning); the fixed-`iterations` form stays the
-    * oracle-replayable contract.
     */
   def pageRankFixedPoint(nodes: DataFrame, edges: DataFrame,
                          iterations: Int, dampingNum: Long = 85L,
-                         scale: Long = 1000000000000L,
-                         tolFp: Option[Long] = None): DataFrame =
-    prImpl(nodes, edges, iterations, dampingNum, scale, tolFp, None)
+                         scale: Long = 1000000000000L): DataFrame =
+    prImpl(nodes, edges, iterations, dampingNum, scale, None)
 
   /** Personalized PageRank (TrustRank-shaped): teleport mass lands ONLY
     * on the `seeds` node set — scores measure proximity to trusted
@@ -78,9 +70,8 @@ object GraphOps {
   def personalizedPageRank(nodes: DataFrame, edges: DataFrame,
                            seeds: DataFrame, iterations: Int,
                            dampingNum: Long = 85L,
-                           scale: Long = 1000000000000L,
-                           tolFp: Option[Long] = None): DataFrame =
-    prImpl(nodes, edges, iterations, dampingNum, scale, tolFp, Some(seeds))
+                           scale: Long = 1000000000000L): DataFrame =
+    prImpl(nodes, edges, iterations, dampingNum, scale, Some(seeds))
 
   /** Host-level link-graph extraction — the step that PRODUCES the
     * (src, dst, w) edge relation the rank operators above consume from
@@ -245,7 +236,7 @@ object GraphOps {
 
   private def prImpl(nodes: DataFrame, edges: DataFrame,
                      iterations: Int, dampingNum: Long,
-                     scale: Long, tolFp: Option[Long],
+                     scale: Long,
                      teleport: Option[DataFrame]): DataFrame = {
     require(iterations >= 0 && dampingNum >= 0 && dampingNum <= 100 &&
       scale > 0, "bad pageRank parameters")
@@ -313,11 +304,9 @@ object GraphOps {
     var (ranks, dangOf) = observed(n.select(col("node"), col("__d"),
       (col("__t") * idiv(lit(scale), lit(tCount))).as("rank_fp")))
     var iter = 0
-    var converged = false
-    while (iter < iterations && !converged) {
-      val prev = ranks
+    while (iter < iterations) {
       val dangling = dangOf()
-      val inSums = prev.join(edgesIter, prev("node") === edgesIter("src"))
+      val inSums = ranks.join(edgesIter, ranks("node") === edgesIter("src"))
         .groupBy(col("dst"))
         .agg(sum(idiv(col("rank_fp") * col("w"), col("ow"))).as("in_sum"))
       val next = observed(nIter.join(inSums, nIter("node") === inSums("dst"), "left")
@@ -329,13 +318,6 @@ object GraphOps {
               lit(100L))).as("rank_fp")))
       ranks = next._1
       dangOf = next._2
-      tolFp.foreach { tol =>
-        val delta = prev.select(col("node"), col("rank_fp").as("__r0"))
-          .join(ranks.select(col("node"), col("rank_fp").as("__r1")), "node")
-          .agg(coalesce(sum(abs(col("__r0") - col("__r1"))), lit(0L)))
-          .head().getLong(0)
-        if (delta <= tol) converged = true
-      }
       iter += 1
     }
     val out = ranks.select(col("node"),

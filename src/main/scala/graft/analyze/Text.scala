@@ -310,14 +310,11 @@ object TextAnalysis {
     * stream, document frequency from per-document DISTINCT tokens; both
     * are one explode + one aggregation (classic partial-agg shapes —
     * map-side combine keeps the shuffle proportional to distinct terms,
-    * not token volume). `damping = "ratio"` scores tf·N/df with exact
-    * integer inputs and one IEEE division — bitwise-reproducible across
-    * engines (the oracle-gated form); `"log"` applies the textbook
-    * ln-damped idf (transcendental — libm results differ across engines,
-    * so it is spec-gated, not oracle-gated). Deterministic top-k by
-    * (score desc, term asc). */
+    * not token volume). The score is tf·N/df with exact integer inputs
+    * and one IEEE division — bitwise-reproducible across engines, so it
+    * is oracle-gated. Deterministic top-k by (score desc, term asc). */
   def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int, damping: String = "ratio"): DataFrame = {
+                    k: Int): DataFrame = {
     val toks = docs.select(col(idCol).as("id"),
       explode(tokens(lower(col(textCol)))).as("term"))
       .filter(length(col("term")) > 0)
@@ -327,17 +324,10 @@ object TextAnalysis {
     val tf = toks.groupBy("term").agg(count(lit(1)).as("tf"))
     val df_ = toks.distinct().groupBy("term").agg(count(lit(1)).as("df"))
     val scored = tf.join(df_, "term").crossJoin(nDocs)
-      .withColumn("score", damping match {
-        // double-first arithmetic: tf·N can overflow long at corpus scale
-        case "ratio" =>
-          (col("tf").cast("double") * col("n_docs").cast("double")) /
-            col("df").cast("double")
-        case "log" =>
-          col("tf").cast("double") *
-            log(col("n_docs").cast("double") / col("df").cast("double"))
-        case other => throw new IllegalArgumentException(
-          s"damping must be 'ratio' or 'log', got '$other'")
-      })
+      // double-first arithmetic: tf·N can overflow long at corpus scale
+      .withColumn("score",
+        (col("tf").cast("double") * col("n_docs").cast("double")) /
+          col("df").cast("double"))
     import org.apache.spark.sql.expressions.Window
     // distributed top-k (TakeOrderedAndProject), THEN rank the k rows —
     // never a global row_number over the whole vocabulary
@@ -880,27 +870,16 @@ object TextAnalysis {
     * quantity the batching exists to cut (serial = one round per merge;
     * prefix batching = one round per disjoint prefix).
     *
-    * `strict = true` (default) is the provably-serial-equal prefix rule.
-    * Measured bound (SCALE.md): the prefix stops at the FIRST symbol
-    * conflict, and the top of a natural pair table is dominated by a few
-    * hot symbols, so batches average ~3–4 merges regardless of batchCap
+    * Batches follow the provably-serial-equal prefix rule. Measured
+    * bound (SCALE.md): the prefix stops at the FIRST symbol conflict,
+    * and the top of a natural pair table is dominated by a few hot
+    * symbols, so batches average ~3–4 merges regardless of batchCap
     * (50k-word Zipf corpus: 1000 merges / 297 rounds). That bound is
     * inherent — skipping a conflicted pair and continuing is NOT
     * serial-equal (the skipped pair may still outrank later picks after
-    * the batch applies; see the batching-rule scaladoc above).
-    *
-    * `strict = false` is the standard distributed-BPE compromise for
-    * real vocab sizes: scan the same total order, SKIP conflicted pairs,
-    * and keep selecting disjoint ones up to batchCap. Still fully
-    * deterministic (same corpus → same model), and every selected pair
-    * is frequency-justified against the same snapshot; but commuting
-    * merges may apply in a different order than one-at-a-time training,
-    * so the MODEL can differ from serial around conflicts. Use it when
-    * round count (≈ nMerges/batchCap Spark jobs instead of ≈ nMerges/3)
-    * matters more than bit-equality to a serial trainer. */
+    * the batch applies; see the batching-rule scaladoc above). */
   def bpeTrainWithStats(docs: DataFrame, textCol: String, nMerges: Int,
-                        batchCap: Int = 64,
-                        strict: Boolean = true): (Seq[(String, String)], Int) = {
+                        batchCap: Int = 64): (Seq[(String, String)], Int) = {
     import java.util.regex.Matcher
     require(nMerges >= 0, s"nMerges must be >= 0; got $nMerges")
     require(batchCap >= 1, s"batchCap must be >= 1; got $batchCap")
@@ -916,9 +895,6 @@ object TextAnalysis {
     var rounds = 0
     while (merges.length < nMerges && !exhausted) {
       val take = math.min(batchCap, nMerges - merges.length)
-      // non-strict scans past conflicts, so fetch extra candidates to
-      // fill the batch after skips (still a metadata-sized collect)
-      val fetch = if (strict) take else take * 4
       val tail = greatest(size(col("s")) - 1, lit(0))
       val top = words.withColumn("s", split(col("syms"), " "))
         .select(col("cnt"), explode(zip_with(
@@ -927,34 +903,20 @@ object TextAnalysis {
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))
         .agg(sum(col("cnt")).as("n"))
         .orderBy(col("n").desc, col("l").asc, col("r").asc)
-        .limit(fetch).collect()
+        .limit(take).collect()
       if (top.isEmpty) exhausted = true
       else {
         rounds += 1
         val used = scala.collection.mutable.HashSet.empty[String]
         val pairs = top.iterator.map(row => (row.getString(0), row.getString(1)))
-        val selected =
-          if (strict)
-            // longest pairwise-disjoint PREFIX: stop at the first conflict
-            // (the head never conflicts, so every round advances >= 1
-            // merge; a self-pair (a,a) just claims its one symbol)
-            pairs.takeWhile { case (l, r) =>
-              val ok = !used.contains(l) && !used.contains(r)
-              if (ok) { used += l; used += r }
-              ok
-            }.toSeq
-          else {
-            // skip-and-continue: same total order, conflicted pairs are
-            // skipped instead of stopping the batch (deterministic;
-            // commuting merges may reorder vs serial — see scaladoc)
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-            pairs.foreach { case (l, r) =>
-              if (buf.length < take && !used.contains(l) && !used.contains(r)) {
-                used += l; used += r; buf += ((l, r))
-              }
-            }
-            buf.toSeq
-          }
+        // longest pairwise-disjoint PREFIX: stop at the first conflict
+        // (the head never conflicts, so every round advances >= 1
+        // merge; a self-pair (a,a) just claims its one symbol)
+        val selected = pairs.takeWhile { case (l, r) =>
+          val ok = !used.contains(l) && !used.contains(r)
+          if (ok) { used += l; used += r }
+          ok
+        }.toSeq
         merges ++= selected
         val rewritten = selected.foldLeft(col("syms")) { case (e, (l, r)) =>
           regexp_replace(e, mergePattern(l, r), Matcher.quoteReplacement(l + r))

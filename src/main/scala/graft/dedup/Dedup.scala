@@ -360,8 +360,7 @@ object Dedup extends graft.core.Logging {
     * dedup step (re-encodes, resizes, and small edits of the same image
     * survive byte-level exact dedup): decode each blob to a pooled
     * grayscale raster, compute a 64-bit perceptual hash
-    * ([[graft.multimodal.MultiModal.dHash64]] gradient-sign by default,
-    * `hashKind = "ahash"` for the mean-threshold variant), then find
+    * ([[graft.multimodal.MultiModal.dHash64]] gradient-sign), then find
     * Hamming-radius pairs with the SAME chunk-blocking machinery the text
     * simhash family uses ([[hammingPairsFromSigs]]): exact by pigeonhole
     * at `nChunks = maxHamming + 1` (the default), banded-approximate for
@@ -372,8 +371,7 @@ object Dedup extends graft.core.Logging {
     * after shuffles 16-byte (id, chunk-key) rows — image bytes never
     * shuffle. Returns (id_a, id_b, hamming), id_a < id_b. */
   def imageNearDups(media: DataFrame, idCol: String, bytesCol: String,
-                    maxHamming: Int = 4, hashKind: String = "dhash",
-                    nChunks: Int = 0): DataFrame = {
+                    maxHamming: Int = 4, nChunks: Int = 0): DataFrame = {
     val chunks = if (nChunks == 0) maxHamming + 1 else nChunks
     // materialize the 16-byte signature table: both self-join sides of
     // the chunk blocking read it, and the subtree ABOVE it (blob decode
@@ -381,7 +379,7 @@ object Dedup extends graft.core.Logging {
     // not once per side. Cheap for text simhash (left lazy there);
     // decisive when the signature pass decodes media bytes.
     val sigs = graft.multimodal.MultiModal
-      .perceptualHashes(media, idCol, bytesCol, hashKind)
+      .perceptualHashes(media, idCol, bytesCol)
       .localCheckpoint(true)
     hammingPairsFromSigs(sigs, maxHamming, chunks)
   }
@@ -466,13 +464,12 @@ object Dedup extends graft.core.Logging {
     * do. Returns (id_a, id_b, hamming), id_a < id_b, hamming = min over
     * matching roles. */
   def videoNearDups(media: DataFrame, idCol: String, bytesCol: String,
-                    maxHamming: Int = 4, hashKind: String = "dhash",
-                    nChunks: Int = 0): DataFrame = {
+                    maxHamming: Int = 4, nChunks: Int = 0): DataFrame = {
     val chunks = if (nChunks == 0) maxHamming + 1 else nChunks
     // materialized for the same reason as imageNearDups (decode once;
     // video decodes three probe frames per blob)
     val sigs = graft.multimodal.MultiModal
-      .videoPerceptualHashes(media, idCol, bytesCol, hashKind)
+      .videoPerceptualHashes(media, idCol, bytesCol)
       .localCheckpoint(true)
     hammingPairsFromRoledSigs(sigs, maxHamming, chunks)
   }
@@ -529,9 +526,7 @@ object Dedup extends graft.core.Logging {
     * run after three leaked q63 rounds vs 3.7s isolated, sf0.1).
     * `localCheckpoint` truncates to a LogicalRDD with no cache-manager
     * footprint, and the blocks free via the ContextCleaner as soon as
-    * the round's RDD is unreferenced. Set `reliable = true` (with
-    * `sc.setCheckpointDir`) on a real cluster where executor loss must
-    * not kill the lineage-truncated rounds.
+    * the round's RDD is unreferenced.
     *
     * Round-structure experiments, MEASURED at sf0.1 (47-cluster near-dup
     * graph, 5 rounds, local[32]) and kept single-hop on the evidence:
@@ -542,33 +537,22 @@ object Dedup extends graft.core.Logging {
     * Per-round fixed cost is real but the single join+agg round is the
     * cheapest shape that keeps lineage O(1).
     *
-    * Edge/label co-partitioning: `copartitionEdges = Some(n)` pins the
-    * cached edge side to hashpartitioning(dst, n) so label joins read it
-    * exchange-free — the right call when labels are too big for AQE to
-    * broadcast (true cluster scale). It is OFF by default because it was
-    * MEASURED to regress at bench scale: with a broadcastable label side
-    * AQE never shuffles edges at all, so the upfront repartition is pure
-    * added cost (sf0.1: 3.7s → 5.6s). For HIGH-DIAMETER graphs use
-    * [[connectedComponentsStar]] (large-star/small-star, rounds
-    * independent of diameter — A/B'd in SCALE.md `cc_ab`: it wins on
-    * trees/chains, loses on the shallow hub-heavy graphs dedup pair
-    * sets actually are, so THIS form stays the gated default). */
+    * THROWS when `maxIter` rounds end before the labels stop changing:
+    * partially-propagated labels are structurally valid rows whose
+    * clusters may still be split, so returning them would be silently
+    * wrong. Rounds ≈ graph diameter, so raise `maxIter` for long
+    * chains. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
-                          copartitionEdges: Option[Int] = None,
-                          reliable: Boolean = false,
-                          onConverge: Int => Unit = _ => (),
-                          requireConverged: Boolean = false): DataFrame = {
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
+                          onConverge: Int => Unit = _ => ()): DataFrame = {
+    def materialize(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
     // The union below references `pairs` twice; for an expensive pair
     // pipeline (PPJoin candidate generation) only the shuffle exchanges
     // are reused across the two branches — the joins above them would
     // execute twice. Materialize the (tiny, two-id-column) pair set once.
     val pairRows = materialize(pairs.select(col(aCol).as("a"), col(bCol).as("b")))
-    val rawEdges = pairRows.select(col("a").as("src"), col("b").as("dst"))
+    val edges = pairRows.select(col("a").as("src"), col("b").as("dst"))
       .union(pairRows.select(col("b").as("src"), col("a").as("dst")))
-    val edges = copartitionEdges.fold(rawEdges)(n => rawEdges.repartition(n, col("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     /** One propagation hop: label := min(label, min over in-neighbors).
@@ -632,129 +616,12 @@ object Dedup extends graft.core.Logging {
       // the result is already materialized (checkpointed, O(1)-plan);
       // never collected — clusters can be huge. Checkpoint blocks free
       // via the ContextCleaner once each round's RDD is unreferenced.
-      // Without requireConverged a maxIter-exhausted run returns
-      // partially-propagated labels — structurally valid rows (one per
-      // node) whose clusters may still be split; callers for whom a
-      // split cluster is silently wrong (incrementalComponents) opt
-      // into the loud failure.
-      require(!requireConverged || converged,
+      require(converged,
         s"connectedComponents did not converge in $maxIter rounds " +
-          "(label propagation needs ~1 round per diameter hop); raise " +
-          "maxIter or use connectedComponentsStar for long-diameter graphs")
+          "(label propagation needs ~1 round per diameter hop); raise maxIter")
       onConverge(i)
       labels.select(col("id"), col("label").as("cluster_id"))
     } finally edges.unpersist(blocking = false)
-  }
-
-  /** Connected components by LARGE-STAR / SMALL-STAR edge rewriting
-    * (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
-    * Components in MapReduce and Beyond", SoCC'14): instead of
-    * propagating labels one hop per round (rounds = graph diameter),
-    * each round REWRITES the edge set toward the fixed point where
-    * every component is a star rooted at its min id —
-    *
-    *   large-star(u): every neighbor v > u re-attaches to
-    *                  m = min(Γ(u) ∪ {u})
-    *   small-star(u): every smaller neighbor (and u itself)
-    *                  re-attaches to m = min of that set
-    *
-    * — converging in O(log² n) rounds independent of diameter. Same
-    * output contract as [[connectedComponents]] (cluster_id = min id
-    * of the component; nodes appearing in `pairs` only — including
-    * nodes whose only pairs are self-loops, emitted as self-labeled
-    * singletons), same materialize-per-round lineage discipline.
-    * THROWS on non-convergence within `maxIter`: unlike min-label's
-    * partially-propagated (but structurally valid) labels, the star
-    * extraction below reads roots off a fixed-point edge set — on a
-    * non-converged set a node can still appear as `u` in multiple
-    * edges, yielding duplicate ids with conflicting cluster_ids, so
-    * returning it would be silently wrong. Edges stay canonical
-    * (bigger id first) through both rewrites by construction
-    * (everything re-attaches to a strictly smaller min).
-    *
-    * A/B status (SCALE.md `cc_ab`, measured): WINS on high-diameter
-    * graphs — rounds stay flat where min-label pays one round per
-    * diameter hop — and LOSES on the shallow hub-heavy graphs dedup
-    * and identity-stitching actually produce (each star round runs
-    * two groupBy-rewrites where min-label runs one join+agg, and at
-    * diameter ≤ ~6 the round count difference can't repay it). Kept as
-    * the explicit long-diameter escape hatch the min-label scaladoc
-    * has always pointed at; the gated operators stay on min-label. */
-  def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
-                              maxIter: Int = 64,
-                              reliable: Boolean = false,
-                              onConverge: Int => Unit = _ => ()): DataFrame = {
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    val dec = "decimal(38,0)"
-    val rawPairs = materialize(
-      pairs.select(col(aCol).as("a"), col(bCol).as("b")))
-    // canonical (u > v), self-loops dropped from the EDGE set (they
-    // carry no connectivity) but their endpoints kept aside: a node
-    // whose only pairs are self-loops is still a node, and the
-    // contract emits it as a self-labeled singleton
-    var edges = materialize(rawPairs
-      .filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-      .distinct())
-    def checksum(e: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("u"), col("v")).cast(dec)),
-          lit(0L).cast(dec))).head()
-      (r.getLong(0), r.getDecimal(1))
-    }
-    def largeStar(e: DataFrame): DataFrame = {
-      val adj = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = adj.groupBy(col("u")).agg(min(col("v")).as("__vmin"))
-        .select(col("u"), least(col("__vmin"), col("u")).as("__m"))
-      adj.join(m, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("__m").as("v"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      // canonical edges are already keyed by the larger endpoint
-      val m = e.groupBy(col("u")).agg(min(col("v")).as("__m"))
-      val amongSmall = e.join(m, Seq("u"))
-        .filter(col("v") =!= col("__m"))
-        .select(col("v").as("u"), col("__m").as("v"))
-      amongSmall.union(m.select(col("u"), col("__m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-    var cs = checksum(edges)
-    var i = 0
-    var converged = false
-    while (!converged && i < maxIter) {
-      val next = materialize(smallStar(largeStar(edges)))
-      val ns = checksum(next)
-      converged = ns == cs
-      edges = next
-      cs = ns
-      i += 1
-    }
-    require(converged, s"connectedComponentsStar did not converge in " +
-      s"$maxIter rounds — the star extraction is structurally invalid " +
-      "on a non-fixed-point edge set (duplicate ids with conflicting " +
-      "cluster_ids); raise maxIter or use connectedComponents")
-    onConverge(i)
-    // fixed point = stars: children point at roots; roots self-label
-    val children = edges.select(col("u").as("id"), col("v").as("cluster_id"))
-    val roots = edges.select(col("v").as("id")).distinct()
-      .join(children.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("cluster_id"))
-    val connected = children.union(roots)
-    // self-loop-only nodes: endpoints of (a = b) pairs never seen in
-    // a real edge — restore as singletons (contract parity with
-    // connectedComponents, which keeps them via its src-node spine)
-    val selfOnly = rawPairs.filter(col("a") === col("b"))
-      .select(col("a").as("id")).distinct()
-      .join(connected.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("cluster_id"))
-    materialize(connected.union(selfOnly))
   }
 
   /** INCREMENTAL connected components — the nightly identity-stitching
@@ -773,12 +640,11 @@ object Dedup extends graft.core.Logging {
     * each star contributes diameter ≤ 2, so rounds scale with the
     * longest CHAIN of old components the delta bridges (a delta
     * daisy-chaining c components costs ~3c hops), NOT with how deep
-    * the original graph was before it collapsed to stars. The
-    * propagation runs with `requireConverged = true`: a delta that
+    * the original graph was before it collapsed to stars. A delta that
     * chains more components than `maxIter` rounds can close fails
-    * loudly (raise maxIter — rounds are |labels|-scale cheap — or run
-    * the pathological batch through [[connectedComponentsStar]])
-    * instead of returning silently split clusters.
+    * loudly, as [[connectedComponents]] does (raise maxIter — rounds
+    * are |labels|-scale cheap) instead of returning silently split
+    * clusters.
     *
     * New nodes appearing only in `deltaPairs` join as usual; stored
     * singletons (label = own id) are preserved if passed in, or may be
@@ -798,7 +664,7 @@ object Dedup extends graft.core.Logging {
     val delta = deltaPairs.select(col(aCol).as("__a"), col(bCol).as("__b"))
     val merged = connectedComponents(
       starEdges.union(delta), "__a", "__b", maxIter = maxIter,
-      onConverge = onConverge, requireConverged = true)
+      onConverge = onConverge)
     // stored singletons untouched by the delta have no edge rows in the
     // union — restore them explicitly (they ARE state, unlike the
     // batch form's never-seen nodes)

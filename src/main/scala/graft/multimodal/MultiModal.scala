@@ -175,40 +175,18 @@ object MultiModal {
     sig
   }
 
-  /** 64-bit average hash (aHash): pool to 8×8, bit = 1 iff the cell
-    * exceeds the global mean (exact integer comparison p·64 > Σp — no
-    * division rounding). Cruder than dHash (global-brightness sensitive)
-    * but cheaper and the standard second opinion. */
-  def aHash64(bytes: Array[Byte]): Long = {
-    val (w, h, px) = grayRaster(bytes)
-    val p = poolGray(w, h, px, 8, 8)
-    var sum = 0L
-    var i = 0
-    while (i < 64) { sum += p(i); i += 1 }
-    var sig = 0L
-    i = 0
-    while (i < 64) { if (p(i) * 64L > sum) sig |= 1L << i; i += 1 }
-    sig
-  }
-
   /** Perceptual-hash pass over a media table: (id, sig) with one decode +
     * hash per blob, partition-local (the mapPartitions shape — image
     * bytes never leave their input partition; only 16-byte (id, sig)
-    * rows flow on). `hashKind`: "dhash" (default) or "ahash". */
-  def perceptualHashes(media: DataFrame, idCol: String, bytesCol: String,
-                       hashKind: String = "dhash"): DataFrame = {
-    val hashFn: Array[Byte] => Long = hashKind match {
-      case "dhash" => dHash64
-      case "ahash" => aHash64
-      case other => throw new IllegalArgumentException(
-        s"hashKind must be 'dhash' or 'ahash'; got '$other'")
-    }
+    * rows flow on); the hash is [[dHash64]]. */
+  def perceptualHashes(media: DataFrame, idCol: String,
+                       bytesCol: String): DataFrame = {
     val spark = media.sparkSession
     val outSchema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("sig", LongType, nullable = false)))
     val rdd = media.select(idCol, bytesCol).rdd.mapPartitions { it =>
-      it.map(r => Row(r.getLong(0), hashFn(r.getAs[Array[Byte]](1))))
+      it.map(r => Row(r.getLong(0), dHash64(r.getAs[Array[Byte]](1))))
     }
     spark.createDataFrame(rdd, outSchema)
   }
@@ -830,14 +808,7 @@ object MultiModal {
     * by the largest blob); only 24-byte (id, role, sig) rows flow on,
     * video bytes never shuffle. */
   def videoPerceptualHashes(media: DataFrame, idCol: String,
-                            bytesCol: String,
-                            hashKind: String = "dhash"): DataFrame = {
-    val hashFn: Array[Byte] => Long = hashKind match {
-      case "dhash" => dHash64
-      case "ahash" => aHash64
-      case other => throw new IllegalArgumentException(
-        s"hashKind must be 'dhash' or 'ahash'; got '$other'")
-    }
+                            bytesCol: String): DataFrame = {
     val spark = media.sparkSession
     val outSchema = StructType(Seq(
       StructField("id", LongType, nullable = false),
@@ -850,7 +821,7 @@ object MultiModal {
         require(frames.nonEmpty, s"video $id has no frames")
         val picks = Array(0, frames.length / 2, frames.length - 1)
         // hash each DISTINCT picked frame once, then fan out to roles
-        val sigByFrame = picks.distinct.map(i => i -> hashFn(frames(i))).toMap
+        val sigByFrame = picks.distinct.map(i => i -> dHash64(frames(i))).toMap
         picks.iterator.zipWithIndex.map { case (fi, role) =>
           Row(id, role, sigByFrame(fi))
         }

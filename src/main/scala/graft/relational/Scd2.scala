@@ -22,10 +22,9 @@ object Scd2 {
     * `(keyCols, attrCols…, valid_from, valid_to, is_current, version)`
     * where `valid_to` is the next version's `valid_from` (null on the
     * open/current version) and `version` numbers 1..k per key in time
-    * order. With `collapse = true` (default) consecutive changes with
-    * identical attributes (null-safe struct compare) merge into one
-    * version — re-stating the same value extends the interval instead
-    * of splitting it.
+    * order. Consecutive changes with identical attributes (null-safe
+    * struct compare) merge into one version — re-stating the same value
+    * extends the interval instead of splitting it.
     *
     * Determinism: versions order by `(tsCol, tiebreakCol)`; the
     * tiebreak makes equal-timestamp changes a total order instead of a
@@ -39,20 +38,17 @@ object Scd2 {
     * the join-form "next change per change" is the quadratic trap this
     * window form exists to avoid. */
   def scd2Build(changes: DataFrame, keyCols: Seq[String], tsCol: String,
-                tiebreakCol: String, attrCols: Seq[String],
-                collapse: Boolean = true): DataFrame = {
+                tiebreakCol: String, attrCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty && attrCols.nonEmpty,
       "scd2Build needs key and attribute columns")
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(tsCol).asc, col(tiebreakCol).asc)
     val slim = changes.select(
       (keyCols ++ Seq(tsCol, tiebreakCol) ++ attrCols).map(col): _*)
-    val kept =
-      if (!collapse) slim
-      else slim
-        .withColumn("__prev", lag(attrStruct(attrCols), 1).over(w))
-        .filter(!(attrStruct(attrCols) <=> col("__prev")))
-        .drop("__prev")
+    val kept = slim
+      .withColumn("__prev", lag(attrStruct(attrCols), 1).over(w))
+      .filter(!(attrStruct(attrCols) <=> col("__prev")))
+      .drop("__prev")
     // second window on the COLLAPSED set: lead must skip dropped rows
     val w2 = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(tsCol).asc, col(tiebreakCol).asc)

@@ -165,7 +165,8 @@ object SchemaDrift {
   * batch order — the `batch=000N` convention); each batch is parquet
   * with its own schema. `since` unions all batches by name
   * (missing-as-null, widened types) and applies the bookmark filter;
-  * `report` is the per-batch drift audit. Batch schemas are read from
+  * `batchSchemas` feeds the per-batch drift audit
+  * ([[SchemaDrift.driftReport]]). Batch schemas are read from
   * parquet footers only — listing + footers is driver metadata work,
   * the data plan is a union of per-batch scans with pushdown intact. */
 class DriftTolerantChangelogSource(spark: SparkSession, rootPath: String,
@@ -215,8 +216,6 @@ class DriftTolerantChangelogSource(spark: SparkSession, rootPath: String,
       case None => unioned
     }
   }
-
-  def report: DataFrame = SchemaDrift.driftReport(spark, batchSchemas)
 }
 
 /** Malformed-record QUARANTINE ingress (the PERMISSIVE /

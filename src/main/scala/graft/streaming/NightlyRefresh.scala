@@ -112,10 +112,9 @@ object NightlyRefresh {
       .sorted
   }
 
-  /** Newest COMMITTED epoch strictly below `before` (or newest of all). */
-  def latestEpoch(spark: SparkSession, statePath: String,
-                  before: Option[Long] = None): Option[Long] =
-    committedEpochs(spark, statePath, before).lastOption
+  /** Newest COMMITTED epoch. */
+  def latestEpoch(spark: SparkSession, statePath: String): Option[Long] =
+    committedEpochs(spark, statePath).lastOption
 
   // ---- readers over the append-only layout ----------------------------
 
@@ -136,17 +135,12 @@ object NightlyRefresh {
                        epochs: Seq[Long]): DataFrame =
     spark.read.parquet(tablePaths(statePath, epochs, "docs"): _*)
 
-  /** Current per-cluster state table (`agg` | `hdr` | `kmv`), resolved. */
-  def currentState(spark: SparkSession, statePath: String, table: String,
-                   before: Option[Long] = None): DataFrame =
+  /** Current full report (q221's output shape per surviving cluster),
+    * resolved over every committed epoch. */
+  def currentReport(spark: SparkSession, statePath: String): DataFrame =
     resolve(spark.read.parquet(
-      tablePaths(statePath, committedEpochs(spark, statePath, before),
-        table): _*), "cluster_id")
-
-  /** Current full report (q221's output shape per surviving cluster). */
-  def currentReport(spark: SparkSession, statePath: String,
-                    before: Option[Long] = None): DataFrame =
-    currentState(spark, statePath, "report", before)
+      tablePaths(statePath, committedEpochs(spark, statePath),
+        "report"): _*), "cluster_id")
 
   // ---- state derivation helpers ---------------------------------------
 

@@ -252,11 +252,12 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents: copartitioned edges give identical clusters") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L),
       (4L, 5L), (5L, 6L)).toDF("a", "b")
-    val plain = Dedup.connectedComponents(pairs, "a", "b")
+    // edges hash-partitioned on an endpoint vs all in one partition
+    val spread = Dedup.connectedComponents(pairs.repartition(4, col("a")), "a", "b")
       .as[(Long, Long)].collect().toSet
-    val copart = Dedup.connectedComponents(pairs, "a", "b",
-      copartitionEdges = Some(4)).as[(Long, Long)].collect().toSet
-    assert(copart == plain)
+    val single = Dedup.connectedComponents(pairs.coalesce(1), "a", "b")
+      .as[(Long, Long)].collect().toSet
+    assert(spread == single)
   }
 
   test("connectedComponents: chains merge, disjoint stay apart, labels are min") {
@@ -396,11 +397,6 @@ class DedupSpec extends SparkSpec {
     for (a <- 0L until 5L; b <- (a + 1) until 5L)
       assert(java.lang.Long.bitCount(sigs(a) ^ sigs(b)) >= 32,
         s"groups $a,$b too close")
-    // ahash variant runs the same plumbing; unknown kinds are rejected
-    assert(MultiModal.perceptualHashes(imgs, "media_id", "content", "ahash").count() == 10)
-    intercept[IllegalArgumentException] {
-      MultiModal.perceptualHashes(imgs, "media_id", "content", "phash-nope")
-    }
   }
 
   test("dHash64 is invariant under nearest-neighbor upscaling (the resize near-dup case)") {
@@ -522,7 +518,7 @@ class DedupSpec extends SparkSpec {
     assert(hand == Set((1L, 2L, 0), (2L, 3L, 0), (1L, 4L, 0), (4L, 5L, 0)))
   }
 
-  test("measured recall: dHash/aHash under real JPEG re-encode at quality 30/50/80") {
+  test("measured recall: dHash under real JPEG re-encode at quality 30/50/80") {
     // The perceptual gates prove the MECHANISM on noise/resize
     // invariances; this pins the OPERATING POINT: re-encode the planted
     // fixture (at 72×64 — 8×8-pixel cells so JPEG's DCT blocks see real
@@ -556,27 +552,23 @@ class DedupSpec extends SparkSpec {
     }
     val n = 100
     val pngs = (0L until n.toLong).map(png)
-    for (kind <- Seq("dhash", "ahash")) {
-      val hash: Array[Byte] => Long =
-        if (kind == "dhash") MultiModal.dHash64 else MultiModal.aHash64
-      val origs = pngs.map(hash)
-      for (q <- Seq(0.3f, 0.5f, 0.8f)) {
-        val re = pngs.map(b => hash(MultiModal.transcodeJpeg(b, q)))
-        val d = (0 until n).map(i => java.lang.Long.bitCount(origs(i) ^ re(i)))
-        val r4 = d.count(_ <= 4) * 100 / n
-        val r8 = d.count(_ <= 8) * 100 / n
-        // cross-group floor: worst (original_i, reencode_j) distance over
-        // different groups — precision needs it above the radius
-        val cross = (for (i <- 0 until n; j <- (i + 1) until math.min(i + 11, n)
-                          if i % 5 != j % 5)
-          yield java.lang.Long.bitCount(origs(i) ^ re(j))).min
-        info(f"$kind%s jpeg q$q%.1f: recall@4=$r4%d%% recall@8=$r8%d%% " +
-          f"maxDist=${d.max}%d crossFloor=$cross%d")
-        assert(cross > 8, s"$kind q$q: cross-group floor $cross inside radius 8")
-        // the fixture's block-mean gradients survive JPEG exactly at
-        // every quality — pin it so a pooling/encoder regression shows
-        assert(r4 == 100, s"$kind q$q: recall@4 $r4 < 100")
-      }
+    val origs = pngs.map(MultiModal.dHash64)
+    for (q <- Seq(0.3f, 0.5f, 0.8f)) {
+      val re = pngs.map(b => MultiModal.dHash64(MultiModal.transcodeJpeg(b, q)))
+      val d = (0 until n).map(i => java.lang.Long.bitCount(origs(i) ^ re(i)))
+      val r4 = d.count(_ <= 4) * 100 / n
+      val r8 = d.count(_ <= 8) * 100 / n
+      // cross-group floor: worst (original_i, reencode_j) distance over
+      // different groups — precision needs it above the radius
+      val cross = (for (i <- 0 until n; j <- (i + 1) until math.min(i + 11, n)
+                        if i % 5 != j % 5)
+        yield java.lang.Long.bitCount(origs(i) ^ re(j))).min
+      info(f"dhash jpeg q$q%.1f: recall@4=$r4%d%% recall@8=$r8%d%% " +
+        f"maxDist=${d.max}%d crossFloor=$cross%d")
+      assert(cross > 8, s"dhash q$q: cross-group floor $cross inside radius 8")
+      // the fixture's block-mean gradients survive JPEG exactly at
+      // every quality — pin it so a pooling/encoder regression shows
+      assert(r4 == 100, s"dhash q$q: recall@4 $r4 < 100")
     }
     // ---- decision boundary: how small a gradient step survives? ----
     // The fixture's 8-gray-level steps are JPEG-easy. Sweep the step with

@@ -121,10 +121,6 @@ class Round14Spec extends SparkSpec {
       (1L, "active", 20L, Some(40L), false, 2), // valid_to SKIPS the collapsed row
       (1L, "churned", 40L, None, true, 3),
       (2L, "new", 15L, None, true, 1)))
-    // collapse off: the restatement becomes its own version
-    val raw = graft.relational.Scd2.scd2Build(ch, Seq("k"), "us", "id",
-      Seq("status"), collapse = false)
-    assert(raw.filter(col("k") === 1).count() == 4)
   }
 
   test("scd2Merge: incremental == from-scratch (no-op cross-boundary, new key, stale row)") {

@@ -71,25 +71,23 @@ class Round17Spec extends SparkSpec {
     assert(timeline.orderBy("day").collect().toSeq == composed)
   }
 
-  // ---- star CC: self-loop singletons + convergence guard ----
+  // ---- CC: self-loop singletons + convergence guard ----
 
-  test("connectedComponentsStar: self-loop-only nodes emitted as singletons (contract parity)") {
+  test("connectedComponents: self-loop-only nodes emitted as singletons") {
     import graft.dedup.Dedup
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 7L), (9L, 9L), (3L, 3L))
       .toDF("a", "b")
-    val minLabel = Dedup.connectedComponents(pairs, "a", "b")
+    val got = Dedup.connectedComponents(pairs, "a", "b")
       .as[(Long, Long)].collect().toSet
-    val star = Dedup.connectedComponentsStar(pairs, "a", "b")
-      .as[(Long, Long)].collect().toSet
-    assert(star == minLabel, s"star=$star minLabel=$minLabel")
-    assert(star.contains((7L, 7L)) && star.contains((9L, 9L)))
+    assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (9L, 9L)),
+      s"got=$got")
   }
 
-  test("connectedComponentsStar: non-convergence throws instead of returning invalid stars") {
+  test("connectedComponents: non-convergence throws instead of returning split clusters") {
     import graft.dedup.Dedup
     val chain = (1L until 40L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponentsStar(chain, "a", "b", maxIter = 1).collect()
+      Dedup.connectedComponents(chain, "a", "b", maxIter = 1).collect()
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -152,8 +150,8 @@ class Round17Spec extends SparkSpec {
     assert(rows(1).getAs[Int]("reward") == 77 &&
       rows(1).getAs[String]("mobile") == null)
     assert(src.since(Some(ts("2024-01-01 10:00:00"))).count() == 1)
-    val rep = src.report.collect().map(r =>
-      (r.getInt(0), r.getString(1), r.getString(2))).toSet
+    val rep = graft.source.SchemaDrift.driftReport(spark, src.batchSchemas)
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSet
     assert(rep == Set((1, "reward", "added"), (1, "mobile", "removed")))
     // a batch that DROPPED the commit-ts column: bookmark reads must
     // fail loudly (null-filled rows would silently miss every read)

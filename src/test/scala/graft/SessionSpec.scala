@@ -94,6 +94,50 @@ class SessionSpec extends SparkSpec {
     tops.toList
   }
 
+  /** `lines` with the text of their string literals blanked, so a name
+    * inside a message is not a reference. The code of an interpolation
+    * (`$name`, `${…}`) stays, and so do trailing `//` comments and the
+    * `'"'` char literal. Line breaks are kept. */
+  private def blankStrings(lines: Seq[String]): Seq[String] = {
+    val s = lines.mkString("\n")
+    val out = new StringBuilder(s.length)
+    var i = 0
+    def at(t: String): Boolean = s.startsWith(t, i)
+    def copy(n: Int): Unit = { out ++= s.substring(i, i + n); i += n }
+    def blank(): Unit = { out += (if (s(i) == '\n') '\n' else ' '); i += 1 }
+    // code up to the `}` that closes an interpolation (when `nested`)
+    def code(nested: Boolean): Unit = {
+      var depth = 0
+      while (i < s.length && !(nested && depth == 0 && s(i) == '}')) {
+        if (at("//")) copy(s.indexOf('\n', i) match { case -1 => s.length - i; case e => e - i })
+        else if (at("'\"'")) copy(3)
+        else if (s(i) == '"') literal(i > 0 && (s(i - 1).isLetterOrDigit || s(i - 1) == '_'))
+        else {
+          if (s(i) == '{') depth += 1 else if (s(i) == '}') depth -= 1
+          copy(1)
+        }
+      }
+    }
+    def literal(interpolated: Boolean): Unit = {
+      val triple = at("\"\"\"")
+      copy(if (triple) 3 else 1)
+      def closed: Boolean =
+        if (triple) at("\"\"\"") && !s.startsWith("\"\"\"\"", i) else at("\"") || at("\n")
+      while (i < s.length && !closed) {
+        if (interpolated && at("${")) { copy(2); code(nested = true); if (i < s.length) copy(1) }
+        else if (interpolated && at("$$")) { blank(); blank() }
+        else if (interpolated && at("$") && i + 1 < s.length && Character.isJavaIdentifierStart(s(i + 1))) {
+          copy(1); while (i < s.length && Character.isJavaIdentifierPart(s(i))) copy(1)
+        }
+        else if (!triple && at("\\") && i + 1 < s.length) { blank(); blank() }
+        else blank()
+      }
+      if (i < s.length && s(i) == '"') copy(if (triple) 3 else 1)
+    }
+    code(nested = false)
+    out.toString.split("\n", -1).toSeq
+  }
+
   test("every src/main declaration is reached from an entry point or allowlisted with a reason") {
     // roots: the mains, the query registry, the jobs, the session
     // extensions, and the benchmark harness that compiles against src/main
@@ -107,11 +151,13 @@ class SessionSpec extends SparkSpec {
       s"roots not found from ${Paths.get("").toAbsolutePath}")
 
     // fixed point over simple names: a declaration is reached when its name
-    // appears in reached code; a member also needs its type reached, and an
+    // appears in reached code outside a string literal; a member also
+    // needs its type reached, and an
     // override or implicit member is reached with its type
     val ident = """[A-Za-z_]\w*""".r
     val names = mutable.Set.empty[String]
-    def see(lines: Seq[String]): Unit = lines.foreach(names ++= ident.findAllIn(_))
+    def see(lines: Seq[String]): Unit =
+      blankStrings(lines).foreach(names ++= ident.findAllIn(_))
     perfbench.foreach(p => see(code(p)))
     val reached = mutable.Set.empty[Decl]
     var grew = true
