@@ -362,17 +362,15 @@ object Dedup extends graft.core.Logging {
     * grayscale raster, compute a 64-bit perceptual hash
     * ([[graft.multimodal.MultiModal.dHash64]] gradient-sign), then find
     * Hamming-radius pairs with the SAME chunk-blocking machinery the text
-    * simhash family uses ([[hammingPairsFromSigs]]): exact by pigeonhole
-    * at `nChunks = maxHamming + 1` (the default), banded-approximate for
-    * smaller `nChunks` at corpus scale.
+    * simhash family uses ([[hammingPairsFromSigs]]), blocked on
+    * `maxHamming + 1` chunks: exact by pigeonhole.
     *
     * Scale shape: the decode+hash pass is partition-local (mapPartitions,
     * one pass per blob, memory bounded by the largest image); everything
     * after shuffles 16-byte (id, chunk-key) rows — image bytes never
     * shuffle. Returns (id_a, id_b, hamming), id_a < id_b. */
   def imageNearDups(media: DataFrame, idCol: String, bytesCol: String,
-                    maxHamming: Int = 4, nChunks: Int = 0): DataFrame = {
-    val chunks = if (nChunks == 0) maxHamming + 1 else nChunks
+                    maxHamming: Int = 4): DataFrame = {
     // materialize the 16-byte signature table: both self-join sides of
     // the chunk blocking read it, and the subtree ABOVE it (blob decode
     // + pooling + hash — the modality's dominant CPU) must run once,
@@ -381,7 +379,7 @@ object Dedup extends graft.core.Logging {
     val sigs = graft.multimodal.MultiModal
       .perceptualHashes(media, idCol, bytesCol)
       .localCheckpoint(true)
-    hammingPairsFromSigs(sigs, maxHamming, chunks)
+    hammingPairsFromSigs(sigs, maxHamming, maxHamming + 1)
   }
 
   /** Perceptual-hash AUDIO near-duplicate pairs — the audio twin of
@@ -391,21 +389,20 @@ object Dedup extends graft.core.Logging {
     * ([[graft.multimodal.MultiModal.audioEnvelopeHash64]] — gradient
     * signs of the 65-frame energy envelope, gain-invariant), then find
     * Hamming-radius pairs with the shared chunk-blocking machinery
-    * ([[hammingPairsFromSigs]]): exact by pigeonhole at
-    * `nChunks = maxHamming + 1` (the default), banded-approximate below.
+    * ([[hammingPairsFromSigs]]), blocked on `maxHamming + 1` chunks:
+    * exact by pigeonhole.
     *
     * Scale shape: identical to the image path — decode+hash is
     * partition-local (one pass per blob, memory bounded by the largest
     * blob); only 16-byte (id, chunk-key) rows shuffle, audio bytes never
     * do. Returns (id_a, id_b, hamming), id_a < id_b. */
   def audioNearDups(media: DataFrame, idCol: String, bytesCol: String,
-                    maxHamming: Int = 4, nChunks: Int = 0): DataFrame = {
-    val chunks = if (nChunks == 0) maxHamming + 1 else nChunks
+                    maxHamming: Int = 4): DataFrame = {
     // materialized for the same reason as imageNearDups (decode once)
     val sigs = graft.multimodal.MultiModal
       .audioPerceptualHashes(media, idCol, bytesCol)
       .localCheckpoint(true)
-    hammingPairsFromSigs(sigs, maxHamming, chunks)
+    hammingPairsFromSigs(sigs, maxHamming, maxHamming + 1)
   }
 
   /** Hamming-radius pair search over a POSITIONED 64-bit signature table
@@ -455,8 +452,8 @@ object Dedup extends graft.core.Logging {
     * probe frame, and pair videos whose signatures match within
     * `maxHamming` at ANY shared role ([[hammingPairsFromRoledSigs]]) —
     * a re-encode/re-mux keeps all three probes, a trim or splice usually
-    * keeps at least one. Exact by pigeonhole per role at
-    * `nChunks = maxHamming + 1` (the default), banded-approximate below.
+    * keeps at least one. Blocked on `maxHamming + 1` chunks per role:
+    * exact by pigeonhole.
     *
     * Scale shape: container parse + 3 frame decodes per blob,
     * partition-local (NOT every frame — probe cost is O(1) per video);
@@ -464,14 +461,13 @@ object Dedup extends graft.core.Logging {
     * do. Returns (id_a, id_b, hamming), id_a < id_b, hamming = min over
     * matching roles. */
   def videoNearDups(media: DataFrame, idCol: String, bytesCol: String,
-                    maxHamming: Int = 4, nChunks: Int = 0): DataFrame = {
-    val chunks = if (nChunks == 0) maxHamming + 1 else nChunks
+                    maxHamming: Int = 4): DataFrame = {
     // materialized for the same reason as imageNearDups (decode once;
     // video decodes three probe frames per blob)
     val sigs = graft.multimodal.MultiModal
       .videoPerceptualHashes(media, idCol, bytesCol)
       .localCheckpoint(true)
-    hammingPairsFromRoledSigs(sigs, maxHamming, chunks)
+    hammingPairsFromRoledSigs(sigs, maxHamming, maxHamming + 1)
   }
 
   /** Winnowing fingerprints (Schleimer et al., SIGMOD'03) of normalized

@@ -223,12 +223,15 @@ class Round17Spec extends SparkSpec {
       typeMap = Map("mobile" -> "mobile_sanity"),
       swapKeyMap = Map("customer_id" -> "identity_id"),
       driftTolerant = true)
-    var posted = 0
+    // a send would run in a task, so it records through the JVM-static
+    // holder (a captured var is a per-task copy, and not thread-safe)
+    Round17SendCapture.bodies.clear()
     val e = intercept[IllegalArgumentException] {
-      graft.jobs.UserProfileJob.run(spark, conf, b => { posted += 1; (200, "ok") })
+      graft.jobs.UserProfileJob.run(spark, conf,
+        b => { b.foreach(Round17SendCapture.bodies.add); (200, "ok") })
     }
     assert(e.getMessage.contains("_commit_timestamp"))
-    assert(posted == 0, "no batch may be egressed before the guard fires")
+    assert(Round17SendCapture.bodies.isEmpty, "no batch may be egressed before the guard fires")
   }
 
   // ---- malformed-record quarantine (PERMISSIVE ingress) ----

@@ -16,6 +16,15 @@ class StageTestFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("stagetest:///")
 }
 
+/** What egress `send` closures record. `send` runs inside tasks from a
+  * deserialized copy of its closure, so it records through this
+  * JVM-static holder (same JVM in local mode), never a captured local. */
+object SinkSpecEgress {
+  val inflight = new java.util.concurrent.atomic.AtomicInteger()
+  val highWater = new java.util.concurrent.atomic.AtomicInteger()
+  val threads = new CopyOnWriteArrayList[Thread]()
+}
+
 /** Sink contract tests against a real local HTTP stub (SURVEY §5.5):
   * batch size ≤1000, byte-bound packing ≤4.5MB, retry×3 on connection
   * errors, envelope shape, verifiable JWT. */
@@ -281,6 +290,67 @@ class SinkSpec extends SparkSpec {
     Seq("""{"i":1}""", """{"i":2}""")
       .foreach(p => md.update(p.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     assert(a.head.idempotencyKey == md.digest().map("%02x".format(_)).mkString)
+  }
+
+  test("egress window: 4 sends in flight per task, results in batch order, same keys") {
+    import spark.implicits._
+    // 18 payloads in one partition, 2 per batch: 9 batches in one task
+    val payloads = (1 to 18).map(i => s"""{"i":$i}""").toDF("payload").coalesce(1)
+    SinkSpecEgress.inflight.set(0)
+    SinkSpecEgress.highWater.set(0)
+    val slow = HttpSink.sendBatchesKeyed(payloads, "payload", 2, (_, batch) => {
+      SinkSpecEgress.highWater.accumulateAndGet(
+        SinkSpecEgress.inflight.incrementAndGet(), math.max)
+      // batch k sleeps 100, 80, 60, 40, 100, ... ms: within a window the
+      // later batches answer first, so input order is not arrival order
+      val k = (batch.head.filter(_.isDigit).toInt - 1) / 2
+      try Thread.sleep(40L + 20L * (3 - k % 4))
+      finally SinkSpecEgress.inflight.decrementAndGet()
+      (200, "ok")
+    }).collect().toSeq
+    val fast = HttpSink.sendBatchesKeyed(payloads, "payload", 2, (_, _) => (200, "ok"))
+      .collect().toSeq
+    // the cap is 4 per task: overlapped (above 1), never above the cap
+    assert(SinkSpecEgress.highWater.get == 4)
+    assert(slow.map(_.batchIndex) == (0L until 9L))
+    assert(slow.map(_.records).sum == 18 && slow.forall(_.ok))
+    // the same rows, idempotency keys included, as an unhurried run
+    assert(slow == fast)
+  }
+
+  test("egress pool threads end with the action, also when the task fails mid-partition") {
+    import spark.implicits._
+    val send: (String, Seq[String]) => (Int, String) = (_, _) => {
+      SinkSpecEgress.threads.add(Thread.currentThread())
+      Thread.sleep(200)
+      (200, "ok")
+    }
+    def poolThreads(): Seq[Thread] = {
+      val ts = SinkSpecEgress.threads.toArray(Array.empty[Thread]).toSeq.distinct
+      assert(ts.nonEmpty && ts.forall(_.getName.startsWith("graft-egress-")),
+        ts.map(_.getName))
+      ts
+    }
+    def awaitEnded(ts: Seq[Thread]): Unit = {
+      val deadline = System.currentTimeMillis() + 5000
+      while (ts.exists(_.isAlive) && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(!ts.exists(_.isAlive), ts.filter(_.isAlive).map(_.getName))
+    }
+    // one partition, one row per batch
+    val rows = spark.range(1, 10, 1, 1)
+    SinkSpecEgress.threads.clear()
+    val ok = HttpSink.sendBatchesKeyed(rows.select(to_json(struct($"id")).as("payload")),
+      "payload", 1, send).collect()
+    assert(ok.length == 9 && ok.forall(_.ok))
+    awaitEnded(poolThreads())
+    // the 5th row raises once its predecessors' sends are in flight
+    SinkSpecEgress.threads.clear()
+    val bad = rows.select(when($"id" === 5, raise_error(lit("boom at row 5")))
+      .otherwise(to_json(struct($"id"))).as("payload"))
+    val e = intercept[Exception](
+      HttpSink.sendBatchesKeyed(bad, "payload", 1, send).collect())
+    assert(e.getMessage.contains("boom at row 5"), e.getMessage)
+    awaitEnded(poolThreads())
   }
 
   test("speculation guard: egress refuses spark.speculation=true, passes on safe configs") {
