@@ -30,28 +30,27 @@ import graft.core.RetryPolicy
   * with hundreds of partitions fans the egress out with no driver
   * involvement.
   *
-  * Each egress task keeps up to 4 destination calls in flight
-  * ([[InFlight]]), so `send` closures and the destination clients may be
-  * called from up to 4 threads per task at once and must be safe under
-  * concurrent calls. The clients here are: they hold no mutable state
-  * beyond a thread-safe `HttpClient` and Jackson `ObjectMapper`.
+  * Each HTTP egress task keeps several `send` calls in flight at once
+  * (see [[InFlight]]), so `send` closures and the HTTP clients they call
+  * must be safe under concurrent calls. The clients here are: they hold
+  * no mutable state beyond a thread-safe `HttpClient` and Jackson
+  * `ObjectMapper`. Netcore staging runs one chunk at a time.
   */
 
-/** Bounded, order-preserving in-flight window for a partition-local
-  * egress loop. The task thread pulls `it` — upstream rows, batch
-  * grouping, idempotency keys, `TaskContext` reads all happen there —
-  * and only `work` runs on the task's own pool of up to 4
-  * threads (named `graft-egress-<partition>-<n>`). Results come back in
-  * input order. The pool shuts down when the iterator is exhausted, and
-  * through a task-completion listener when the task fails or is killed
-  * (in-flight calls are interrupted then). */
+/** Bounded, order-preserving in-flight window for the partition-local
+  * HTTP egress loop: up to 4 calls per task at once. The task thread
+  * pulls `it` — upstream rows, batch grouping, idempotency keys,
+  * `TaskContext` reads all happen there — and only `work` runs on the
+  * task's own pool (threads named `graft-egress-<partition>-<n>`).
+  * Results come back in input order. The pool shuts down when the
+  * iterator is exhausted, and through a task-completion listener when
+  * the task fails or is killed (in-flight calls are interrupted then). */
 private object InFlight {
-  // destination concurrency = egress tasks × Window. A round trip is
-  // mostly waiting (network latency; the TCP delayed-ACK stall of a
-  // reused keep-alive connection is ~40 ms), so a few calls in flight
-  // overlap it, while a small fixed cap keeps a task from flooding the
-  // destination. On a 4-core host against a local stub, a window of 8
-  // was no faster than 4.
+  // destination concurrency = egress tasks × Window. A POST's round trip
+  // is mostly waiting on the network and the destination, not task CPU,
+  // so a few calls in flight overlap those waits; a small fixed cap keeps
+  // one task from flooding the destination, whose rate limit is the real
+  // bound on egress.
   private val Window = 4
 
   def mapOrdered[A, B](it: Iterator[A])(work: A => B): Iterator[B] = {
@@ -129,7 +128,7 @@ trait HttpPoster extends Serializable {
 /** Real poster: lazily builds one JDK HttpClient per deserialized poster,
   * i.e. one per egress task (the client is a `@transient lazy val`, so
   * each task's copy of the closure builds its own). Concurrent `post`
-  * calls — up to 4 per task, see [[InFlight]] — share that one client
+  * calls from one task's window (see [[InFlight]]) share that one client
   * safely: `HttpClient` is thread-safe and the lazy val is initialized
   * once under a lock. `requestTimeoutMs` bounds each request from send
   * to response headers: a destination that accepts the connection and
@@ -275,9 +274,8 @@ object HttpSink {
     * egress stages when the destination cannot dedupe.
     *
     * `send` runs on executors: it must be serializable and lazily
-    * construct any client state (JdkHttpPoster does). Each task keeps up
-    * to 4 `send` calls in flight ([[InFlight]]), so `send` may be called
-    * from up to 4 threads per task at once and must be safe under
+    * construct any client state (JdkHttpPoster does). Each task calls
+    * `send` concurrently, see [[InFlight]], so `send` must be safe under
     * concurrent calls; results still come back in batch order. batchIndex
     * is globally unique (partitionId << 20 | local index). */
   def sendBatches(payloads: DataFrame, payloadCol: String, batchSize: Int,
@@ -286,8 +284,8 @@ object HttpSink {
 
   /** As `sendBatches`, but `send` also receives the batch's idempotency
     * key so the caller can attach it to the request (header or body).
-    * Same concurrency contract: up to 4 `send` calls per task at once;
-    * grouping and keys are computed on the task thread. */
+    * Same concurrency contract (see [[InFlight]]); grouping and keys are
+    * computed on the task thread. */
   def sendBatchesKeyed(payloads: DataFrame, payloadCol: String, batchSize: Int,
                        send: (String, Seq[String]) => (Int, String)): Dataset[SinkResult] = {
     // on the driver: a bad size would otherwise fail every egress task,
@@ -429,12 +427,7 @@ object NetcoreSink {
     *
     * Staging opens the filesystem with the session's Hadoop configuration
     * (`spark.hadoop.*` and `sparkContext.hadoopConfiguration`: s3a
-    * credentials, `fs.<scheme>.impl`), captured on the driver.
-    *
-    * Chunks are packed on the task thread; each task stages and notifies
-    * up to 4 chunks at once ([[InFlight]]), so `client` may be called from
-    * up to 4 threads per task at once and must be safe under concurrent
-    * calls. Rows come back in chunk order. */
+    * credentials, `fs.<scheme>.impl`), captured on the driver. */
   def stageAndNotify(rows: DataFrame, csvCol: String, header: String,
                      stagingPrefix: String, client: NetcoreClient,
                      maxBytes: Long = 4500000L): Dataset[StagedFile] = {
@@ -444,11 +437,9 @@ object NetcoreSink {
     val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     rows.select(col(csvCol).cast("string")).as[String].mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
-      val chunks = BatchPacker.byteBound(it, maxBytes - headerBytes).zipWithIndex.map {
-        case (chunk, i) => (s"$stagingPrefix/user_profile_part_${pid}_$i.csv", chunk)
-      }
-      InFlight.mapOrdered(chunks) {
-        case (path, chunk) =>
+      BatchPacker.byteBound(it, maxBytes - headerBytes).zipWithIndex.map {
+        case (chunk, i) =>
+          val path = s"$stagingPrefix/user_profile_part_${pid}_$i.csv"
           val bytes = (header +: chunk).mkString("\n").getBytes(StandardCharsets.UTF_8)
           val fs = org.apache.hadoop.fs.FileSystem.get(
             new java.net.URI(path), hadoopConf.value)

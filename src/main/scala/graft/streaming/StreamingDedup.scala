@@ -491,9 +491,8 @@ object StreamingDedup {
     * observation on that one write — only the EgressStats totals reach
     * the driver via `onEpoch`. Epoch-keyed paths make replays overwrite
     * their own epoch (idempotent results, matching the epoch-keyed send
-    * idempotency). As in the batch sink, each task keeps up to 4 `send`
-    * calls in flight, so `send` may be called from up to 4 threads per
-    * task at once and must be safe under concurrent calls. */
+    * idempotency). As in the batch sink, each task calls `send`
+    * concurrently, so `send` must be safe under concurrent calls. */
   def egressStreamToPath(payloads: DataFrame, payloadCol: String, batchSize: Int,
                          send: (String, Seq[String]) => (Int, String),
                          resultsPath: String,
