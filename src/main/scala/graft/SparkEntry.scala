@@ -522,7 +522,15 @@ object SparkEntry {
 
   private def q33_cosine_topk(s: SparkSession, dir: String): DataFrame = {
     // Brute-force cosine top-5 for a fixed query set, exact-decimal math.
-    val emb = t(s, dir, "embeddings")
+    cosineTop5(t(s, dir, "embeddings"))
+      .select("query_id", "neighbor_id", "cos_sim", "rank")
+      .orderBy("query_id", "rank")
+  }
+
+  /** Exact cosine top-5 neighbours of vectors 0-7 among `emb`'s
+    * (`vec_id`, `embedding`) rows, with `cos_sim` and 1-based `rank`
+    * (ties to the smaller neighbour id), exact-decimal dot products. */
+  private def cosineTop5(emb: DataFrame): DataFrame = {
     val q = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         Similarity.dotExact(col("embedding"), col("embedding")).as("qn2"))
@@ -540,8 +548,6 @@ object SparkEntry {
       .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "cos_sim", "rank")
-      .orderBy("query_id", "rank")
   }
 
   private def q34_embedding_stats(s: SparkSession, dir: String): DataFrame = {
@@ -1374,22 +1380,28 @@ object SparkEntry {
     graft.relational.Relational.intervalMerge(li, "l_suppkey", "w_start", "w_end")
   }
 
+  /** The nation-level trade graph that q122, q130, q131 and q132 rank:
+    * customer nation -> supplier nation, weighted by lineitem count. */
+  private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
+    val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
+    val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
+    val c = t(s, dir, "customer").select("c_custkey", "c_nationkey")
+    val su = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+    li
+      .join(o, li("l_orderkey") === o("o_orderkey"))
+      .join(c, o("o_custkey") === c("c_custkey"))
+      .join(su, li("l_suppkey") === su("s_suppkey"))
+      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
+      .agg(count(lit(1)).as("w"))
+  }
+
   private def q122_pagerank(s: SparkSession, dir: String): DataFrame = {
     // Link authority over the nation-level trade graph (customer nation
     // -> supplier nation, weighted by lineitem count), 5 fixed-point
     // PageRank steps. Integer fixed-point arithmetic end-to-end makes
     // the iterate bit-exact under any partitioning — the oracle unrolls
     // the identical integer recurrence.
-    val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-    val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-    val c = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val su = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-    val edges = li
-      .join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(su, li("l_suppkey") === su("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
+    val edges = tradeEdges(s, dir)
     val nodes = t(s, dir, "nation").select(col("n_nationkey").as("node"))
     graft.analyze.GraphOps.pageRankFixedPoint(nodes, edges, iterations = 5)
   }
@@ -1397,16 +1409,7 @@ object SparkEntry {
   private def q130_trustrank(s: SparkSession, dir: String): DataFrame = {
     // Personalized PageRank: teleport restricted to region-0 nations
     // (trusted seeds); scores measure link-proximity to the seed set.
-    val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-    val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-    val c = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val su = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-    val edges = li
-      .join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(su, li("l_suppkey") === su("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
+    val edges = tradeEdges(s, dir)
     val nation = t(s, dir, "nation")
     val nodes = nation.select(col("n_nationkey").as("node"))
     val seeds = nation.filter(col("n_regionkey") === 0)
@@ -1419,16 +1422,7 @@ object SparkEntry {
     // Deterministic synchronous LPA over the trade graph thresholded to
     // its heavier edges (structure survives; the dense graph would
     // collapse to one community in a step). 4 fixed iterations.
-    val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-    val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-    val c = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val su = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-    val edges = li
-      .join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(su, li("l_suppkey") === su("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
+    val edges = tradeEdges(s, dir)
     // threshold at 1.2x the mean pair weight (625 possible pairs).
     // (r20 A/B, rejected: folding this count into the main plan as a
     // broadcast 1-row aggregate — the in-plan count subtree measured
@@ -1445,16 +1439,7 @@ object SparkEntry {
   private def q132_triangles(s: SparkSession, dir: String): DataFrame = {
     // Exact triangle count of the thresholded trade graph via
     // degree-ordered orientation (O(m^1.5) wedge bound).
-    val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-    val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-    val c = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val su = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-    val edges = li
-      .join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(su, li("l_suppkey") === su("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
+    val edges = tradeEdges(s, dir)
     // same 1.2x-mean threshold as q131 (r20 A/B kept the separate count
     // action: the in-plan broadcast-aggregate form measured 2.13 → 2.39 s
     // — see the q131 comment)
@@ -1617,22 +1602,7 @@ object SparkEntry {
     // separate re-normalization pass is needed.
     val emb = t(s, dir, "embeddings")
       .select(col("vec_id"), slice(col("embedding"), 1, 16).as("embedding"))
-    val q = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        Similarity.dotExact(col("embedding"), col("embedding")).as("qn2"))
-    val c = Similarity.ensureParallelism(emb)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
-        Similarity.dotExact(col("embedding"), col("embedding")).as("cn2"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos_sim",
-        when(sqrt(col("qn2")) * sqrt(col("cn2")) > 0,
-          Similarity.dotExact(col("qv"), col("cv")) /
-            (sqrt(col("qn2")) * sqrt(col("cn2")))).otherwise(lit(0.0)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    val truncated = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5).select("query_id", "neighbor_id")
+    val truncated = cosineTop5(emb).select("query_id", "neighbor_id")
     Similarity.annRecall(q33_cosine_topk(s, dir), truncated,
         "query_id", "neighbor_id", k = 5)
       .orderBy("query_id")
@@ -3364,24 +3334,10 @@ object SparkEntry {
         .otherwise(to_json(struct(col("doc_id"), col("text"), col("source"))))
         .as("value"))
 
-    // -- batch 1: bridges (q221 rule), schema DROPS `source`; k % 5 = 2
-    //    lines truncated mid-string (malformed json)
-    val ntext = trim(regexp_replace(lower(col("text")), "\\s+", " "))
-    val wSz = Window.orderBy(col("n_chars"), col("doc_id"))
-    val bridges = real.filter(pmod(col("doc_id"), lit(11)) === 3)
-      .select(col("doc_id"), ntext.as("ntext"), col("n_chars"))
-      .withColumn("rn", row_number().over(wSz))
-      .withColumn("k", ((col("rn") + 1) / 2).cast("long"))
-      .groupBy(col("k"))
-      .agg(max(when(col("rn") % 2 === 1, col("ntext"))).as("t1"),
-        max(when(col("rn") % 2 === 0, col("ntext"))).as("t2"),
-        count(lit(1)).as("c"))
-      .filter(col("c") === 2)
-      .select((lit(1000000L) + col("k")).as("doc_id"),
-        concat(col("t1"), lit(" "), col("t2")).as("text"),
-        (pmod(col("k"), lit(5)) === 2).as("__bad"))
-    val b1 = bridges.select(
-      when(col("__bad"), concat(lit("{\"doc_id\":"),
+    // -- batch 1: q221's bridges, schema DROPS `source`; pair k % 5 = 2
+    //    (doc_id 1e6 + k) lines truncated mid-string (malformed json)
+    val b1 = q221Bridges(real).select(
+      when(pmod(col("doc_id") - 1000000L, lit(5)) === 2, concat(lit("{\"doc_id\":"),
           col("doc_id").cast("string"), lit(",\"text\":\"trunc")))
         .otherwise(to_json(struct(col("doc_id"), col("text"))))
         .as("value"))
@@ -3400,35 +3356,17 @@ object SparkEntry {
     // the driver plans the four actions from two threads instead of
     // serializing them. Distinct directories, no shared state
     // (QuarantinedRead is lazy; the writes target disjoint paths).
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      val chains: Seq[() => Unit] = Seq(
-        () => {
-          b0.write.mode("overwrite").text(s"$tmp/land/batch=0000")
-          graft.source.QuarantinedRead.json(s, s"$tmp/land/batch=0000", schema0)
-            .clean.write.mode("overwrite").parquet(s"$tmp/clean/batch=0000")
-        },
-        () => {
-          b1.write.mode("overwrite").text(s"$tmp/land/batch=0001")
-          graft.source.QuarantinedRead.json(s, s"$tmp/land/batch=0001", schema1)
-            .clean.write.mode("overwrite").parquet(s"$tmp/clean/batch=0001")
-        })
-      try Await.result(
-        Future.sequence(chains.map(f => Future(f()))), Duration.Inf)
-      catch { case t: Throwable =>
-        // a failed chain must not leave its sibling writing past the
-        // aborted query (the NightlyRefresh write-pool discipline)
-        pool.shutdownNow()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        throw t
-      }
-      finally pool.shutdown()
-    }
+    graft.streaming.NightlyRefresh.runSiblings(2, Seq(
+      () => {
+        b0.write.mode("overwrite").text(s"$tmp/land/batch=0000")
+        graft.source.QuarantinedRead.json(s, s"$tmp/land/batch=0000", schema0)
+          .clean.write.mode("overwrite").parquet(s"$tmp/clean/batch=0000")
+      },
+      () => {
+        b1.write.mode("overwrite").text(s"$tmp/land/batch=0001")
+        graft.source.QuarantinedRead.json(s, s"$tmp/land/batch=0001", schema1)
+          .clean.write.mode("overwrite").parquet(s"$tmp/clean/batch=0001")
+      }))
     val delta = new graft.source.DriftTolerantChangelogSource(s, s"$tmp/clean")
       .since(None)
       .select(col("doc_id"), col("text"),

@@ -131,7 +131,14 @@ object TextAnalysis {
     * fact table scans once. Empty/whitespace-only docs profile as
     * zero chunks, no langs, null dominant, not mixed. */
   def languageMixProfile(df: DataFrame, idCol: String, textCol: String,
-                         chunkTokens: Int = 16): DataFrame = {
+                         chunkTokens: Int = 16): DataFrame =
+    chunkedLanguageMix(df, idCol, textCol, chunkTokens)(langIdFromTokens)
+
+  /** The chunked language profile with `classify` giving one chunk's
+    * verdict from its token slice: [[languageMixProfile]]'s marker
+    * scorer, or [[languageMixProfileNb]]'s trained classifier. */
+  private def chunkedLanguageMix(df: DataFrame, idCol: String, textCol: String,
+                                 chunkTokens: Int)(classify: Column => Column): DataFrame = {
     require(chunkTokens >= 1, s"chunkTokens must be >= 1; got $chunkTokens")
     val toks = when(col(textCol).isNull ||
         length(trim(col(textCol))) === 0, array().cast("array<string>"))
@@ -143,7 +150,7 @@ object TextAnalysis {
         array().cast("array<string>"))
       .otherwise(transform(
         sequence(lit(0L), col("__nch") - 1),
-        i => langIdFromTokens(
+        i => classify(
           slice(col("__toks"), (i * chunkTokens + 1).cast("int"),
             lit(chunkTokens)))))
     // dominant = longest run of the ASC-sorted verdicts; strict `>`
@@ -1302,46 +1309,10 @@ object TextAnalysis {
     * per chunk, no shuffle, no float). */
   def languageMixProfileNb(df: DataFrame, idCol: String, textCol: String,
                            model: NbLocalModel,
-                           chunkTokens: Int = 16): DataFrame = {
-    require(chunkTokens >= 1, s"chunkTokens must be >= 1; got $chunkTokens")
-    import graft.functions.TextFunctions
-    val toks = when(col(textCol).isNull ||
-        length(trim(col(textCol))) === 0, array().cast("array<string>"))
-      .otherwise(tokens(lower(col(textCol))))
-    val nCh = call_function("div",
-      size(col("__toks")).cast("long") + (chunkTokens - 1),
-      lit(chunkTokens.toLong))
-    val chunkLangs = when(col("__nch") === 0,
-        array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0L), col("__nch") - 1),
-        i => TextFunctions.nbClassify(
-          slice(col("__toks"), (i * chunkTokens + 1).cast("int"),
-            lit(chunkTokens)),
-          model.labels, model.counts, model.classTokens, model.classDocs,
-          model.buckets)))
-    val dom = aggregate(
-      array_sort(col("__cl")),
-      struct(lit(null).cast("string").as("prev"), lit(0L).as("run"),
-        lit(null).cast("string").as("best"), lit(0L).as("bestrun")),
-      (st, x) => {
-        val run = when(x === st.getField("prev"),
-          st.getField("run") + 1).otherwise(lit(1L))
-        val better = run > st.getField("bestrun")
-        struct(x.as("prev"), run.as("run"),
-          when(better, x).otherwise(st.getField("best")).as("best"),
-          when(better, run).otherwise(st.getField("bestrun"))
-            .as("bestrun"))
-      },
-      st => st.getField("best"))
-    df.withColumn("__toks", toks)
-      .withColumn("__nch", nCh)
-      .withColumn("__cl", chunkLangs)
-      .select(col(idCol), col("__nch").as("n_chunks"),
-        size(array_distinct(col("__cl"))).cast("long").as("n_langs"),
-        dom.as("dominant_lang"),
-        (size(array_distinct(col("__cl"))) > 1).as("mixed"))
-  }
+                           chunkTokens: Int = 16): DataFrame =
+    chunkedLanguageMix(df, idCol, textCol, chunkTokens)(chunk =>
+      graft.functions.TextFunctions.nbClassify(chunk, model.labels, model.counts,
+        model.classTokens, model.classDocs, model.buckets))
 
   def bigramFluency(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = tokens(lower(col(textCol)))

@@ -326,18 +326,7 @@ object Dedup extends graft.core.Logging {
     * Returns (id_a, id_b, hamming) with id_a < id_b. */
   def hammingPairsFromSigs(sigs: DataFrame, maxHamming: Int,
                            nChunks: Int): DataFrame = {
-    require(nChunks >= 1 && nChunks <= 64, s"nChunks must be in [1, 64], got $nChunks")
-    require(maxHamming >= 0 && maxHamming < 64,
-      s"maxHamming must be in [0, 63], got $maxHamming")
-    val widths = Array.tabulate(nChunks)(i =>
-      64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
-    val chunked = sigs.select(col("id"), col("sig"),
-      explode(array((0 until nChunks).map { i =>
-        struct(lit(i).as("chunk"),
-          shiftright(col("sig"), offsets(i)).bitwiseAND(mask(widths(i))).as("key"))
-      }: _*)).as("ck"))
+    val chunked = chunkKeys(sigs, Seq("id", "sig"), maxHamming, nChunks)
     // Bucket self-join streams candidate pairs (no per-bucket array
     // materialization — simhash chunk keys are SKEWED because similar
     // documents share chunk values, so hot buckets are the norm, and an
@@ -354,6 +343,25 @@ object Dedup extends graft.core.Logging {
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
       .select("id_a", "id_b", "hamming")
+  }
+
+  /** `sigs`' `keep` columns with one row per bit-chunk of the 64-bit
+    * `sig`: `ck` = (chunk, key), the chunk's bits shifted down. The
+    * `nChunks` widths differ by at most one bit and cover all 64. */
+  private def chunkKeys(sigs: DataFrame, keep: Seq[String], maxHamming: Int,
+                        nChunks: Int): DataFrame = {
+    require(nChunks >= 1 && nChunks <= 64, s"nChunks must be in [1, 64], got $nChunks")
+    require(maxHamming >= 0 && maxHamming < 64,
+      s"maxHamming must be in [0, 63], got $maxHamming")
+    val widths = Array.tabulate(nChunks)(i =>
+      64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
+    val offsets = widths.scanLeft(0)(_ + _)
+    def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
+    sigs.select(keep.map(col) :+
+      explode(array((0 until nChunks).map { i =>
+        struct(lit(i).as("chunk"),
+          shiftright(col("sig"), offsets(i)).bitwiseAND(mask(widths(i))).as("key"))
+      }: _*)).as("ck"): _*)
   }
 
   /** Perceptual-hash IMAGE near-duplicate pairs — the multimodal-corpus
@@ -417,18 +425,7 @@ object Dedup extends graft.core.Logging {
     * rows shuffle. Returns (id_a, id_b, hamming), id_a < id_b. */
   def hammingPairsFromRoledSigs(sigs: DataFrame, maxHamming: Int,
                                 nChunks: Int): DataFrame = {
-    require(nChunks >= 1 && nChunks <= 64, s"nChunks must be in [1, 64], got $nChunks")
-    require(maxHamming >= 0 && maxHamming < 64,
-      s"maxHamming must be in [0, 63], got $maxHamming")
-    val widths = Array.tabulate(nChunks)(i =>
-      64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    def mask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
-    val chunked = sigs.select(col("id"), col("role"), col("sig"),
-      explode(array((0 until nChunks).map { i =>
-        struct(lit(i).as("chunk"),
-          shiftright(col("sig"), offsets(i)).bitwiseAND(mask(widths(i))).as("key"))
-      }: _*)).as("ck"))
+    val chunked = chunkKeys(sigs, Seq("id", "role", "sig"), maxHamming, nChunks)
     val l = chunked.select(col("role"), col("ck"),
       col("id").as("id_a"), col("sig").as("sig_a"))
     val r = chunked.select(col("role"), col("ck"),

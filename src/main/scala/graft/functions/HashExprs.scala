@@ -39,6 +39,50 @@ private object TokenHash {
       ((d(3) & 0xFFL) << 32) | ((d(4) & 0xFFL) << 24) | ((d(5) & 0xFFL) << 16) |
       ((d(6) & 0xFFL) << 8) | (d(7) & 0xFFL)
   }
+
+  /** Gram keys of the word n-grams of `arr` (n <= its m tokens), in
+    * order, in the first m - n + 1 slots of the returned length-m array.
+    * Default: each gram chains its tokens' xxhash64 hashes
+    * (order-sensitive, no string concatenation); the keys overwrite the
+    * per-token hashes in place, since gram i reads only tokens i..i+n-1,
+    * so the fast path allocates one array per row. `md5Gram`: md5-low64
+    * of the literal space-joined gram string, a null token contributing
+    * an empty one — cross-engine reproducible (DuckDB:
+    * ('0x'||substr(md5(gram),1,16))::UBIGINT). */
+  def gramKeys(arr: ArrayData, n: Int, md5Gram: Boolean): Array[Long] = {
+    val m = arr.numElements()
+    val keys = new Array[Long](m)
+    var i = 0
+    if (md5Gram) {
+      val sb = new java.lang.StringBuilder()
+      while (i <= m - n) {
+        sb.setLength(0)
+        var j = 0
+        while (j < n) {
+          if (j > 0) sb.append(' ')
+          if (!arr.isNullAt(i + j)) sb.append(arr.getUTF8String(i + j).toString)
+          j += 1
+        }
+        keys(i) = md5Low64(
+          org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString))
+        i += 1
+      }
+    } else {
+      while (i < m) {
+        keys(i) = if (arr.isNullAt(i)) 0L else hash(arr.getUTF8String(i), Seed)
+        i += 1
+      }
+      i = 0
+      while (i <= m - n) {
+        var acc = Seed
+        var j = 0
+        while (j < n) { acc = XXH64.hashLong(keys(i + j), acc); j += 1 }
+        keys(i) = acc
+        i += 1
+      }
+    }
+    keys
+  }
 }
 
 /** 64-bit SimHash of a token array: per-bit majority vote of token
@@ -145,42 +189,13 @@ case class ShingleHashExpr(child: Expression, n: Int, md5Gram: Boolean = false)
     val arr = v.asInstanceOf[ArrayData]
     val m = arr.numElements()
     if (m < n) return new GenericArrayData(Array.emptyLongArray)
+    val gh = TokenHash.gramKeys(arr, n, md5Gram)
     val seen = new mutable.HashSet[Long]
     val out = new mutable.ArrayBuffer[Long](m - n + 1)
     var i = 0
-    if (md5Gram) {
-      // gram-string md5 path: same construction as WinnowExpr — nulls
-      // contribute an empty token, single-space separators
-      val sb = new java.lang.StringBuilder()
-      while (i <= m - n) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          if (!arr.isNullAt(i + j)) sb.append(arr.getUTF8String(i + j).toString)
-          j += 1
-        }
-        val h = TokenHash.md5Low64(
-          org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString))
-        if (seen.add(h)) out += h
-        i += 1
-      }
-    } else {
-      // per-token hashes once, then rolling chain per window
-      val th = new Array[Long](m)
-      while (i < m) {
-        th(i) = if (arr.isNullAt(i)) 0L
-          else TokenHash.hash(arr.getUTF8String(i), TokenHash.Seed)
-        i += 1
-      }
-      i = 0
-      while (i <= m - n) {
-        var acc = TokenHash.Seed
-        var j = 0
-        while (j < n) { acc = XXH64.hashLong(th(i + j), acc); j += 1 }
-        if (seen.add(acc)) out += acc
-        i += 1
-      }
+    while (i <= m - n) {
+      if (seen.add(gh(i))) out += gh(i)
+      i += 1
     }
     val res = out.toArray
     java.util.Arrays.sort(res)
@@ -224,40 +239,7 @@ case class WinnowExpr(child: Expression, n: Int, w: Int, md5Gram: Boolean = true
     val m = arr.numElements()
     if (m < n) return new GenericArrayData(Array.emptyLongArray)
     val nGrams = m - n + 1
-    val gh = new Array[Long](nGrams)
-    var i = 0
-    if (md5Gram) {
-      val sb = new java.lang.StringBuilder()
-      while (i < nGrams) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          if (!arr.isNullAt(i + j)) sb.append(arr.getUTF8String(i + j).toString)
-          j += 1
-        }
-        gh(i) = TokenHash.md5Low64(
-          org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString))
-        i += 1
-      }
-    } else {
-      // chained-xxhash64 gram keys, same construction as ShingleHashExpr's
-      // fast path: per-token hashes once, rolling chain per window
-      val th = new Array[Long](m)
-      while (i < m) {
-        th(i) = if (arr.isNullAt(i)) 0L
-          else TokenHash.hash(arr.getUTF8String(i), TokenHash.Seed)
-        i += 1
-      }
-      i = 0
-      while (i < nGrams) {
-        var acc = TokenHash.Seed
-        var j = 0
-        while (j < n) { acc = XXH64.hashLong(th(i + j), acc); j += 1 }
-        gh(i) = acc
-        i += 1
-      }
-    }
+    val gh = TokenHash.gramKeys(arr, n, md5Gram)
     val seen = new mutable.HashSet[Long]
     val out = new mutable.ArrayBuffer[Long]()
     val nWin = math.max(1, nGrams - w + 1)

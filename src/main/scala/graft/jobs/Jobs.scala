@@ -53,9 +53,11 @@ object UserProfileJob {
         * schemas (union by name, missing-as-null, widened types — the
         * wide-evolving profile table of SURVEY §1.3). The mapping-
         * driven attribute selection downstream already tolerates
-        * absent columns, so a drifted batch flows through end-to-end;
-        * JobSpec proves it. Off by default: the plain single-schema
-        * read skips the footer listing. */
+        * absent columns, so a drifted batch flows through end-to-end
+        * (Round17Spec "UserProfileJob survives a drifted batch"; a first
+        * run over a batch missing `tsCol` fails before any egress:
+        * Round17Spec "UserProfileJob driftTolerant: FIRST …"). Off by
+        * default: the plain single-schema read skips the footer listing. */
       driftTolerant: Boolean = false) {
     /** Where per-batch sink results land (parquet). A sibling of the
       * bookmark store by default — NOT nested inside it, which would

@@ -298,6 +298,24 @@ object MultiModal {
     out.toByteArray
   }
 
+  /** A 16-bit PCM WAV blob decoded: its format, its frame length, and
+    * its samples in a buffer in the stream's byte order (one `getShort`
+    * per sample). Other sample sizes are rejected. */
+  private def decodePcm16(bytes: Array[Byte])
+      : (javax.sound.sampled.AudioFormat, Long, java.nio.ByteBuffer) = {
+    val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    try {
+      val f = in.getFormat
+      require(f.getSampleSizeInBits == 16,
+        s"only 16-bit PCM supported; got ${f.getSampleSizeInBits}")
+      val pcm = in.readAllBytes()
+      (f, in.getFrameLength, java.nio.ByteBuffer.wrap(pcm).order(
+        if (f.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
+        else java.nio.ByteOrder.LITTLE_ENDIAN))
+    } finally in.close()
+  }
+
   /** Lossy WAV round-trip: nearest-neighbor integer resample to
     * `targetRate` plus bit-depth quantization to `targetBits` (samples
     * truncated to the top `targetBits` bits, re-emitted in the 16-bit
@@ -311,36 +329,26 @@ object MultiModal {
     require(targetRate > 0, s"targetRate must be > 0; got $targetRate")
     require(targetBits >= 1 && targetBits <= 16,
       s"targetBits must be in [1, 16]; got $targetBits")
-    val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    try {
-      val f = in.getFormat
-      require(f.getSampleSizeInBits == 16,
-        s"only 16-bit PCM supported; got ${f.getSampleSizeInBits}")
-      require(f.getChannels == 1, s"only mono supported; got ${f.getChannels}")
-      val pcm = in.readAllBytes()
-      val bb = java.nio.ByteBuffer.wrap(pcm).order(
-        if (f.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN)
-      val n = pcm.length / 2
-      val src = new Array[Short](n)
-      var i = 0
-      while (i < n) { src(i) = bb.getShort; i += 1 }
-      val srcRate = f.getSampleRate.toDouble
-      val outN = math.max(1, math.round(n * targetRate / srcRate).toInt)
-      val shift = 16 - targetBits
-      val out = new Array[Short](outN)
-      var j = 0
-      while (j < outN) {
-        // nearest-neighbor index map (floor of the exact rational), then
-        // truncate the low bits — the round-trip a naive decimating
-        // re-encoder applies
-        val si = math.min(n - 1, (j.toLong * n / outN).toInt)
-        out(j) = ((src(si) >> shift) << shift).toShort
-        j += 1
-      }
-      encodeWav(targetRate, out)
-    } finally in.close()
+    val (f, _, bb) = decodePcm16(bytes)
+    require(f.getChannels == 1, s"only mono supported; got ${f.getChannels}")
+    val n = bb.remaining / 2
+    val src = new Array[Short](n)
+    var i = 0
+    while (i < n) { src(i) = bb.getShort; i += 1 }
+    val srcRate = f.getSampleRate.toDouble
+    val outN = math.max(1, math.round(n * targetRate / srcRate).toInt)
+    val shift = 16 - targetBits
+    val out = new Array[Short](outN)
+    var j = 0
+    while (j < outN) {
+      // nearest-neighbor index map (floor of the exact rational), then
+      // truncate the low bits — the round-trip a naive decimating
+      // re-encoder applies
+      val si = math.min(n - 1, (j.toLong * n / outN).toInt)
+      out(j) = ((src(si) >> shift) << shift).toShort
+      j += 1
+    }
+    encodeWav(targetRate, out)
   }
 
   // ==================== audio perceptual hashing ====================
@@ -360,44 +368,34 @@ object MultiModal {
     * integer arithmetic (no division rounding, no overflow at any blob
     * length). */
   def audioEnvelopeHash64(bytes: Array[Byte]): Long = {
-    val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    try {
-      val f = in.getFormat
-      require(f.getSampleSizeInBits == 16,
-        s"only 16-bit PCM supported; got ${f.getSampleSizeInBits}")
-      val pcm = in.readAllBytes()
-      val bb = java.nio.ByteBuffer.wrap(pcm).order(
-        if (f.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN)
-      val n = pcm.length / 2
-      require(n >= 65, s"need >= 65 samples for a 64-bit envelope hash; got $n")
-      val env = new Array[Long](65)
-      val cnt = new Array[Long](65)
-      var i = 0
-      while (i < n) {
-        val s = bb.getShort.toInt
-        val fi = (i.toLong * 65 / n).toInt
-        env(fi) += math.abs(s); cnt(fi) += 1
-        i += 1
-      }
-      var sig = 0L
-      var k = 0
-      while (k < 64) {
-        // exact cross-multiplied mean compare in 128 bits: env·cnt can
-        // exceed Long for multi-hour blobs (env ≤ 32767·n/65, cnt ≈ n/65
-        // → overflow near n ≈ 1.1e9, ~7 h at 44.1 kHz), which would
-        // silently flip comparison signs; 64 BigInteger products per
-        // blob are noise next to the decode
-        val l = java.math.BigInteger.valueOf(env(k + 1))
-          .multiply(java.math.BigInteger.valueOf(cnt(k)))
-        val r = java.math.BigInteger.valueOf(env(k))
-          .multiply(java.math.BigInteger.valueOf(cnt(k + 1)))
-        if (l.compareTo(r) > 0) sig |= 1L << k
-        k += 1
-      }
-      sig
-    } finally in.close()
+    val (_, _, bb) = decodePcm16(bytes)
+    val n = bb.remaining / 2
+    require(n >= 65, s"need >= 65 samples for a 64-bit envelope hash; got $n")
+    val env = new Array[Long](65)
+    val cnt = new Array[Long](65)
+    var i = 0
+    while (i < n) {
+      val s = bb.getShort.toInt
+      val fi = (i.toLong * 65 / n).toInt
+      env(fi) += math.abs(s); cnt(fi) += 1
+      i += 1
+    }
+    var sig = 0L
+    var k = 0
+    while (k < 64) {
+      // exact cross-multiplied mean compare in 128 bits: env·cnt can
+      // exceed Long for multi-hour blobs (env ≤ 32767·n/65, cnt ≈ n/65
+      // → overflow near n ≈ 1.1e9, ~7 h at 44.1 kHz), which would
+      // silently flip comparison signs; 64 BigInteger products per
+      // blob are noise next to the decode
+      val l = java.math.BigInteger.valueOf(env(k + 1))
+        .multiply(java.math.BigInteger.valueOf(cnt(k)))
+      val r = java.math.BigInteger.valueOf(env(k))
+        .multiply(java.math.BigInteger.valueOf(cnt(k + 1)))
+      if (l.compareTo(r) > 0) sig |= 1L << k
+      k += 1
+    }
+    sig
   }
 
   /** Envelope-hash pass over an audio table: (id, sig), one decode +
@@ -510,38 +508,27 @@ object MultiModal {
       it.map { r =>
         val id = r.getLong(0)
         val bytes = r.getAs[Array[Byte]](1)
-        val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        try {
-          val f = in.getFormat
-          require(f.getSampleSizeInBits == 16,
-            s"only 16-bit PCM supported; got ${f.getSampleSizeInBits}")
-          val pcm = in.readAllBytes()
-          val bb = java.nio.ByteBuffer.wrap(pcm).order(
-            if (f.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-            else java.nio.ByteOrder.LITTLE_ENDIAN)
-          var peak = 0
-          var sumSq = 0L
-          var n = 0L
-          while (bb.remaining() >= 2) {
-            val s = bb.getShort.toInt
-            if (math.abs(s) > peak) peak = math.abs(s)
-            sumSq += s.toLong * s.toLong
-            n += 1
-          }
-          val frames = in.getFrameLength
-          // AudioInputStream.getFrameLength is NOT_SPECIFIED (-1) for
-          // some stream types and a zero/unspecified sample rate would
-          // yield -/Infinity or NaN durations — fail loudly instead.
-          require(frames >= 0,
-            s"media $id: frame length unspecified ($frames)")
-          require(f.getSampleRate > 0,
-            s"media $id: invalid sample rate ${f.getSampleRate}")
-          Row(id, f.getSampleRate.toInt, f.getChannels,
-            f.getSampleSizeInBits, frames,
-            frames.toDouble / f.getSampleRate.toDouble, peak,
-            if (n == 0) 0.0 else math.sqrt(sumSq.toDouble / n.toDouble))
-        } finally in.close()
+        val (f, frames, bb) = decodePcm16(bytes)
+        var peak = 0
+        var sumSq = 0L
+        var n = 0L
+        while (bb.remaining() >= 2) {
+          val s = bb.getShort.toInt
+          if (math.abs(s) > peak) peak = math.abs(s)
+          sumSq += s.toLong * s.toLong
+          n += 1
+        }
+        // AudioInputStream.getFrameLength is NOT_SPECIFIED (-1) for
+        // some stream types and a zero/unspecified sample rate would
+        // yield -/Infinity or NaN durations — fail loudly instead.
+        require(frames >= 0,
+          s"media $id: frame length unspecified ($frames)")
+        require(f.getSampleRate > 0,
+          s"media $id: invalid sample rate ${f.getSampleRate}")
+        Row(id, f.getSampleRate.toInt, f.getChannels,
+          f.getSampleSizeInBits, frames,
+          frames.toDouble / f.getSampleRate.toDouble, peak,
+          if (n == 0) 0.0 else math.sqrt(sumSq.toDouble / n.toDouble))
       }
     }
     spark.createDataFrame(rdd, outSchema)

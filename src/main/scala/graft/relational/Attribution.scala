@@ -64,37 +64,14 @@ object Attribution {
                        conversionType: String, touchTypes: Seq[String],
                        lookbackSeconds: Long,
                        halfLifeSeconds: Option[Long] = None): DataFrame = {
-    require(touchTypes.nonEmpty, "attribution needs at least one touch type")
-    require(!touchTypes.contains(conversionType),
-      s"conversion type '$conversionType' cannot also be a touch type")
-    require(lookbackSeconds > 0, "lookbackSeconds must be > 0")
+    val assigned = claimScan(events, entityCol, tsCol, typeCol, idCol,
+      conversionType, touchTypes, lookbackSeconds).filter(col("__claimed"))
     halfLifeSeconds.foreach { hl =>
       require(hl > 0, "halfLifeSeconds must be > 0")
       require(lookbackSeconds / hl <= 40L,
         s"time-decay needs lookback/halfLife <= 40 (exact dyadic sums); " +
           s"got ${lookbackSeconds / hl} half-life steps")
     }
-    val slim = events
-      .filter(col(typeCol) === conversionType || col(typeCol).isin(touchTypes: _*))
-      .select(col(entityCol).as("__ent"),
-        unix_micros(col(tsCol)).as("__us"),
-        col(idCol).as("__id"), col(typeCol).as("__type"),
-        when(col(typeCol) === conversionType, 1).otherwise(0).as("__kind"))
-    // Descending scan: at each row, the last non-null conversion seen
-    // so far is the conversion with the SMALLEST (ts, id) at or after
-    // this row — i.e. the next conversion. kind desc puts a
-    // same-instant conversion before the touch (inclusive claim);
-    // id desc makes the smaller-id conversion win an exact ts tie.
-    val scan = Window.partitionBy(col("__ent"))
-      .orderBy(col("__us").desc, col("__kind").desc, col("__id").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val assigned = slim
-      .withColumn("__conv", last(
-        when(col("__kind") === 1,
-          struct(col("__id").as("cid"), col("__us").as("cus"))),
-        ignoreNulls = true).over(scan))
-      .filter(col("__kind") === 0 && col("__conv").isNotNull &&
-        col("__conv.cus") - col("__us") <= lookbackSeconds * 1000000L)
     val perConv = Window.partitionBy(col("__conv.cid"))
     val ordered = perConv.orderBy(col("__us").asc, col("__id").asc)
     val full = perConv.orderBy(col("__us").asc, col("__id").asc)
@@ -122,6 +99,43 @@ object Attribution {
             sum(col("__iw")).over(full).cast("double"))
     }
     attributionSelect(withDecay, entityCol, halfLifeSeconds.isDefined)
+  }
+
+  /** The claim scan the attribution family shares: the event rows of
+    * `conversionType` or a touch type, projected to (`__ent`, `__us`,
+    * `__id`, `__type`, `__kind`: 1 for a conversion), each tagged with
+    * `__conv` = (cid, cus), its next conversion, and `__claimed`: a
+    * touch whose next conversion lies within `lookbackSeconds`.
+    *
+    * Descending scan: at each row, the last non-null conversion seen so
+    * far is the conversion with the SMALLEST (ts, id) at or after this
+    * row — i.e. the next conversion. kind desc puts a same-instant
+    * conversion before the touch (inclusive claim); id desc makes the
+    * smaller-id conversion win an exact ts tie. */
+  private[relational] def claimScan(events: DataFrame, entityCol: String,
+                                    tsCol: String, typeCol: String, idCol: String,
+                                    conversionType: String, touchTypes: Seq[String],
+                                    lookbackSeconds: Long): DataFrame = {
+    require(touchTypes.nonEmpty, "attribution needs at least one touch type")
+    require(!touchTypes.contains(conversionType),
+      s"conversion type '$conversionType' cannot also be a touch type")
+    require(lookbackSeconds > 0, "lookbackSeconds must be > 0")
+    val slim = events
+      .filter(col(typeCol) === conversionType || col(typeCol).isin(touchTypes: _*))
+      .select(col(entityCol).as("__ent"),
+        unix_micros(col(tsCol)).as("__us"),
+        col(idCol).as("__id"), col(typeCol).as("__type"),
+        when(col(typeCol) === conversionType, 1).otherwise(0).as("__kind"))
+    val scan = Window.partitionBy(col("__ent"))
+      .orderBy(col("__us").desc, col("__kind").desc, col("__id").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    slim
+      .withColumn("__conv", last(
+        when(col("__kind") === 1,
+          struct(col("__id").as("cid"), col("__us").as("cus"))),
+        ignoreNulls = true).over(scan))
+      .withColumn("__claimed", col("__kind") === 0 && col("__conv").isNotNull &&
+        col("__conv.cus") - col("__us") <= lookbackSeconds * 1000000L)
   }
 
   private def attributionSelect(withDecay: DataFrame, entityCol: String,

@@ -36,29 +36,9 @@ object MarkovAttribution {
                          typeCol: String, idCol: String,
                          conversionType: String, touchTypes: Seq[String],
                          lookbackSeconds: Long): DataFrame = {
-    // mirror attributeTouches' guards (ADVICE r14): a zero/negative
-    // lookback would silently classify every touch as unclaimed
-    require(touchTypes.nonEmpty, "attribution needs at least one touch type")
-    require(!touchTypes.contains(conversionType),
-      s"conversion type '$conversionType' cannot also be a touch type")
-    require(lookbackSeconds > 0, "lookbackSeconds must be > 0")
-    val slim = events
-      .filter(col(typeCol) === conversionType || col(typeCol).isin(touchTypes: _*))
-      .select(col(entityCol).as("__ent"),
-        unix_micros(col(tsCol)).as("__us"),
-        col(idCol).as("__id"), col(typeCol).as("__type"),
-        when(col(typeCol) === conversionType, 1).otherwise(0).as("__kind"))
-    val scan = Window.partitionBy(col("__ent"))
-      .orderBy(col("__us").desc, col("__kind").desc, col("__id").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tagged = slim
-      .withColumn("__conv", last(
-        when(col("__kind") === 1,
-          struct(col("__id").as("cid"), col("__us").as("cus"))),
-        ignoreNulls = true).over(scan))
+    val tagged = Attribution.claimScan(events, entityCol, tsCol, typeCol, idCol,
+      conversionType, touchTypes, lookbackSeconds)
     val touches = tagged.filter(col("__kind") === 0)
-      .withColumn("__claimed", col("__conv").isNotNull &&
-        col("__conv.cus") - col("__us") <= lookbackSeconds * 1000000L)
     // claimed journeys: per conversion in position order
     val wConv = Window.partitionBy(col("__conv.cid"))
       .orderBy(col("__us").asc, col("__id").asc)
@@ -72,7 +52,7 @@ object MarkovAttribution {
     // zero-touch conversions: START -> CONV
     val convIdsWithTouches = touches.filter(col("__claimed"))
       .select(col("__conv.cid").as("__cid")).distinct()
-    val zeroTouch = slim.filter(col("__kind") === 1)
+    val zeroTouch = tagged.filter(col("__kind") === 1)
       .join(convIdsWithTouches, col("__id") === col("__cid"), "left_anti")
       .select(lit(Start).as("src"), lit(Conv).as("dst"))
     // non-converting journey: the entity's unclaimed touches in order

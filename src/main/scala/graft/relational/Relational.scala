@@ -1,6 +1,6 @@
 package graft.relational
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -218,8 +218,8 @@ object Relational {
   def funnelSteps(events: DataFrame, entityCol: String, tsCol: String,
                   typeCol: String, steps: Seq[String],
                   maxEventsPerEntity: Int = 0): DataFrame = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    require(maxEventsPerEntity >= 0, "maxEventsPerEntity must be >= 0")
+    val byEntity = funnelGroups(events, entityCol, tsCol, typeCol, steps,
+      maxEventsPerEntity)
     val k = steps.size
     val stepArr = array(steps.map(lit): _*)
     val evs = sort_array(collect_list(struct(col(tsCol).as("ts"),
@@ -240,26 +240,7 @@ object Relational {
               e.getField("ts") > element_at(acc, greatest(filled, lit(1)))),
             e.getField("ts")).otherwise(v))
       })
-    val relevant = events.filter(col(typeCol).isin(steps: _*))
-    // The cap is enforced BEFORE the aggregation, not by slicing the
-    // collected array — a slice after collect_list would still
-    // materialize a pathological entity's full event list in one agg
-    // buffer, defeating the bound it claims. The rank-limit window is
-    // the same map-side group-limit trick invertedIndex uses: Spark's
-    // InferWindowGroupLimit prunes rows past the cap per map task, so
-    // both the shuffle and the agg buffer stay ≤ n rows per entity.
-    val capped =
-      if (maxEventsPerEntity == 0) relevant
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(entityCol))
-          .orderBy(col(tsCol).asc, col(typeCol).asc)
-        relevant.withColumn("__fs_rn", row_number().over(w))
-          .filter(col("__fs_rn") <= maxEventsPerEntity)
-          .drop("__fs_rn")
-      }
-    capped.groupBy(col(entityCol))
-      .agg(folded.as("step_ts"))
+    byEntity.agg(folded.as("step_ts"))
   }
 
   /** TIME-CONSTRAINED funnel — [[funnelSteps]] with a per-step
@@ -284,9 +265,9 @@ object Relational {
                           tsCol: String, typeCol: String,
                           steps: Seq[String], stepWindowSeconds: Long,
                           maxEventsPerEntity: Int = 0): DataFrame = {
-    require(steps.nonEmpty, "funnel needs at least one step")
     require(stepWindowSeconds > 0, "step window must be positive")
-    require(maxEventsPerEntity >= 0, "maxEventsPerEntity must be >= 0")
+    val byEntity = funnelGroups(events, entityCol, tsCol, typeCol, steps,
+      maxEventsPerEntity)
     val k = steps.size
     val wUs = stepWindowSeconds * 1000000L
     val stepArr = array(steps.map(lit): _*)
@@ -308,19 +289,7 @@ object Relational {
                   element_at(acc, greatest(filled, lit(1))) <= wUs)),
             e.getField("us")).otherwise(v))
       })
-    val relevant = events.filter(col(typeCol).isin(steps: _*))
-    val capped =
-      if (maxEventsPerEntity == 0) relevant
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(entityCol))
-          .orderBy(col(tsCol).asc, col(typeCol).asc)
-        relevant.withColumn("__fs_rn", row_number().over(w))
-          .filter(col("__fs_rn") <= maxEventsPerEntity)
-          .drop("__fs_rn")
-      }
-    capped.groupBy(col(entityCol))
-      .agg(folded.as("step_us"))
+    byEntity.agg(folded.as("step_us"))
   }
 
   /** RE-ANCHORED time-constrained funnel — the product-analytics
@@ -356,9 +325,9 @@ object Relational {
                                   steps: Seq[String],
                                   stepWindowSeconds: Long,
                                   maxEventsPerEntity: Int = 0): DataFrame = {
-    require(steps.nonEmpty, "funnel needs at least one step")
     require(stepWindowSeconds > 0, "step window must be positive")
-    require(maxEventsPerEntity >= 0, "maxEventsPerEntity must be >= 0")
+    val byEntity = funnelGroups(events, entityCol, tsCol, typeCol, steps,
+      maxEventsPerEntity)
     val k = steps.size
     val wUs = stepWindowSeconds * 1000000L
     val stepArr = array(steps.map(lit): _*)
@@ -381,18 +350,7 @@ object Relational {
             e.getField("us") - element_at(acc, greatest(least(filled, lit(k - 1)), lit(1))) <= wUs,
             e.getField("us")).otherwise(v))
       })
-    val relevant = events.filter(col(typeCol).isin(steps: _*))
-    val capped =
-      if (maxEventsPerEntity == 0) relevant
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(entityCol))
-          .orderBy(col(tsCol).asc, col(typeCol).asc)
-        relevant.withColumn("__fs_rn", row_number().over(w))
-          .filter(col("__fs_rn") <= maxEventsPerEntity)
-          .drop("__fs_rn")
-      }
-    val grouped = capped.groupBy(col(entityCol)).agg(evs.as("__evs"))
+    val grouped = byEntity.agg(evs.as("__evs"))
     def depth(c: Column): Column = aggregate(c, lit(0),
       (n, v) => n + when(v.isNotNull, 1).otherwise(0))
     grouped
@@ -419,49 +377,66 @@ object Relational {
   def funnelCountsWindowedAnchored(events: DataFrame, entityCol: String,
                                    tsCol: String, typeCol: String,
                                    steps: Seq[String],
-                                   stepWindowSeconds: Long): DataFrame = {
-    val per = funnelStepsWindowedAnchored(events, entityCol, tsCol,
-      typeCol, steps, stepWindowSeconds)
-    val aggs = steps.indices.map(i =>
-      count(element_at(col("step_us"), i + 1)).as(s"n$i"))
-    val counts = per.agg(aggs.head, aggs.tail: _*)
-    val stepRows = steps.zipWithIndex.map { case (s, i) =>
-      struct(lit(i).as("step"), lit(s).as("event_type"),
-        col(s"n$i").as("n_entities"))
-    }
-    counts.select(explode(array(stepRows: _*)).as("r"))
-      .select(col("r.step"), col("r.event_type"), col("r.n_entities"))
-  }
+                                   stepWindowSeconds: Long): DataFrame =
+    funnelReach(funnelStepsWindowedAnchored(events, entityCol, tsCol,
+      typeCol, steps, stepWindowSeconds), "step_us", steps)
 
   /** Per-step reach of the windowed funnel — [[funnelCounts]]' shape
     * over [[funnelStepsWindowed]]. */
   def funnelCountsWindowed(events: DataFrame, entityCol: String,
                            tsCol: String, typeCol: String,
                            steps: Seq[String],
-                           stepWindowSeconds: Long): DataFrame = {
-    val per = funnelStepsWindowed(events, entityCol, tsCol, typeCol,
-      steps, stepWindowSeconds)
-    val aggs = steps.indices.map(i =>
-      count(element_at(col("step_us"), i + 1)).as(s"n$i"))
-    val counts = per.agg(aggs.head, aggs.tail: _*)
-    val stepRows = steps.zipWithIndex.map { case (s, i) =>
-      struct(lit(i).as("step"), lit(s).as("event_type"),
-        col(s"n$i").as("n_entities"))
-    }
-    counts.select(explode(array(stepRows: _*)).as("r"))
-      .select(col("r.step"), col("r.event_type"), col("r.n_entities"))
-  }
+                           stepWindowSeconds: Long): DataFrame =
+    funnelReach(funnelStepsWindowed(events, entityCol, tsCol, typeCol,
+      steps, stepWindowSeconds), "step_us", steps)
 
   /** Funnel conversion summary: how many entities reached each step.
     * One row per step, in order. */
   def funnelCounts(events: DataFrame, entityCol: String, tsCol: String,
-                   typeCol: String, steps: Seq[String]): DataFrame = {
-    val per = funnelSteps(events, entityCol, tsCol, typeCol, steps)
+                   typeCol: String, steps: Seq[String]): DataFrame =
+    funnelReach(funnelSteps(events, entityCol, tsCol, typeCol, steps),
+      "step_ts", steps)
+
+  /** The funnel forms' pre-shuffle state bound, grouped by entity:
+    * only events whose type is a step, capped at the EARLIEST
+    * `maxEventsPerEntity` (0 = unbounded) per entity by (ts, type).
+    *
+    * The cap is enforced BEFORE the aggregation, not by slicing the
+    * collected array — a slice after collect_list would still
+    * materialize a pathological entity's full event list in one agg
+    * buffer, defeating the bound it claims. The rank-limit window is
+    * the same map-side group-limit trick invertedIndex uses: Spark's
+    * InferWindowGroupLimit prunes rows past the cap per map task, so
+    * both the shuffle and the agg buffer stay ≤ n rows per entity. */
+  private def funnelGroups(events: DataFrame, entityCol: String, tsCol: String,
+                           typeCol: String, steps: Seq[String],
+                           maxEventsPerEntity: Int): RelationalGroupedDataset = {
+    require(steps.nonEmpty, "funnel needs at least one step")
+    require(maxEventsPerEntity >= 0, "maxEventsPerEntity must be >= 0")
+    val relevant = events.filter(col(typeCol).isin(steps: _*))
+    val capped =
+      if (maxEventsPerEntity == 0) relevant
+      else {
+        val w = Window.partitionBy(col(entityCol))
+          .orderBy(col(tsCol).asc, col(typeCol).asc)
+        relevant.withColumn("__fs_rn", row_number().over(w))
+          .filter(col("__fs_rn") <= maxEventsPerEntity)
+          .drop("__fs_rn")
+      }
+    capped.groupBy(col(entityCol))
+  }
+
+  /** Per-step reach: one (step, event_type, n_entities) row per step,
+    * in order, counting the entities whose `slotsCol` array filled that
+    * step's slot. */
+  private def funnelReach(per: DataFrame, slotsCol: String,
+                          steps: Seq[String]): DataFrame = {
     val aggs = steps.indices.map(i =>
-      count(element_at(col("step_ts"), i + 1)).as(s"n$i"))
+      count(element_at(col(slotsCol), i + 1)).as(s"n$i"))
     val counts = per.agg(aggs.head, aggs.tail: _*)
     val stepRows = steps.zipWithIndex.map { case (s, i) =>
-      struct(lit(i).as("step"), lit(s).as("event_type"), col(s"n$i").as("n_entities"))
+      struct(lit(i).as("step"), lit(s).as("event_type"),
+        col(s"n$i").as("n_entities"))
     }
     counts.select(explode(array(stepRows: _*)).as("r"))
       .select(col("r.step"), col("r.event_type"), col("r.n_entities"))

@@ -1,7 +1,6 @@
 package graft.relational
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Shapley-value attribution — the cooperative-game member of the
@@ -41,30 +40,11 @@ object Shapley {
                          typeCol: String, idCol: String,
                          conversionType: String, touchTypes: Seq[String],
                          lookbackSeconds: Long): DataFrame = {
-    require(touchTypes.nonEmpty, "attribution needs at least one touch type")
-    require(!touchTypes.contains(conversionType),
-      s"conversion type '$conversionType' cannot also be a touch type")
-    require(lookbackSeconds > 0, "lookbackSeconds must be > 0")
     require(touchTypes.size <= MaxChannels,
       s"exact-integer Shapley supports <= $MaxChannels channels " +
         s"(L = lcm(1..12)); got ${touchTypes.size}")
-    val slim = events
-      .filter(col(typeCol) === conversionType || col(typeCol).isin(touchTypes: _*))
-      .select(col(entityCol).as("__ent"),
-        unix_micros(col(tsCol)).as("__us"),
-        col(idCol).as("__id"), col(typeCol).as("__type"),
-        when(col(typeCol) === conversionType, 1).otherwise(0).as("__kind"))
-    // the attributeTouches claim scan: next conversion within lookback
-    val scan = Window.partitionBy(col("__ent"))
-      .orderBy(col("__us").desc, col("__kind").desc, col("__id").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val assigned = slim
-      .withColumn("__conv", last(
-        when(col("__kind") === 1,
-          struct(col("__id").as("cid"), col("__us").as("cus"))),
-        ignoreNulls = true).over(scan))
-      .filter(col("__kind") === 0 && col("__conv").isNotNull &&
-        col("__conv.cus") - col("__us") <= lookbackSeconds * 1000000L)
+    val assigned = Attribution.claimScan(events, entityCol, tsCol, typeCol, idCol,
+      conversionType, touchTypes, lookbackSeconds).filter(col("__claimed"))
     // per conversion: its DISTINCT channel set (sorted for a stable key)
     val sets = assigned
       .groupBy(col("__conv.cid").as("__cid"))

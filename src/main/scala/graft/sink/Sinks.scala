@@ -13,7 +13,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.util.RawValue
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -361,16 +361,24 @@ object HttpSink {
     * ~1000-record batch means ~10⁸ rows at 100 TB: the audit detail stays
     * on storage, queryable, and only four numbers reach the driver. */
   def writeResults(results: Dataset[SinkResult], resultsPath: String): EgressStats = {
-    val obs = Observation()
-    results.observe(obs,
+    val m = observedWrite(results, resultsPath,
       count(lit(1)).as("batches"),
       count(when(col("ok"), 1)).as("ok_batches"),
       coalesce(sum(col("records")), lit(0L)).as("records"),
       coalesce(min(when(!col("ok"), col("error"))), lit("")).as("first_error"))
-      .write.mode(SaveMode.Overwrite).parquet(resultsPath)
-    val m = obs.get
     EgressStats(m("batches").asInstanceOf[Long], m("ok_batches").asInstanceOf[Long],
       m("records").asInstanceOf[Long], m("first_error").asInstanceOf[String])
+  }
+
+  /** Writes `results` to `resultsPath` (parquet, overwrite — the one
+    * materializing action) and returns `totals`, observed on that write
+    * from the tasks that committed it. */
+  private[sink] def observedWrite(results: Dataset[_], resultsPath: String,
+                                  totals: Column*): Map[String, Any] = {
+    val obs = Observation()
+    results.observe(obs, totals.head, totals.tail: _*)
+      .write.mode(SaveMode.Overwrite).parquet(resultsPath)
+    obs.get
   }
 }
 
@@ -406,14 +414,11 @@ object NetcoreSink {
   /** Write the staged-file results to `resultsPath` (the single
     * materializing action), observing the totals on that write. */
   def writeResults(staged: Dataset[StagedFile], resultsPath: String): StageStats = {
-    val obs = Observation()
-    staged.observe(obs,
+    val m = HttpSink.observedWrite(staged, resultsPath,
       count(lit(1)).as("files"),
       count(when(col("ok"), 1)).as("ok_files"),
       coalesce(sum(col("records")), lit(0L)).as("records"),
       coalesce(sum(col("bytes")), lit(0L)).as("bytes"))
-      .write.mode(SaveMode.Overwrite).parquet(resultsPath)
-    val m = obs.get
     StageStats(m("files").asInstanceOf[Long], m("ok_files").asInstanceOf[Long],
       m("records").asInstanceOf[Long], m("bytes").asInstanceOf[Long])
   }

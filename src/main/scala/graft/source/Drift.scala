@@ -2,7 +2,7 @@ package graft.source
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -276,6 +276,18 @@ object QuarantinedRead {
       corruptCol = corruptCol)
   }
 
+  /** A reader that parses PERMISSIVE against `schema` plus a nullable
+    * string `corruptCol` holding each malformed record's raw text. */
+  private def readPermissive(spark: SparkSession, schema: StructType,
+                             corruptCol: String,
+                             options: Map[String, String]): DataFrameReader =
+    spark.read
+      .options(options)
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", corruptCol)
+      .schema(StructType(schema.fields :+
+        StructField(corruptCol, StringType, nullable = true)))
+
   /** CSV with an EXPLICIT schema + PERMISSIVE parsing: rows that fail
     * to parse (wrong token count, untypeable field) land in
     * `quarantine` with the raw line preserved. Header handling is the
@@ -284,15 +296,8 @@ object QuarantinedRead {
           corruptCol: String = "_corrupt_record",
           options: Map[String, String] = Map("header" -> "true"),
           obs: Option[org.apache.spark.sql.Observation] = None): Quarantined = {
-    val withCorrupt = StructType(schema.fields :+
-      StructField(corruptCol, StringType, nullable = true))
-    val parsed = spark.read
-      .options(options)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .schema(withCorrupt)
-      .csv(path)
-    split(parsed, corruptCol, obs)
+    split(readPermissive(spark, schema, corruptCol, options).csv(path),
+      corruptCol, obs)
   }
 
   /** STREAMING twin of the quarantine contract (the continuous-ingest
@@ -376,14 +381,7 @@ object QuarantinedRead {
            corruptCol: String = "_corrupt_record",
            options: Map[String, String] = Map.empty,
            obs: Option[org.apache.spark.sql.Observation] = None): Quarantined = {
-    val withCorrupt = StructType(schema.fields :+
-      StructField(corruptCol, StringType, nullable = true))
-    val parsed = spark.read
-      .options(options)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .schema(withCorrupt)
-      .json(path)
-    split(parsed, corruptCol, obs)
+    split(readPermissive(spark, schema, corruptCol, options).json(path),
+      corruptCol, obs)
   }
 }

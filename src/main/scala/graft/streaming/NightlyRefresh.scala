@@ -95,6 +95,27 @@ object NightlyRefresh {
     * is skipped entirely, not computed and discarded. */
   val NoOnEpoch: (Long, Long) => Unit = (_, _) => ()
 
+  /** Runs `tasks` on `threads` threads and returns when all finish. A
+    * failed task must not leave its siblings writing past the aborted
+    * action on non-daemon threads: a quick same-JVM replay could race a
+    * straggler overwriting the same paths. So the first failure
+    * interrupts the in-flight tasks (shutdownNow), waits at most 60 s
+    * for them (the abort stays prompt even if a task ignores the
+    * interrupt), and rethrows. */
+  private[graft] def runSiblings(threads: Int, tasks: Seq[() => Unit]): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.sequence(tasks.map(f => Future(f()))), Duration.Inf)
+    catch { case t: Throwable =>
+      pool.shutdownNow()
+      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+      throw t
+    }
+    finally pool.shutdown()
+  }
+
   private def fsOps(spark: SparkSession) = new FsOps(spark)
 
   /** Committed epoch ids strictly below `before` (all when None),
@@ -506,44 +527,21 @@ object NightlyRefresh {
         // plans them from separate threads. Every input is a checkpointed
         // frame or a pure function of one, so no write recomputes another
         // stage. Job descriptions are thread-local: set inside each task.
-        locally {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutorService(pool)
-          val writes: Seq[(String, () => Unit)] = Seq(
-            "docs" -> (() =>
-              keptB.write.mode(SaveMode.Overwrite).parquet(s"$out/docs")),
-            "grams" -> (() =>
-              prefB.select(col("bkt"), col("g"), col("id"), col("sz"))
-                .write.mode(SaveMode.Overwrite).partitionBy("bkt")
-                .parquet(s"$out/grams")),
-            "labels" -> (() =>
-              labelsNew.withColumn("__epoch", lit(epochId))
-                .write.mode(SaveMode.Overwrite).parquet(s"$out/labels")),
-            "agg" -> (() => writeState(aggRows, "agg")),
-            "hdr" -> (() => writeState(hdrRows, "hdr")),
-            "kmv" -> (() => writeState(kmvRows, "kmv")),
-            "report" -> (() => writeState(reportRows, "report")))
-          try Await.result(
-            Future.sequence(writes.map { case (n, f) =>
-              Future(phase(s"s6 write $n")(f())) }),
-            Duration.Inf)
-          catch { case t: Throwable =>
-            // a failed write must not leave sibling writes running on
-            // non-daemon threads past the aborted batch (ADVICE r19): a
-            // quick same-JVM replay of the epoch could race a straggler
-            // overwriting the same $out/<table> paths. shutdownNow
-            // interrupts the in-flight writes; the bounded await keeps
-            // the abort prompt even if a write ignores the interrupt.
-            pool.shutdownNow()
-            pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-            throw t
-          }
-          finally pool.shutdown()
-        }
+        val writes: Seq[(String, () => Unit)] = Seq(
+          "docs" -> (() =>
+            keptB.write.mode(SaveMode.Overwrite).parquet(s"$out/docs")),
+          "grams" -> (() =>
+            prefB.select(col("bkt"), col("g"), col("id"), col("sz"))
+              .write.mode(SaveMode.Overwrite).partitionBy("bkt")
+              .parquet(s"$out/grams")),
+          "labels" -> (() =>
+            labelsNew.withColumn("__epoch", lit(epochId))
+              .write.mode(SaveMode.Overwrite).parquet(s"$out/labels")),
+          "agg" -> (() => writeState(aggRows, "agg")),
+          "hdr" -> (() => writeState(hdrRows, "hdr")),
+          "kmv" -> (() => writeState(kmvRows, "kmv")),
+          "report" -> (() => writeState(reportRows, "report")))
+        runSiblings(4, writes.map { case (n, f) => () => phase(s"s6 write $n")(f()) })
         fs.writeString(s"$out/$CommittedMarker", "")
         // live-cluster count via partial-aggregated max_by, not the
         // window resolve — the count must not re-shuffle the corpus

@@ -218,6 +218,16 @@ class Round13Spec extends SparkSpec {
         s3, maxEventsPerEntity = 10)
       .as[(Long, Seq[Option[Timestamp]])].collect().toMap
     assert(wide(1L).forall(_.isDefined))
+    // the windowed form caps the same way: with a window wider than the
+    // whole journey it must agree with funnelSteps at both caps
+    def us(t: Timestamp) = t.getTime * 1000L
+    def windowed(cap: Int) = Relational.funnelStepsWindowed(ev, "user_id",
+        "ts", "event_type", s3, stepWindowSeconds = 86400L,
+        maxEventsPerEntity = cap)
+      .as[(Long, Seq[Option[Long]])].collect().toMap
+    assert(windowed(2)(1L) == Seq(Some(us(ts("2024-01-01 10:00:00"))),
+      Some(us(ts("2024-01-01 11:00:00"))), None))
+    assert(windowed(10)(1L) == wide(1L).map(_.map(us)))
   }
 
   test("winsorize: exact discrete bounds, nulls pass through, degenerate groups") {

@@ -16,12 +16,17 @@ class SessionSpec extends SparkSpec {
   private def scalaFiles(dir: Path): List[Path] = Files.walk(dir).iterator.asScala
     .filter(_.toString.endsWith(".scala")).toList
 
+  /** Source lines of `p` that are not comment lines, with their 1-based
+    * line numbers. */
+  private def numberedCode(p: Path): Seq[(String, Int)] =
+    Files.readAllLines(p).asScala.toSeq.zipWithIndex.map { case (l, i) => (l, i + 1) }
+      .filterNot { case (l, _) =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+      }
+
   /** Source lines of `p` that are not comment lines. */
-  private def code(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
-    .filterNot { l =>
-      val t = l.trim
-      t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
-    }
+  private def code(p: Path): Seq[String] = numberedCode(p).map(_._1)
 
   test("only Session and the spark-submit job main call SparkSession.builder() in src/main") {
     val allowed = Set(root.resolve("graft/Session.scala"),
@@ -187,6 +192,41 @@ class SessionSpec extends SparkSpec {
     assert(dead.isEmpty, dead.mkString("reached by no main, SparkEntry query, job, " +
       s"GraftExtensions or perfbench: delete it, or add `<path>#<name>  <reason>` to $allowFile: ",
       ", ", ""))
+  }
+
+  test("no 10 consecutive code lines appear at two places in src/main") {
+    // one definition per decision: a copied block is a policy that a fix
+    // to one copy misses; call the helper that owns it instead. Lines
+    // compare trimmed with whitespace collapsed, blanks and comments
+    // dropped. OracleSql is exempt: each oracle is self-contained SQL.
+    val n = 10
+    val first = mutable.Map.empty[Seq[String], (Path, Int, Int)]
+    val clones = mutable.ListBuffer.empty[String]
+    val files = scalaFiles(root).sorted
+      .filterNot(_.getFileName.toString == "OracleSql.scala")
+    assert(files.size > 50, s"src/main/scala not found from ${Paths.get("").toAbsolutePath}")
+    for (p <- files) {
+      val lines = numberedCode(p)
+        .map { case (l, no) => (l.trim.split("\\s+").mkString(" "), no) }
+        .filter(_._1.nonEmpty)
+      // the partner of the previous window: a clone longer than n lines
+      // is reported once, at its first window
+      var prev: Option[(Path, Int)] = None
+      for ((w, i) <- lines.sliding(n).zipWithIndex if w.size == n) {
+        val key = w.map(_._1)
+        prev = first.get(key) match {
+          case Some((q, j, no)) =>
+            if (!prev.contains((q, j - 1)))
+              clones += s"${root.relativize(q)}:$no and ${root.relativize(p)}:${w.head._2}"
+            Some((q, j))
+          case None =>
+            first(key) = (p, i, w.head._2)
+            None
+        }
+      }
+    }
+    assert(clones.isEmpty, clones.mkString(
+      s"$n-line blocks copied in src/main (move each behind one helper): ", "; ", ""))
   }
 
   test("the shared test session carries the factory's settings") {
