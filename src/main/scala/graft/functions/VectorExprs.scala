@@ -123,7 +123,7 @@ private[graft] object ExactDecimal {
   * deliberately NOT registered on the SQL surface, where that contract
   * could not be enforced.
   */
-trait CentroidMatrixKernel {
+trait CentroidMatrixKernel extends BinaryExpression {
   import ExactDecimal._
   @transient @volatile
   private var cache: (Array[Array[Double]], Array[Double]) = _
@@ -140,6 +140,15 @@ trait CentroidMatrixKernel {
     }
     c
   }
+
+  /** Type checks of the query vector (left) and the centroid matrix
+    * (right); a failure names `fn`. */
+  protected def checkVectorAndMatrix(fn: String): TypeCheckResult = {
+    val l = checkArrayNumeric(left.dataType, fn)
+    if (l.isFailure) l else checkMatrix(right.dataType, fn)
+  }
+  @transient protected lazy val isFloat =
+    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   /** L2² distance in the exact arithmetic the oracle mirrors:
     * (n2x + n2c) − 2·dotExact(x, c), evaluated in double in that order. */
@@ -300,12 +309,7 @@ case class IvfAssignExpr(left: Expression, right: Expression)
   override protected def unbox(boxed: String): String = s"$boxed.intValue()"
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = checkArrayNumeric(left.dataType, "ivf_assign")
-    if (l.isFailure) l else checkMatrix(right.dataType, "ivf_assign")
-  }
-  @transient private lazy val isFloat =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override def checkInputDataTypes(): TypeCheckResult = checkVectorAndMatrix("ivf_assign")
 
   override def nullSafeEval(v: Any, m: Any): Any = {
     val x = toDoubles(v.asInstanceOf[ArrayData], isFloat)
@@ -341,12 +345,7 @@ case class IvfProbesExpr(left: Expression, right: Expression, nprobe: Int)
   override protected def resultNullable: Boolean = true
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = checkArrayNumeric(left.dataType, "ivf_probes")
-    if (l.isFailure) l else checkMatrix(right.dataType, "ivf_probes")
-  }
-  @transient private lazy val isFloat =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override def checkInputDataTypes(): TypeCheckResult = checkVectorAndMatrix("ivf_probes")
 
   override def nullSafeEval(v: Any, m: Any): Any = {
     val x = toDoubles(v.asInstanceOf[ArrayData], isFloat)

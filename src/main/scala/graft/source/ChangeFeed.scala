@@ -129,12 +129,12 @@ object Bookmarks {
     bfs.rename(new Path(tmp), dst)
   }
 
-  /** Every (job, bookmark) row: the one reader of the table. */
+  /** Every (job, bookmark) row: the one reader of the table. It reads
+    * with the schema `upsert` writes, so no footer-inference job runs. */
   private def lookupAll(spark: SparkSession, path: String): Seq[(String, Timestamp)] =
     current(spark, path).toSeq.flatMap { dir =>
-      spark.read.parquet(dir)
-        .select("query_name", "last_job_run") // by name, not position
-        .collect()                            // metadata-sized read; legitimate collect (R5)
+      spark.read.schema("query_name STRING, last_job_run TIMESTAMP").parquet(dir)
+        .collect() // metadata-sized read; legitimate collect (R5)
         .map(r => (r.getString(0), r.getTimestamp(1))).toSeq
     }
 }

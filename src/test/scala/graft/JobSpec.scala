@@ -354,6 +354,18 @@ class JobSpec extends SparkSpec {
     }
   }
 
+  test("a nightly run against an existing bookmark reads it without schema inference") {
+    val conf = oneActionFixture("seeded_bookmark_jobs")
+    Bookmarks.upsert(spark, conf.bookmarkPath, conf.jobName, ts("2024-05-01 09:00:00"))
+    val (res, jobs, _) = recordRun(UserProfileJob.run(spark, conf, _ => (200, "ok")))
+    assert(res.validRows == 2500 && res.invalidRows == 1 && res.okBatches == res.batches)
+    assert(res.newBookmark.contains(ts("2024-05-01 11:00:00")))
+    // the ≤6 of a first run, plus one collect each for the bookmark
+    // lookup and the upsert's read-merge; inferring the table's schema
+    // on both reads took 10
+    assert(jobs <= 8, s"$jobs Spark jobs for a run past a bookmark")
+  }
+
   /** A JDK HTTP stub answering each request with `status()`; `bodies`
     * collects request bodies. */
   private def withStub(status: () => Int)(f: (String, CopyOnWriteArrayList[String]) => Unit): Unit = {

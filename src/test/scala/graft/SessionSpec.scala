@@ -39,6 +39,28 @@ class SessionSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("build through graft.Session: ", ", ", ""))
   }
 
+  /** `.parquet("…/<table>.parquet")` calls in `text` whose chain starts
+    * with `read` (or `readStream`), for every table of `Tables.names`. */
+  private def directTableReads(text: String): Seq[String] = {
+    val call = ("""\.parquet\(\s*s?"[^"]*/(?:""" + Tables.names.mkString("|") +
+      """)\.parquet\b""").r
+    val chainHead = """\.(read|write)(?:Stream)?\b""".r
+    call.findAllMatchIn(text).filter { m =>
+      chainHead.findAllMatchIn(text.substring(0, m.start)).toSeq.lastOption
+        .exists(_.group(1) == "read")
+    }.map(_.matched).toSeq
+  }
+
+  test("src/main reads a Tables.names table only through Tables.load") {
+    // the scan itself: a read chain split over lines is caught, a write is not
+    assert(directTableReads("spark.read\n  .parquet(s\"$dir/customer.parquet\")").size == 1)
+    assert(directTableReads("df.write.mode(\"overwrite\").parquet(s\"$dir/customer.parquet\")").isEmpty)
+    val offenders = scalaFiles(root).filterNot(_ == root.resolve("graft/Tables.scala"))
+      .flatMap(p => directTableReads(code(p).mkString("\n")).map(m => s"${root.relativize(p)}: $m"))
+    assert(offenders.isEmpty,
+      offenders.mkString("read through Tables.load, which remembers each schema: ", ", ", ""))
+  }
+
   test("the jobs write the invalid-record split once: one splitInvalid, one observeEgress") {
     val jobs = scalaFiles(root.resolve("graft/jobs")).flatMap(code)
     assert(jobs.nonEmpty, s"src/main/scala/graft/jobs not found from ${Paths.get("").toAbsolutePath}")
