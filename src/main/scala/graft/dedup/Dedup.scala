@@ -142,13 +142,16 @@ object Dedup extends graft.core.Logging {
     graft.functions.HashFunctions.minhashSig(shingleHashes, k)
 
   /** LSH banding: signature array → `bands` band keys, each hashing `rowsPerBand`
-    * consecutive signature entries. Rows sharing any band key are candidates. */
+    * consecutive signature entries. Rows sharing any band key are candidates.
+    * One `transform` over the band indices keeps the expression tree and
+    * its generated code one band wide at any band count: spelled out per
+    * band, 32 bands generate a method past HotSpot's 8 KB huge-method
+    * limit, which the JIT leaves interpreted. */
   def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand)))
-          .as("bucket"))
-    }: _*)
+    transform(sequence(lit(0), lit(bands - 1)), b =>
+      struct(b.as("band"),
+        xxhash64(concat_ws(",",
+          slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)))).as("bucket")))
 
   /** Exact Jaccard similarity of two SORTED shingle-hash arrays (as
     * produced by shingles()): intersection via native merge scan —
@@ -185,12 +188,11 @@ object Dedup extends graft.core.Logging {
 
     // Candidate ID pairs first (narrow shuffle payload: ids + band keys),
     // THEN join the shingle arrays back by id for the exact verify — the
-    // wide arrays never ride through the band join.
-    val l = banded.select(col("bk"), col("id").as("id_a"))
-    val r = banded.select(col("bk"), col("id").as("id_b"))
-    val cand = l.join(r, Seq("bk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
+    // wide arrays never ride through the band join. `selfJoin` keeps the
+    // two sides one relation, so the signatures are computed once.
+    val cand = selfJoin(banded, "bk")
+      .filter(col("l.id") < col("r.id"))
+      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
 
     cand
@@ -332,18 +334,30 @@ object Dedup extends graft.core.Logging {
     // documents share chunk values, so hot buckets are the norm, and an
     // O(B²) collect_list expansion materializes them). The Hamming filter
     // runs BEFORE dropDuplicates: the dedup then sees only qualifying
-    // pairs (a tiny set) instead of the full candidate volume. The
-    // signature subtree is computed per join side but is a cheap narrow
-    // scan; Spark's exchange reuse dedups the shuffle when plans align.
-    val l = chunked.select(col("ck"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val r = chunked.select(col("ck"), col("id").as("id_b"), col("sig").as("sig_b"))
-    l.join(r, Seq("ck"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", hamming64(col("sig_a"), col("sig_b")))
+    // pairs (a tiny set) instead of the full candidate volume. Both
+    // sides are one relation (`selfJoin`), so the signature subtree runs
+    // once and the second side reads the first's exchange.
+    selfJoin(chunked, "ck")
+      .filter(col("l.id") < col("r.id"))
+      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
+        hamming64(col("l.sig"), col("r.sig")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
-      .select("id_a", "id_b", "hamming")
   }
+
+  /** Bucket self-join of `df` on its `key` column, sides aliased `l` and
+    * `r`. Both sides are the same relation under one sort-merge join, so
+    * each sits on an identical `ENSURE_REQUIREMENTS` hash exchange and
+    * Spark's exchange reuse evaluates `df` — its scan and signature
+    * kernels — once; the second side is a `ReusedExchange`. Left to
+    * itself the planner broadcasts one side at small sizes, and then
+    * nothing is shared and every kernel runs once per side. The `merge`
+    * hint pins the sort-merge join the planner picks at scale anyway,
+    * which keeps AQE's skew-join split for hot buckets: that split
+    * accepts only `ENSURE_REQUIREMENTS` shuffles, so a
+    * `repartition(key)` exchange would lose it. */
+  private def selfJoin(df: DataFrame, key: String): DataFrame =
+    df.as("l").join(df.as("r").hint("merge"), col(s"l.$key") === col(s"r.$key"))
 
   /** `sigs`' `keep` columns with one row per bit-chunk of the 64-bit
     * `sig`: `ck` = (chunk, key), the chunk's bits shifted down. The

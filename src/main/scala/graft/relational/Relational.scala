@@ -265,14 +265,9 @@ object Relational {
                           tsCol: String, typeCol: String,
                           steps: Seq[String], stepWindowSeconds: Long,
                           maxEventsPerEntity: Int = 0): DataFrame = {
-    require(stepWindowSeconds > 0, "step window must be positive")
-    val byEntity = funnelGroups(events, entityCol, tsCol, typeCol, steps,
+    val WindowedFunnel(byEntity, k, wUs, stepArr, evs) = windowedFunnel(
+      events, entityCol, tsCol, typeCol, steps, stepWindowSeconds,
       maxEventsPerEntity)
-    val k = steps.size
-    val wUs = stepWindowSeconds * 1000000L
-    val stepArr = array(steps.map(lit): _*)
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol)).as("us"), col(typeCol).as("et"))))
     val folded = aggregate(
       evs,
       array_repeat(lit(null).cast("long"), k),
@@ -325,14 +320,9 @@ object Relational {
                                   steps: Seq[String],
                                   stepWindowSeconds: Long,
                                   maxEventsPerEntity: Int = 0): DataFrame = {
-    require(stepWindowSeconds > 0, "step window must be positive")
-    val byEntity = funnelGroups(events, entityCol, tsCol, typeCol, steps,
+    val WindowedFunnel(byEntity, k, wUs, stepArr, evs) = windowedFunnel(
+      events, entityCol, tsCol, typeCol, steps, stepWindowSeconds,
       maxEventsPerEntity)
-    val k = steps.size
-    val wUs = stepWindowSeconds * 1000000L
-    val stepArr = array(steps.map(lit): _*)
-    val evs = sort_array(collect_list(struct(
-      unix_micros(col(tsCol)).as("us"), col(typeCol).as("et"))))
     // greedy chain from one anchor: slot 1 pre-filled, the windowed
     // fold fills the rest (events at/before the anchor fail the
     // strict `>`; filled starts at 1 so the filled===0 arm is dead)
@@ -396,6 +386,29 @@ object Relational {
                    typeCol: String, steps: Seq[String]): DataFrame =
     funnelReach(funnelSteps(events, entityCol, tsCol, typeCol, steps),
       "step_ts", steps)
+
+  /** What both windowed funnel forms start from: the entity groups
+    * ([[funnelGroups]]), the step count `k`, the window in micros, the
+    * step names as an array literal, and the aggregate that collects an
+    * entity's (us, et) events in time order. */
+  private case class WindowedFunnel(byEntity: RelationalGroupedDataset,
+                                    k: Int, wUs: Long, stepArr: Column,
+                                    evs: Column)
+
+  private def windowedFunnel(events: DataFrame, entityCol: String,
+                             tsCol: String, typeCol: String,
+                             steps: Seq[String], stepWindowSeconds: Long,
+                             maxEventsPerEntity: Int): WindowedFunnel = {
+    require(stepWindowSeconds > 0, "step window must be positive")
+    WindowedFunnel(
+      funnelGroups(events, entityCol, tsCol, typeCol, steps,
+        maxEventsPerEntity),
+      steps.size,
+      stepWindowSeconds * 1000000L,
+      array(steps.map(lit): _*),
+      sort_array(collect_list(struct(
+        unix_micros(col(tsCol)).as("us"), col(typeCol).as("et")))))
+  }
 
   /** The funnel forms' pre-shuffle state bound, grouped by entity:
     * only events whose type is a step, capped at the EARLIEST

@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.source.CatalogOps
@@ -57,6 +58,37 @@ class DedupSpec extends SparkSpec {
       shingleN = 2, numHashes = 64, bands = 32, threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
+  }
+
+  test("bandKeys: the one-expression form returns the literal struct-array form's keys") {
+    // the earlier form, kept here as the reference: one struct per band,
+    // spelled out as a literal array
+    def literalBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+      array((0 until bands).map { b =>
+        struct(lit(b).as("band"),
+          xxhash64(concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand)))
+            .as("bucket"))
+      }: _*)
+    val rnd = new scala.util.Random(7)
+    val sigs = Seq[(Int, Option[Seq[Long]])](
+      (1, Some(Seq.fill(64)(rnd.nextLong()))),
+      (2, Some(Seq.fill(64)(rnd.nextLong()))),
+      (3, Some(Seq(5L, -1L, 42L))),   // short: later bands slice past the end
+      (4, Some(Seq.empty[Long])),
+      (5, None)                       // null signature
+    ).toDF("id", "sig")
+    for ((bands, rows) <- Seq((32, 2), (16, 4), (1, 64))) {
+      val got = sigs.select($"id", Dedup.bandKeys($"sig", bands, rows).as("k"))
+        .orderBy("id")
+      val ref = sigs.select($"id", literalBandKeys($"sig", bands, rows).as("k"))
+        .orderBy("id")
+      assert(got.schema("k").dataType == ref.schema("k").dataType,
+        s"bands=$bands: ${got.schema("k").dataType} vs ${ref.schema("k").dataType}")
+      assert(got.schema("k").nullable == ref.schema("k").nullable)
+      val (g, r) = (got.collect().toSeq, ref.collect().toSeq)
+      assert(g.map(_.getSeq[Any](1).size).forall(_ == bands))
+      assert(g == r, s"bands=$bands rows=$rows")
+    }
   }
 
   test("simhash: identical text distance 0; near text small; different text large") {

@@ -462,6 +462,34 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q40/q41/q99 text near-dups: each signature kernel runs once — the band/chunk join reuses one exchange") {
+    // The blocking self-join's two sides are one relation under a
+    // sort-merge join (Dedup.selfJoin): the second side must be a
+    // ReusedExchange of the first, so the scan, shingles and signature
+    // run once. Without it the planner broadcasts one side and every
+    // kernel runs once per side.
+    def sites(s: String, kernel: String): Int = kernel.r.findAllIn(s).size
+    def parquetScans(s: String): Int =
+      s.linesIterator.count(_.contains("Scan parquet"))
+    def reusesJoinKey(s: String, key: String): Boolean =
+      s.linesIterator.exists(l => l.contains("ReusedExchange") &&
+        l.contains(s"hashpartitioning($key#"))
+    val q40 = planString(q("q40_minhash_neardups"))
+    assert(reusesJoinKey(q40, "bk"), s"band join must reuse the signature exchange:\n$q40")
+    assert(sites(q40, "minhashsigexpr") == 1, s"minhash signature computed more than once:\n$q40")
+    // one scan under the signature side, one under the shingle join-back
+    assert(parquetScans(q40) == 2, s"documents read more than twice:\n$q40")
+    for (name <- Seq("q41_simhash_neardups", "q99_simhash_banded")) {
+      val s = planString(q(name))
+      assert(reusesJoinKey(s, "ck"), s"$name: chunk join must reuse the signature exchange:\n$s")
+      assert(parquetScans(s) == 1, s"$name: the signature side must read documents once:\n$s")
+      // the Project's site, plus the inferred isnotnull(simhash64(…))
+      // conjunct in the scan-side Filter and again in the FileScan's
+      // DataFilters text; 6 when each join side computed its own
+      assert(sites(s, "simhash64expr") <= 3, s"$name: simhash computed per join side:\n$s")
+    }
+  }
+
   test("q120 interval join plans an EQUI join on the grid bucket, never a nested-loop product") {
     val s = planString(q("q120_interval_join"))
     assert(!s.contains("BroadcastNestedLoopJoin") && !s.contains("CartesianProduct"),
