@@ -571,8 +571,18 @@ object MultiModal {
 
   /** Frame sampling for "video" blobs: every k-th fixed-size chunk of the
     * payload as its own binary — partition-local, bounded memory. */
-  def sampleFrames(media: DataFrame, frameBytes: Int, everyK: Int): DataFrame = {
-    val spark = media.sparkSession
+  def sampleFrames(media: DataFrame, frameBytes: Int, everyK: Int): DataFrame =
+    explodeFrames(media) { raw =>
+      val bytes = if (isFakeHeader(raw)) raw.drop(16) else raw
+      bytes.grouped(frameBytes).zipWithIndex
+        .filter { case (_, i) => i % everyK == 0 }
+    }
+
+  /** One `(media_id, frame_no, frame)` row per `(frame, frame_no)` that
+    * `frames` cuts from a blob's content, partition-local: the frame
+    * table of [[sampleFrames]] and [[extractVideoFrames]]. */
+  private def explodeFrames(media: DataFrame)(
+      frames: Array[Byte] => Iterator[(Array[Byte], Int)]): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("frame_no", IntegerType, nullable = false),
@@ -580,14 +590,10 @@ object MultiModal {
     val rdd = media.select("media_id", "content").rdd.mapPartitions { it =>
       it.flatMap { r =>
         val id = r.getLong(0)
-        val raw = r.getAs[Array[Byte]](1)
-        val bytes = if (isFakeHeader(raw)) raw.drop(16) else raw
-        bytes.grouped(frameBytes).zipWithIndex
-          .filter { case (_, i) => i % everyK == 0 }
-          .map { case (chunk, i) => Row(id, i, chunk) }
+        frames(r.getAs[Array[Byte]](1)).map { case (f, i) => Row(id, i, f) }
       }
     }
-    spark.createDataFrame(rdd, outSchema)
+    media.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** Synthesize a media table from the documents fixture (deterministic),
@@ -733,21 +739,8 @@ object MultiModal {
     * real-container replacement for [[sampleFrames]]: one sequential
     * parse per blob, frames stream out of the iterator without
     * buffering the whole video table anywhere. */
-  def extractVideoFrames(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_no", IntegerType, nullable = false),
-      StructField("frame", BinaryType, nullable = false)))
-    val rdd = media.select("media_id", "content").rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val (_, frames) = decodeAvi(r.getAs[Array[Byte]](1))
-        frames.iterator.zipWithIndex.map { case (f, i) => Row(id, i, f) }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  def extractVideoFrames(media: DataFrame): DataFrame =
+    explodeFrames(media)(raw => decodeAvi(raw)._2.iterator.zipWithIndex)
 
   /** Parse + per-frame decode in ONE partition-local pass: container
     * metadata joined with each frame's decoded dimensions ([[decodeImage]]

@@ -691,13 +691,21 @@ object Relational {
       it.map { r =>
         val ent = r.get(0)
         if (first || ent != curEnt) { sent.clear(); curEnt = ent; first = false }
-        val us = r.getLong(2)
-        while (sent.nonEmpty && sent.head < us - winUs) sent.removeHead()
-        val ok = sent.size < cap
-        if (ok) sent.append(us)
-        Row.fromSeq(r.toSeq :+ ok)
+        Row.fromSeq(r.toSeq :+ capAdmit(sent, r.getLong(2), winUs, cap))
       }
     }(enc)
+  }
+
+  /** One step of [[frequencyCapEnforce]]'s send gate, shared with its
+    * streaming twin: drop the allowed send times older than the window
+    * from `sent`, then allow the send at `us` (and remember it) iff
+    * fewer than `cap` remain. */
+  private[graft] def capAdmit(sent: scala.collection.mutable.ArrayDeque[Long],
+                              us: Long, winUs: Long, cap: Int): Boolean = {
+    while (sent.nonEmpty && sent.head < us - winUs) sent.removeHead()
+    val ok = sent.size < cap
+    if (ok) sent.append(us)
+    ok
   }
 
   /** Cohort LTV curve — the revenue companion of [[weeklyRetention]]:

@@ -1,64 +1,39 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming twin of the batch incremental pipeline (SURVEY §7
-  * M6): the reference hand-rolls incrementality with a bookmark table;
-  * Spark's native answer is `readStream` + watermark + stateful
-  * latest-per-key. Both forms share the same downstream transforms.
+import graft.relational.Relational
+
+/** Structured Streaming twins of the batch operators (SURVEY §7 M6).
+  * The reference hand-rolls incrementality with a bookmark table; its
+  * one stateful step, latest-change-per-key (SURVEY §0 step 2), needs
+  * no twin here: [[graft.dedup.Dedup.latestPerKeyAgg]] runs unchanged
+  * over a `readStream` as an update-mode streaming aggregation whose
+  * state is one row per key, the shape [[StreamingRollup]]'s twins
+  * share. Spark's own streaming calls (watermarked `dropDuplicates`,
+  * `window`/`session_window` counts, stream-static joins) are likewise
+  * called directly.
+  *
+  * What stays holds its own code for a stated reason:
+  *   - the `mapGroupsWithState`/`flatMapGroupsWithState` folds keep
+  *     bounded per-key state (open islands, k funnel slots, live anchor
+  *     chains, the current SCD2 version, the lookback's pending
+  *     touches, the cap window's sends), where each batch operator is a
+  *     window over a key's whole history. Re-running the batch operator
+  *     per epoch over stored state plus the delta would not give the
+  *     same rows: `scd2Merge` numbers versions from the closed history,
+  *     and `intervalMerge` counts rows, not island weights. A fold
+  *     shares its step with the batch twin where that twin runs the
+  *     step in Scala ([[graft.relational.Relational.capAdmit]]);
+  *   - [[intervalJoin]] and [[incrementalDedupStream]] hold their own
+  *     predicate or composition;
+  *   - the `foreachBatch` writers run a batch operator per epoch.
   */
 object StreamingDedup {
 
-  case class KeyedChange(key: Long, ts: java.sql.Timestamp, payload: String)
-  case class LatestState(ts: java.sql.Timestamp, payload: String)
-
-  /** Streaming source over a changelog directory (file source replays
-    * existing files then tails new ones — the streaming analogue of the
-    * changelog-table convention). */
-  def changelogStream(spark: SparkSession, path: String,
-                      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(path)
-
-  /** Exact-once dedup of change events within the watermark window:
-    * `dropDuplicates` on (key, ts) with event-time watermark bounds state. */
-  def dedupWithinWatermark(changes: DataFrame, keyCol: String, tsCol: String,
-                           watermark: String): DataFrame =
-    changes.withWatermark(tsCol, watermark)
-      .dropDuplicates(keyCol, tsCol)
-
-  /** Dedup with GUARANTEED eviction semantics:
-    * `dropDuplicatesWithinWatermark` keys state on the dedup columns
-    * alone (no event-time column in the key) and expires each entry one
-    * watermark-delay after its FIRST sighting — the right primitive when
-    * duplicates carry slightly different timestamps (retried producers,
-    * clock skew), which `dropDuplicates(key, ts)` would pass through as
-    * distinct rows. */
-  def dedupKeysWithinWatermark(changes: DataFrame, keyCols: Seq[String],
-                               tsCol: String, watermark: String): DataFrame =
-    changes.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-
-  /** Latest-change-per-key as continuously-updated state:
-    * mapGroupsWithState keeps one row per key (the newest by ts) and
-    * emits it on every update — the streaming twin of
-    * Dedup.latestPerKey. State size = #distinct keys, bounded by the
-    * key domain, not the stream length. */
-  def latestPerKeyStream(changes: Dataset[KeyedChange]): Dataset[(Long, LatestState)] = {
-    import changes.sparkSession.implicits._
-    changes.groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[KeyedChange], state: GroupState[LatestState]) =>
-          val newest = (rows.map(c => LatestState(c.ts, c.payload)) ++
-            state.getOption.iterator).maxBy(_.ts.getTime)
-          state.update(newest)
-          key -> newest
-      }
-  }
-
   case class FunnelEvent(user: Long, ts: java.sql.Timestamp, etype: String)
-  case class FunnelState(stepTs: Seq[Option[java.sql.Timestamp]])
 
   case class IvInterval(key: Long, s: Long, e: Long)
   case class IslandRec(s: Long, e: Long, n: Long)
@@ -95,15 +70,30 @@ object StreamingDedup {
       }
   }
 
-  /** Streaming twin of [[graft.relational.Relational.funnelSteps]]:
-    * per-entity k-slot funnel state updated each micro-batch and emitted
-    * on every change. State is k timestamps per entity — O(k), never the
-    * event history — so a continuously-running funnel stays bounded by
-    * the entity domain, like [[latestPerKeyStream]].
+  /** Event time in exact integer micros, the batch funnels' `unix_micros`. */
+  private def us(t: java.sql.Timestamp): Long =
+    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+
+  /** The funnel twins' preamble: the batch operators' pre-shuffle step
+    * filter (non-step events can never fill a slot, so dropping them
+    * before grouping keeps state churn bounded AND keeps stream ≡ batch
+    * on the output row set — entities with no step-relevant events are
+    * absent from BOTH), then one group per user. */
+  private def stepGroups(events: Dataset[FunnelEvent], steps: Seq[String]) = {
+    import events.sparkSession.implicits._
+    val stepSet = steps.toSet
+    events.filter(e => stepSet.contains(e.etype)).groupByKey(_.user)
+  }
+
+  /** Streaming twin of [[graft.relational.Relational.funnelSteps]]: the
+    * [[funnelStreamWindowed]] fold with no deadline, its exact-micros
+    * slots mapped back to timestamps. State is k slots per entity —
+    * O(k), never the event history — so a continuously-running funnel
+    * stays bounded by the entity domain.
     *
     * Equality with the batch fold holds when each entity's events arrive
     * in event-time order ACROSS micro-batches (within a batch, events
-    * are sorted by (ts, type) first — same tie order as the batch
+    * are sorted by (micros, type) first — same tie order as the batch
     * sort_array fold). A prerequisite that arrives in a LATER batch than
     * its dependent step cannot resurrect it: the dependent event is gone
     * (bounded state means no replay). ExtraSpec pins both the equality
@@ -111,55 +101,34 @@ object StreamingDedup {
   def funnelStream(events: Dataset[FunnelEvent], steps: Seq[String])
       : Dataset[(Long, Seq[Option[java.sql.Timestamp]])] = {
     import events.sparkSession.implicits._
-    val k = steps.size
-    // mirror the batch operator's pre-shuffle step filter (round 13):
-    // non-step events can never fill a slot, so dropping them before
-    // grouping keeps state churn bounded AND keeps stream ≡ batch on
-    // the output row set — entities with no step-relevant events are
-    // absent from BOTH (the batch form stopped emitting their all-null
-    // rows when it gained the filter)
-    val stepSet = steps.toSet
-    events.filter(e => stepSet.contains(e.etype))
-      .groupByKey(_.user)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          val slots = state.getOption.map(_.stepTs.toArray)
-            .getOrElse(Array.fill(k)(Option.empty[java.sql.Timestamp]))
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.etype)).foreach { e =>
-            val filled = slots.indexWhere(_.isEmpty) match {
-              case -1 => k
-              case i  => i
-            }
-            if (filled < k && e.etype == steps(filled) &&
-                (filled == 0 ||
-                  slots(filled - 1).exists(p => e.ts.getTime > p.getTime)))
-              slots(filled) = Some(e.ts)
-          }
-          state.update(FunnelState(slots.toSeq))
-          user -> slots.toSeq
-      }
+    funnelSlots(events, steps, Long.MaxValue)
+      .select(col("_1"), transform(col("_2"), u => timestamp_micros(u)).as("_2"))
+      .as[(Long, Seq[Option[java.sql.Timestamp]])]
   }
 
   /** Streaming twin of
     * [[graft.relational.Relational.funnelStepsWindowed]]: the k-slot
     * state machine with the per-step DEADLINE — slot i+1 fills only
     * within `stepWindowSeconds` of slot i (exact integer micros,
-    * matching the batch fold). Same O(k)-timestamps state bound and
-    * the same in-order-arrival prerequisite as [[funnelStream]]; a
-    * stalled chain stays stalled (greedy-anchor semantics — the batch
-    * contract). Emits the slot micros on every change. */
+    * matching the batch fold). Same O(k) state bound and the same
+    * in-order-arrival prerequisite as [[funnelStream]]; a stalled chain
+    * stays stalled (greedy-anchor semantics — the batch contract).
+    * Emits the slot micros on every change. */
   def funnelStreamWindowed(events: Dataset[FunnelEvent],
                            steps: Seq[String], stepWindowSeconds: Long)
       : Dataset[(Long, Seq[Option[Long]])] = {
-    import events.sparkSession.implicits._
     require(stepWindowSeconds > 0, "step window must be positive")
+    funnelSlots(events, steps, stepWindowSeconds * 1000000L)
+  }
+
+  /** The k-slot fold of [[funnelStream]] and [[funnelStreamWindowed]]:
+    * slot i+1 fills at the first step-(i+1) event strictly after slot i
+    * and at most `wUs` micros after it (`Long.MaxValue`: no deadline). */
+  private def funnelSlots(events: Dataset[FunnelEvent], steps: Seq[String],
+                          wUs: Long): Dataset[(Long, Seq[Option[Long]])] = {
+    import events.sparkSession.implicits._
     val k = steps.size
-    val wUs = stepWindowSeconds * 1000000L
-    val stepSet = steps.toSet
-    def us(t: java.sql.Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-    events.filter(e => stepSet.contains(e.etype))
-      .groupByKey(_.user)
+    stepGroups(events, steps)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
         (user: Long, rows: Iterator[FunnelEvent],
          state: GroupState[WindowedFunnelState]) =>
@@ -210,15 +179,11 @@ object StreamingDedup {
     require(stepWindowSeconds > 0, "step window must be positive")
     val k = steps.size
     val wUs = stepWindowSeconds * 1000000L
-    val stepSet = steps.toSet
-    def us(t: java.sql.Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
     // (depth, anchor) order: deeper wins; earlier anchor at equal depth
     def better(a: Seq[Long], b: Seq[Long]): Boolean =
       a.size > b.size || (a.size == b.size && a.nonEmpty && b.nonEmpty &&
         a.head < b.head)
-    events.filter(e => stepSet.contains(e.etype))
-      .groupByKey(_.user)
+    stepGroups(events, steps)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
         (user: Long, rows: Iterator[FunnelEvent],
          state: GroupState[AnchoredFunnelState]) =>
@@ -275,7 +240,7 @@ object StreamingDedup {
     * versions maintained continuously. State per key is ONLY the
     * current version — O(1), never the history (the closed versions
     * are emitted, not retained), so the state store is bounded by the
-    * key domain like [[latestPerKeyStream]].
+    * key domain like the streaming latest-per-key aggregation.
     *
     * Each batch's rows apply in (us, id) order (the batch total
     * order); a no-op restatement of the current attributes collapses
@@ -387,9 +352,10 @@ object StreamingDedup {
     * send-time gate as continuous state — per entity, the deque of its
     * last ≤ cap ALLOWED send times inside the window (suppressed sends
     * never enter state, exactly the batch semantics). State is O(cap)
-    * per entity by construction. Append-final emissions; equality with
-    * the batch pass holds under event-time-ordered arrival
-    * (Round14Spec, 2-batch split). */
+    * per entity by construction, and each send runs the batch pass's
+    * step, [[graft.relational.Relational.capAdmit]]. Append-final
+    * emissions; equality with the batch pass holds under
+    * event-time-ordered arrival (Round14Spec, 2-batch split). */
   def frequencyCapStream(events: Dataset[CapEvent], windowSeconds: Long,
                          cap: Int): Dataset[(Long, Long, Boolean)] = {
     import events.sparkSession.implicits._
@@ -401,43 +367,12 @@ object StreamingDedup {
           val sent = scala.collection.mutable.ArrayDeque.from(
             state.getOption.map(_.sent).getOrElse(Seq.empty))
           val out = rows.toSeq.sortBy(e => (e.us, e.id)).map { e =>
-            while (sent.nonEmpty && sent.head < e.us - winUs) sent.removeHead()
-            val ok = sent.size < cap
-            if (ok) sent.append(e.us)
-            (user, e.id, ok)
+            (user, e.id, Relational.capAdmit(sent, e.us, winUs, cap))
           }
           state.update(CapState(sent.toSeq))
           out.iterator
       }
   }
-
-  /** Windowed aggregation over the event stream: tumbling-window counts
-    * per event type with a watermark (the standard streaming agg shape). */
-  def windowedCounts(events: DataFrame, tsCol: String, typeCol: String,
-                     window: String, watermark: String): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window),
-        col(typeCol))
-      .agg(count(lit(1)).as("n"))
-
-  /** Sliding-window counts: like windowedCounts but windows overlap
-    * (`window` length, `slide` step) — each event lands in
-    * window/slide buckets. */
-  def slidingCounts(events: DataFrame, tsCol: String, typeCol: String,
-                    window: String, slide: String, watermark: String): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window, slide),
-        col(typeCol))
-      .agg(count(lit(1)).as("n"))
-
-  /** Session-window counts per key: a session extends while events keep
-    * arriving within `gap` of each other; state closes `gap` past the
-    * watermark. The streaming shape for user-activity sessionization. */
-  def sessionCounts(events: DataFrame, tsCol: String, keyCol: String,
-                    gap: String, watermark: String): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n"))
 
   /** Streaming twin of the q82 incremental-ingest dedup: new documents
     * stream in, duplicates INSIDE the stream collapse on fingerprint
@@ -456,13 +391,6 @@ object StreamingDedup {
     docs.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(fpCol)
       .join(historyFps.select(col(fpCol)).distinct(), Seq(fpCol), "left_anti")
-
-  /** Stream–static enrichment join: the streaming fact side joins a
-    * static dimension (broadcast by Catalyst when small) — no state, no
-    * watermark needed on the static side; the streaming analogue of the
-    * mapping-table attribute join in the batch job. */
-  def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left")
 
   /** Watermarked stream–stream interval join: left events match right
     * events of the same key with rightTs in [leftTs − bound, leftTs].
@@ -529,13 +457,4 @@ object StreamingDedup {
         .parquet(s"$reportPath/epoch=$epochId")
       onEpoch(epochId, rows.get("rows").asInstanceOf[Long])
     }
-
-  /** Run a streaming query on a memory sink until all available input is
-    * processed (local smoke harness). */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): Unit = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    q.processAllAvailable()
-    q.stop()
-  }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
 import graft.core.AppConfig
+import graft.dedup.Dedup
 import graft.multimodal.MultiModal
 import graft.source.CatalogOps
 import graft.streaming.StreamingDedup
@@ -17,6 +18,7 @@ import graft.transform.DateMacros
   * multimodal plumbing. */
 class ExtraSpec extends SparkSpec {
   import spark.implicits._
+  import ExtraSpec.KeyedChange
 
   test("T12 date macros substitute on the IST clock") {
     val now = ZonedDateTime.of(2024, 3, 10, 1, 5, 0, 0, ZoneId.of("UTC"))
@@ -64,18 +66,17 @@ class ExtraSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-stream").toString
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     Seq(
-      StreamingDedup.KeyedChange(1L, ts("2024-01-01 10:00:00"), "old"),
-      StreamingDedup.KeyedChange(1L, ts("2024-01-01 11:00:00"), "new"),
-      StreamingDedup.KeyedChange(2L, ts("2024-01-01 09:00:00"), "only")
+      KeyedChange(1L, ts("2024-01-01 10:00:00"), "old"),
+      KeyedChange(1L, ts("2024-01-01 11:00:00"), "new"),
+      KeyedChange(2L, ts("2024-01-01 09:00:00"), "only")
     ).toDS().write.parquet(s"$dir/in")
-    val schema = implicitly[org.apache.spark.sql.Encoder[StreamingDedup.KeyedChange]].schema
-    val stream = StreamingDedup.changelogStream(spark, s"$dir/in", schema)
-      .as[StreamingDedup.KeyedChange]
-    StreamingDedup.runToMemory(
-      StreamingDedup.latestPerKeyStream(stream).toDF("key", "latest"),
+    val schema = implicitly[org.apache.spark.sql.Encoder[KeyedChange]].schema
+    val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
+    runToMemory(
+      Dedup.latestPerKeyAgg(stream, Seq("key"), Seq("ts")),
       "latest_out", OutputMode.Update())
     val got = spark.table("latest_out")
-      .select($"key", $"latest.payload").as[(Long, String)].collect()
+      .select($"key", $"payload").as[(Long, String)].collect()
       .groupBy(_._1).view.mapValues(_.last._2).toMap
     assert(got == Map(1L -> "new", 2L -> "only"))
   }
@@ -87,27 +88,27 @@ class ExtraSpec extends SparkSpec {
       q.recentProgress.reverse.find(_.stateOperators.nonEmpty)
         .map(_.stateOperators.head.numRowsTotal).getOrElse(-1L)
 
-    // latestPerKeyStream over a LONG stream: 20 micro-batches x 500
-    // events but only 10 distinct keys — state must track the key domain
-    // (10 rows), not the stream length (10,000)
-    val mem = MemoryStream[StreamingDedup.KeyedChange]
-    val q = StreamingDedup.latestPerKeyStream(mem.toDS()).toDF("key", "latest")
+    // the latest-per-key aggregation over a LONG stream: 20 micro-batches
+    // x 500 events but only 10 distinct keys — state must track the key
+    // domain (10 rows), not the stream length (10,000)
+    val mem = MemoryStream[KeyedChange]
+    val q = Dedup.latestPerKeyAgg(mem.toDF(), Seq("key"), Seq("ts"))
       .writeStream.format("memory").queryName("lpk_bound")
       .outputMode("update").start()
     try {
       for (b <- 0 until 20) {
-        mem.addData((0 until 500).map(i => StreamingDedup.KeyedChange(
+        mem.addData((0 until 500).map(i => KeyedChange(
           (i % 10).toLong, new java.sql.Timestamp(b * 100000L + i), s"p$b")): _*)
         q.processAllAvailable()
       }
       assert(lastStateRows(q) == 10L, s"state rows = ${lastStateRows(q)}")
     } finally q.stop()
 
-    // dedupWithinWatermark: rows older than the 10s watermark window are
-    // EVICTED as event time advances — state is O(window), not O(history)
+    // watermarked dropDuplicates: rows older than the 10s watermark window
+    // are EVICTED as event time advances — state is O(window), not O(history)
     val mem2 = MemoryStream[(Long, java.sql.Timestamp)]
-    val dd = StreamingDedup.dedupWithinWatermark(
-      mem2.toDF().toDF("key", "ts"), "key", "ts", "10 seconds")
+    val dd = mem2.toDF().toDF("key", "ts")
+      .withWatermark("ts", "10 seconds").dropDuplicates("key", "ts")
     val q2 = dd.writeStream.format("memory").queryName("dd_bound")
       .outputMode("append").start()
     try {
@@ -127,9 +128,10 @@ class ExtraSpec extends SparkSpec {
       .select("ts", "event_type").write.parquet(s"$dir/in")
     val schema = StructType(Seq(StructField("ts", TimestampType),
       StructField("event_type", StringType)))
-    val stream = StreamingDedup.changelogStream(spark, s"$dir/in", schema)
-    StreamingDedup.runToMemory(
-      StreamingDedup.windowedCounts(stream, "ts", "event_type", "1 hour", "10 minutes"),
+    val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
+    runToMemory(
+      stream.withWatermark("ts", "10 minutes")
+        .groupBy(window($"ts", "1 hour"), $"event_type").agg(count(lit(1)).as("n")),
       "win_out", OutputMode.Append())
     // append mode emits only watermark-closed windows; the fixture spans
     // a month so nearly all windows close — counts must sum to ~all rows
@@ -259,23 +261,26 @@ class ExtraSpec extends SparkSpec {
       .select("ts", "event_type", "user_id").write.parquet(s"$dir/in")
     val schema = StructType(Seq(StructField("ts", TimestampType),
       StructField("event_type", StringType), StructField("user_id", LongType)))
-    def stream = StreamingDedup.changelogStream(spark, s"$dir/in", schema)
+    def stream = spark.readStream.schema(schema).parquet(s"$dir/in")
 
-    StreamingDedup.runToMemory(
-      StreamingDedup.slidingCounts(stream, "ts", "event_type", "1 hour", "30 minutes", "10 minutes"),
+    runToMemory(
+      stream.withWatermark("ts", "10 minutes")
+        .groupBy(window($"ts", "1 hour", "30 minutes"), $"event_type").agg(count(lit(1)).as("n")),
       "slide_out", OutputMode.Append())
     val slideTotal = spark.table("slide_out").agg(sum("n")).head.getLong(0)
     val tumbleTotal = {
-      StreamingDedup.runToMemory(
-        StreamingDedup.windowedCounts(stream, "ts", "event_type", "1 hour", "10 minutes"),
+      runToMemory(
+        stream.withWatermark("ts", "10 minutes")
+          .groupBy(window($"ts", "1 hour"), $"event_type").agg(count(lit(1)).as("n")),
         "tumble_out2", OutputMode.Append())
       spark.table("tumble_out2").agg(sum("n")).head.getLong(0)
     }
     // 1h windows sliding every 30m ⇒ each event counted ~2× vs tumbling
     assert(slideTotal > tumbleTotal * 3 / 2)
 
-    StreamingDedup.runToMemory(
-      StreamingDedup.sessionCounts(stream, "ts", "user_id", "30 minutes", "10 minutes"),
+    runToMemory(
+      stream.withWatermark("ts", "10 minutes")
+        .groupBy(session_window($"ts", "30 minutes"), $"user_id").agg(count(lit(1)).as("n")),
       "sess_out", OutputMode.Append())
     val sess = spark.table("sess_out")
     assert(sess.agg(sum("n")).head.getLong(0) > 0)
@@ -283,8 +288,8 @@ class ExtraSpec extends SparkSpec {
     assert(sess.filter($"session_window.end" < $"session_window.start").count() == 0)
 
     val dim = Seq(("purchase", 1.0), ("view", 0.1)).toDF("event_type", "weight")
-    StreamingDedup.runToMemory(
-      StreamingDedup.enrich(stream, dim, "event_type"),
+    runToMemory(
+      stream.join(broadcast(dim), Seq("event_type"), "left"),
       "enrich_out", OutputMode.Append())
     val enriched = spark.table("enrich_out")
     assert(enriched.count() > 900)
@@ -307,11 +312,11 @@ class ExtraSpec extends SparkSpec {
     val vSchema = StructType(Seq(StructField("user_id", LongType),
       StructField("v_ts", TimestampType), StructField("v_type", StringType)))
     val joined = StreamingDedup.intervalJoin(
-      StreamingDedup.changelogStream(spark, s"$dir/purchases", pSchema),
-      StreamingDedup.changelogStream(spark, s"$dir/views", vSchema),
+      spark.readStream.schema(pSchema).parquet(s"$dir/purchases"),
+      spark.readStream.schema(vSchema).parquet(s"$dir/views"),
       key = "user_id", leftTs = "p_ts", rightTs = "v_ts",
       bound = "1 HOUR", watermark = "10 minutes")
-    StreamingDedup.runToMemory(joined, "ssj_out", OutputMode.Append())
+    runToMemory(joined, "ssj_out", OutputMode.Append())
     val got = spark.table("ssj_out")
       .select($"user_id", $"p_ts", $"v_ts").collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).toString, r.getTimestamp(2).toString)).toSet
@@ -327,7 +332,7 @@ class ExtraSpec extends SparkSpec {
     // send runs on executor tasks (closure is serialized — can't collect
     // through it); each epoch's SinkResults land under the results path.
     val q = StreamingDedup.egressStreamToPath(
-        StreamingDedup.changelogStream(spark, s"$dir/in", schema),
+        spark.readStream.schema(schema).parquet(s"$dir/in"),
         "payload", batchSize = 10,
         (_, _) => (200, "ok"),
         s"$dir/results", (_, _) => ())
@@ -345,8 +350,8 @@ class ExtraSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp)]
-    val dd = StreamingDedup.dedupKeysWithinWatermark(
-      mem.toDF().toDF("key", "ts"), Seq("key"), "ts", "10 minutes")
+    val dd = mem.toDF().toDF("key", "ts")
+      .withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark("key")
     val q = dd.writeStream.format("memory").queryName("ddw_out")
       .outputMode("append").start()
     try {
@@ -424,7 +429,7 @@ class ExtraSpec extends SparkSpec {
     val schema = StructType(Seq(StructField("payload", StringType)))
     val epochs = new java.util.concurrent.CopyOnWriteArrayList[(Long, graft.sink.EgressStats)]()
     val q = StreamingDedup.egressStreamToPath(
-        StreamingDedup.changelogStream(spark, s"$dir/in", schema),
+        spark.readStream.schema(schema).parquet(s"$dir/in"),
         "payload", batchSize = 10,
         (_, _) => (200, "ok"),
         s"$dir/results",
@@ -468,7 +473,7 @@ class ExtraSpec extends SparkSpec {
     val sentKeys = EgressReplayCapture.keys
     def run(ckpt: String): Unit = {
       val deduped = StreamingDedup.incrementalDedupStream(
-        StreamingDedup.changelogStream(spark, s"$dir/in", inSchema),
+        spark.readStream.schema(inSchema).parquet(s"$dir/in"),
         "fp", "ts", "10 minutes", history)
         .select(to_json(struct($"doc_id", $"fp")).as("payload"))
       val q = StreamingDedup.egressStreamToPath(deduped, "payload",
@@ -859,7 +864,11 @@ class ExtraSpec extends SparkSpec {
       FunnelEvent(2L, ts("2024-01-01 09:00:00"), "view"),
       // u3's click arrives BEFORE its view ever does (next batch): the
       // documented divergence — bounded state can't resurrect it
-      FunnelEvent(3L, ts("2024-01-01 08:00:00"), "click"))
+      FunnelEvent(3L, ts("2024-01-01 08:00:00"), "click"),
+      // u4's view and click fall 100 µs apart inside one millisecond:
+      // the batch fold orders them by exact micros
+      FunnelEvent(4L, ts("2024-01-01 10:00:00.0001"), "view"),
+      FunnelEvent(4L, ts("2024-01-01 10:00:00.0002"), "click"))
     val batch2 = Seq(
       FunnelEvent(1L, ts("2024-01-01 12:00:00"), "purchase"),
       FunnelEvent(2L, ts("2024-01-01 09:30:00"), "click"),
@@ -886,6 +895,9 @@ class ExtraSpec extends SparkSpec {
       assert(latest(2L) == batchGot(2L))
       assert(latest(2L) == Seq(Some(ts("2024-01-01 09:00:00")),
         Some(ts("2024-01-01 09:30:00")), None))
+      assert(latest(4L) == batchGot(4L))
+      assert(latest(4L) == Seq(Some(ts("2024-01-01 10:00:00.0001")),
+        Some(ts("2024-01-01 10:00:00.0002")), None))
       // u3: batch fold sees view@07 then click@08 -> both steps; the
       // stream processed the click in a batch BEFORE its prerequisite
       // existed, so only the late view lands (documented divergence)
@@ -1175,4 +1187,9 @@ class ExtraSpec extends SparkSpec {
   * copy of any spec-local buffer). */
 object EgressReplayCapture {
   val keys = new java.util.concurrent.CopyOnWriteArrayList[String]()
+}
+
+object ExtraSpec {
+  /** Row type of the streaming latest-per-key specs. */
+  case class KeyedChange(key: Long, ts: java.sql.Timestamp, payload: String)
 }

@@ -16,6 +16,16 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** Runs a streaming query on a memory sink named `name` until all
+    * available input is processed. */
+  protected def runToMemory(df: org.apache.spark.sql.DataFrame, name: String,
+                            mode: org.apache.spark.sql.streaming.OutputMode): Unit = {
+    val q = df.writeStream.format("memory").queryName(name)
+      .outputMode(mode).start()
+    q.processAllAvailable()
+    q.stop()
+  }
+
   /** Runs `body` and returns its value with the number of Spark jobs it
     * launched and the executed plans of its queries. A marker job drains
     * the listener bus: both listeners sit on the shared queue, so once the
